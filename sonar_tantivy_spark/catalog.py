@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import itertools
 import math
+import threading
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -37,13 +38,43 @@ DEFAULT_QUERY_LIMIT = 10  # handles.rs:143 unwrap_or(10)
 MULTI_QUERY_LIMIT = 100  # index.rs:141 hardcoded per-index limit
 
 
+class _SnapshotSlot:
+    """The latest-snapshot Searcher of one index name, shared by every
+    Index the catalog hands out for it — the reference's one reader per
+    IndexHandle, reloaded only on commit (index.rs:18-21, 214-225)."""
+
+    def __init__(self):
+        self._lock = threading.Lock()
+        # (schema json, latest Searcher)
+        self._entry: tuple[str, Searcher] | None = None
+
+    def searcher(self, index: "Index", manifest: dict, key: tuple) -> Searcher:
+        """The shared Searcher when its snapshot key and schema match,
+        else a new one for ``manifest``, published as the latest."""
+        with self._lock:
+            e = self._entry
+            if e is not None and e[1]._cache_key == key \
+                    and e[0] == index._schema_json:
+                return e[1]
+            s = Searcher(index.spark, index.schema, index.storage, manifest)
+            s._cache_key = key
+            self._entry = (index._schema_json, s)
+            return s
+
+
 class Index:
-    def __init__(self, spark: SparkSession, name: str, storage):
+    def __init__(self, spark: SparkSession, name: str, storage,
+                 slot: _SnapshotSlot | None = None):
         self.spark = spark
         self.name = name
         self.storage = storage
-        self.schema = IndexSchema.from_json(storage.schema_json())
+        self._schema_json = storage.schema_json()
+        self.schema = IndexSchema.from_json(self._schema_json)
         self._batch_counter = 0
+        # the snapshot this handle last read; ``slot`` shares Searchers
+        # between the handles of one catalog index
+        self._searcher: Searcher | None = None
+        self._slot = slot if slot is not None else _SnapshotSlot()
 
     # ------------------------------------------------------------- ingest
     def add(self, docs: list[dict]) -> None:
@@ -137,16 +168,17 @@ class Index:
         """Reused until the manifest changes — the analog of
         ReloadPolicy::OnCommit reader caching (index.rs:214-225).  The
         cache key is the full segment list (not just the opstamp):
-        compaction swaps segments without moving the opstamp."""
+        compaction swaps segments without moving the opstamp.  On a key
+        change the handle adopts its catalog slot's Searcher for the new
+        snapshot (built and published there on a miss), so every handle
+        on an unchanged manifest shares one reader and its memos."""
         m = self.storage.manifest()
         key = (m["opstamp"], m.get("del_opstamp", 0),
                tuple(s["segment_id"] for s in m["segments"]))
-        cached = getattr(self, "_searcher", None)
-        if cached is not None and getattr(cached, "_cache_key", None) == key:
-            return cached
-        self._searcher = Searcher(self.spark, self.schema, self.storage)
-        self._searcher._cache_key = key
-        return self._searcher
+        cached = self._searcher
+        if cached is None or cached._cache_key != key:
+            cached = self._searcher = self._slot.searcher(self, m, key)
+        return cached
 
     def query(
         self,
@@ -1615,6 +1647,20 @@ class IndexCatalog:
         self.spark = spark
         self.base_path = base_path
         self._ram: dict[str, MemStorage] = {}
+        # one latest-snapshot reader per resolved index name
+        self._slots: dict[str, _SnapshotSlot] = {}
+        self._slots_lock = threading.Lock()
+
+    def _slot(self, name: str) -> _SnapshotSlot:
+        with self._slots_lock:
+            return self._slots.setdefault(name, _SnapshotSlot())
+
+    def _drop_slot(self, name: str) -> None:
+        """Forget ``name``'s reader: a re-created index (possibly with
+        another schema) must never adopt it.  Handles opened before keep
+        the old slot, so they cannot publish into the new one."""
+        with self._slots_lock:
+            self._slots.pop(name, None)
 
     def _storage(self, name: str):
         if name in self._ram:
@@ -1636,7 +1682,8 @@ class IndexCatalog:
         storage.create(schema_json)
         if ram:
             self._ram[name] = storage
-        return Index(self.spark, name, storage)
+        self._drop_slot(name)
+        return Index(self.spark, name, storage, self._slot(name))
 
     # ---------------------------------------------------------- aliases
     def _aliases_path(self) -> str:
@@ -1701,7 +1748,7 @@ class IndexCatalog:
         storage = self._storage(name)
         if not storage.exists():
             raise KeyError(f"no such index {name!r}")
-        return Index(self.spark, name, storage)
+        return Index(self.spark, name, storage, self._slot(name))
 
     def open_or_create(self, name: str, schema: str | list, ram: bool = False) -> Index:
         if self.has(name):
@@ -1711,6 +1758,7 @@ class IndexCatalog:
     def delete(self, name: str) -> None:
         self._storage(name).delete()
         self._ram.pop(name, None)
+        self._drop_slot(name)
         # ES rule: deleting an index drops the aliases that point at it
         a = self.aliases()
         live = {k: v for k, v in a.items() if v != name}

@@ -16,10 +16,33 @@ test suite asserts this.
 
 from __future__ import annotations
 
+import contextlib
 import math
 import os
 
 from pyspark.sql import functions as F
+
+
+@contextlib.contextmanager
+def _surface_all(futures: list):
+    """On exit, wait on every future in ``futures`` — also when the
+    body raised — and raise if anything failed: the body's error first,
+    else the first future's, with every other error attached as a note.
+    A failed main-thread write then never hides a sibling's failure."""
+    errors: list[BaseException] = []
+    try:
+        yield
+    except BaseException as e:  # noqa: BLE001 - re-raised below
+        errors.append(e)
+    for f in futures:
+        e = f.exception()
+        if e is not None:
+            errors.append(e)
+    if errors:
+        head = errors[0]
+        for e in errors[1:]:
+            head.add_note(f"also failed: {type(e).__name__}: {e}")
+        raise head
 
 
 def compact_to(index, target_segments: int = 1) -> list[dict]:
@@ -96,15 +119,16 @@ def compact_to(index, target_segments: int = 1) -> list[dict]:
     # the WRITTEN postings) stays ordered after the postings write.
     from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fut_docs = pool.submit(
+    side: list = []
+    with ThreadPoolExecutor(max_workers=2) as pool, _surface_all(side):
+        side.append(pool.submit(
             storage.write_table, docs.sortWithinPartitions("docid"),
-            epoch, "docs", docs_parts)
-        fut_doclens = pool.submit(
+            epoch, "docs", docs_parts))
+        side.append(pool.submit(
             storage.write_table,
             rebased("doclens").sortWithinPartitions(
                 "segment_id", "field", "docid"),
-            epoch, "doclens")
+            epoch, "doclens"))
         # docid in the range key is the skew guard (see compact())
         # one range partition per core: with segment_id leading the range
         # keys, partitions are contiguous per segment, so each segment gets
@@ -144,8 +168,6 @@ def compact_to(index, target_segments: int = 1) -> list[dict]:
                 )
             finally:
                 merged_td.unpersist()
-        fut_doclens.result()
-        fut_docs.result()
 
     metas = []
     for ci, chunk in enumerate(chunks):
@@ -412,14 +434,15 @@ def compact(index, segment_ids: list[str] | None = None) -> dict:
     # cores; only the termdict (reads the written postings) is ordered
     from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fut_docs = pool.submit(
+    side: list = []
+    with ThreadPoolExecutor(max_workers=2) as pool, _surface_all(side):
+        side.append(pool.submit(
             storage.write_table, merged_docs.sortWithinPartitions("docid"),
-            epoch, "docs", docs_parts)
-        fut_doclens = pool.submit(
+            epoch, "docs", docs_parts))
+        side.append(pool.submit(
             storage.write_table,
             rebased("doclens").sortWithinPartitions("field", "docid"),
-            epoch, "doclens")
+            epoch, "doclens"))
         # docid in the range key is the skew guard: RangePartitioner may
         # then place boundaries INSIDE a hot term (stop words have df ~
         # num_docs), splitting its postings across tasks instead of
@@ -453,8 +476,6 @@ def compact(index, segment_ids: list[str] | None = None) -> dict:
                 )
             finally:
                 merged_td.unpersist()
-        fut_doclens.result()
-        fut_docs.result()
 
     field_stats = _merge_field_stats(run)
 

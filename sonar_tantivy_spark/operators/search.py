@@ -13,7 +13,8 @@ Here every query compiles to a declarative Spark plan:
               aggregation shuffle (skew guard).  General shapes: must =
               inner joins on (segment, docid); must_not = left_anti;
               should = union + groupBy-sum (score = Σ per-clause scores
-              ⟨tantivy BooleanWeight⟩, optional shoulds added to must rows)
+              in clause order ⟨tantivy BooleanWeight⟩, optional shoulds
+              added to must rows)
   Phrase    → per-term postings joined on (segment, docid), adjacency via
               chained array_intersect(transform(prev, p → p+1), next);
               tf = phrase frequency, idf = Σ term idfs ⟨tantivy PhraseWeight⟩
@@ -37,7 +38,8 @@ termdict lookup job and folded into the score expression as a literal.
 from __future__ import annotations
 
 import math
-
+import threading
+from collections import OrderedDict
 from typing import Any
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -72,16 +74,88 @@ _SKEW_SPREAD = 8
 _SKEW_MIN_SAVED_BYTES = 6 << 20
 _PHRASE_ROW_BYTES = 64  # (segment, docid, positions[]) exchange row
 _BOOL_ROW_BYTES = 16    # (segment, docid, score) exchange row
+# Entries per snapshot memo (per-term dfs, per-segment max-tf maps,
+# any-field dfs, resolved ids).  A catalog keeps one Searcher per index
+# alive for as long as its snapshot is current, so the memo is an LRU
+# bounded here rather than growing with query history.
+_MEMO_CAP = 4096
+_UNSET = object()
+
+
+class _Memo:
+    """Lock-guarded LRU of per-snapshot lookups, shared by every
+    request reading one Searcher.  Callers build each value completely
+    and publish it with ``put_many``: a concurrent reader sees either
+    no entry or a whole one, never a half-filled map."""
+
+    def __init__(self):
+        self.cap = _MEMO_CAP
+        self._d: OrderedDict = OrderedDict()
+        self._lock = threading.Lock()
+
+    def __len__(self) -> int:
+        return len(self._d)
+
+    def get_many(self, keys: list) -> dict:
+        with self._lock:
+            out = {}
+            for k in keys:
+                if k in self._d:
+                    self._d.move_to_end(k)
+                    out[k] = self._d[k]
+            return out
+
+    def put_many(self, items: dict) -> None:
+        with self._lock:
+            for k, v in items.items():
+                self._d[k] = v
+                self._d.move_to_end(k)
+            while len(self._d) > self.cap:
+                self._d.popitem(last=False)
+
+
+def _clause_sum(rows: DataFrame, *aggs: Column) -> DataFrame:
+    """Per (segment_id, docid), sum the clause scores of ``rows``
+    (segment_id, docid, score, __ci) IN CLAUSE ORDER ``__ci`` — a left
+    fold from 0.0, the same order the oracle adds in.  Float addition
+    is not associative, so a plain ``F.sum`` follows Spark's row
+    arrival order and can leave two docs with equal clause scores
+    1 ulp apart, breaking their docid tie-break.  ``aggs`` ride the
+    same aggregation."""
+    return (rows.groupBy("segment_id", "docid")
+            .agg(F.array_sort(F.collect_list(F.struct("__ci", "score")))
+                 .alias("__cs"), *aggs)
+            .withColumn("score", F.aggregate(
+                "__cs", F.lit(0.0), lambda acc, x: acc + x["score"]))
+            .drop("__cs"))
+
+
+def _union_clauses(frames: list[DataFrame]) -> DataFrame:
+    """Union clause candidate frames, each row tagged with its clause
+    index ``__ci`` for _clause_sum."""
+    tagged = [c.select("segment_id", "docid", "score",
+                       F.lit(i).alias("__ci"))
+              for i, c in enumerate(frames)]
+    out = tagged[0]
+    for c in tagged[1:]:
+        out = out.unionByName(c)
+    return out
 
 
 class Searcher:
-    """One index snapshot: manifest segments + lazily loaded tables."""
+    """One index snapshot: manifest segments + lazily loaded tables.
 
-    def __init__(self, spark: SparkSession, schema: IndexSchema, storage):
+    Safe to share between threads: an IndexCatalog hands the same
+    Searcher to every request on an unchanged manifest.  Memoized
+    lookups live in one bounded ``_Memo``; per-request output
+    (``last_prune``) is per thread."""
+
+    def __init__(self, spark: SparkSession, schema: IndexSchema, storage,
+                 manifest: dict | None = None):
         self.spark = spark
         self.schema = schema
         self.storage = storage
-        self.manifest = storage.manifest()
+        self.manifest = storage.manifest() if manifest is None else manifest
         self.segments = self.manifest["segments"]
         # docid bases follow manifest order — tantivy's (segment_ord, docid)
         self.bases: dict[str, int] = {}
@@ -95,8 +169,42 @@ class Searcher:
         # (catalog.py delete_docs/delete_term); rows for retired
         # segment_ids are inert (filtered against live bases)
         self.tombstone_meta = self.manifest.get("tombstones", [])
-        self._tomb_df: DataFrame | None = None
-        self._tomb_loaded = False
+        self._tomb = _UNSET
+        self._seg_by_id = {s["segment_id"]: s for s in self.segments}
+        self._memo = _Memo()
+        self._prune_local = threading.local()
+        # restricted searchers (_restricted) only
+        self._parent: Searcher | None = None
+        self._block_pred: Column | None = None
+
+    @property
+    def last_prune(self) -> dict:
+        """Skip stats of this thread's last top_k_pruned /
+        top_k_sorted_pruned call (requests sharing the Searcher each
+        read their own)."""
+        try:
+            return self._prune_local.stats
+        except AttributeError:
+            raise AttributeError("last_prune") from None
+
+    @last_prune.setter
+    def last_prune(self, stats: dict) -> None:
+        self._prune_local.stats = stats
+
+    def _memoized(self, kind: str, keys, compute) -> dict:
+        """key → value for ``keys``: hits from the snapshot memo, the
+        misses from ONE ``compute(missing) -> {key: value}`` call,
+        published whole.  Callers on a restricted searcher delegate to
+        the parent first, so every entry is a whole-snapshot value."""
+        keys = list(keys)
+        got = self._memo.get_many([(kind, k) for k in keys])
+        out = {k: got[(kind, k)] for k in keys if (kind, k) in got}
+        missing = [k for k in keys if k not in out]
+        if missing:
+            fresh = compute(missing)
+            self._memo.put_many({(kind, k): v for k, v in fresh.items()})
+            out.update(fresh)
+        return out
 
     # ---------------------------------------------------------------- stats
     def avgdl(self, field: str) -> float:
@@ -109,7 +217,7 @@ class Searcher:
         if not self.segments:
             return None
         if name not in self._tables:
-            parent = getattr(self, "_parent", None)
+            parent = self._parent
             if parent is not None:
                 # restricted searcher: reuse the parent's DataFrame (its
                 # FileIndex listing is already built — re-reading the
@@ -126,9 +234,8 @@ class Searcher:
             # block-granular WAND predicate (set by top_k_pruned on a
             # restricted searcher): (segment_id, docid-range) disjuncts
             # that reach the parquet reader as row-group prunable filters
-            pred = getattr(self, "_block_pred", None)
-            if pred is not None:
-                df = df.filter(pred)
+            if self._block_pred is not None:
+                df = df.filter(self._block_pred)
         return df
 
     def _empty(self) -> DataFrame:
@@ -146,26 +253,22 @@ class Searcher:
         scan summed across segments; memoized per searcher snapshot."""
         if not pairs or not self.segments:
             return {}
-        cache = getattr(self, "_df_cache", None)
-        if cache is None:
-            cache = self._df_cache = {}
-        missing = {p for p in pairs if p not in cache}
-        if not missing:
-            return {p: cache[p] for p in pairs}
-        pairs = missing
-        td = self._table("termdict")
-        fields = sorted({f for f, _ in pairs})
-        terms = sorted({t for _, t in pairs})
-        rows = (
-            td.filter(F.col("field").isin(fields) & F.col("term").isin(terms))
-            .groupBy("field", "term")
-            .agg(F.sum("df").alias("df"))
-            .collect()
-        )
-        out = {(r["field"], r["term"]): int(r["df"]) for r in rows}
-        for p in pairs:
-            cache[p] = out.get(p, 0)
-        return dict(cache)
+        if self._parent is not None:
+            return self._parent.term_dfs(pairs)
+
+        def compute(missing: list) -> dict:
+            td = self._table("termdict")
+            rows = (
+                td.filter(F.col("field").isin(sorted({f for f, _ in missing}))
+                          & F.col("term").isin(sorted({t for _, t in missing})))
+                .groupBy("field", "term")
+                .agg(F.sum("df").alias("df"))
+                .collect()
+            )
+            out = {(r["field"], r["term"]): int(r["df"]) for r in rows}
+            return {p: out.get(p, 0) for p in missing}
+
+        return self._memoized("df", pairs, compute)
 
     # ------------------------------------------------------------- scoring
     def _score_col(self, field: str, idf: float, tf_col: Column) -> Column:
@@ -234,10 +337,12 @@ class Searcher:
     def _tombstones(self) -> DataFrame | None:
         """(segment_id, docid) rows deleted since the last full
         compaction, filtered to live segments; None when the index has
-        no deletes (the common case — zero per-query overhead)."""
-        if self._tomb_loaded:
-            return self._tomb_df
-        self._tomb_loaded = True
+        no deletes (the common case — zero per-query overhead).  Built
+        locally and published in one assignment, so a concurrent request
+        never reads the ledger as loaded-but-empty."""
+        if self._tomb is not _UNSET:
+            return self._tomb
+        df = None
         if self.tombstone_meta:
             parts = [
                 self.storage.read_epoch_table(self.spark, e["epoch"],
@@ -248,9 +353,9 @@ class Searcher:
             df = parts[0]
             for p in parts[1:]:
                 df = df.unionByName(p)
-            self._tomb_df = df.filter(
-                F.col("segment_id").isin(list(self.bases)))
-        return self._tomb_df
+            df = df.filter(F.col("segment_id").isin(list(self.bases)))
+        self._tomb = df
+        return df
 
     def _without_tombstones(self, cand: DataFrame) -> DataFrame:
         """Anti-join the delete set — tantivy's alive-bitset filter at
@@ -999,6 +1104,15 @@ class Searcher:
                 rows.append((sid, local))
         return rows
 
+    def _ids_rows_memo(self, values: list[int]) -> list[tuple[str, int]]:
+        """_ids_rows over the whole snapshot, memoized per id list (the
+        ids absence proof evaluates it once per pruning unit)."""
+        if self._parent is not None:
+            return self._parent._ids_rows_memo(values)
+        key = tuple(values)
+        return self._memoized(
+            "ids", [key], lambda _: {key: self._ids_rows(values)})[key]
+
     def _cand_ids(self, node: A.IdsQ) -> DataFrame | None:
         """ES ``ids`` — constant score 1.0 by direct docid lookup.
         The ONLY zero-scan query node: the candidate set IS a literal
@@ -1132,6 +1246,29 @@ class Searcher:
         return pinned.unionByName(organic.select(
             "segment_id", "docid", "score"))
 
+    def _any_field_dfs(self, fnames: list[str],
+                       terms: list[str]) -> dict[str, int]:
+        """Exact any-field df: distinct docs holding the term in >= 1
+        of ``fnames`` (the per-field sum is only an upper bound — a doc
+        holding the term in two fields counts once).  One countDistinct
+        job for the misses, memoized per snapshot."""
+        if self._parent is not None:
+            return self._parent._any_field_dfs(fnames, terms)
+        fkey = tuple(sorted(fnames))
+
+        def compute(missing: list) -> dict:
+            rows = (self._table("postings")
+                    .filter(F.col("field").isin(fnames)
+                            & F.col("term").isin([t for _, t in missing]))
+                    .groupBy("term")
+                    .agg(F.countDistinct("segment_id", "docid")
+                         .alias("df")).collect())
+            got = {r["term"]: int(r["df"]) for r in rows}
+            return {k: got.get(k[1], 0) for k in missing}
+
+        got = self._memoized("cfdf", [(fkey, t) for t in terms], compute)
+        return {t: got[(fkey, t)] for t in terms}
+
     def _cand_combined_fields(self, node: "A.CombinedFieldsQ",
                               dfs: dict) -> DataFrame | None:
         """combined_fields (CombinedFieldsQ docstring — BM25F with
@@ -1172,24 +1309,7 @@ class Searcher:
                 w = w.when(F.col("field") == f, F.lit(wt))
             return w.otherwise(F.lit(0.0))
 
-        # exact any-field df: distinct docs holding the term in >= 1
-        # queried field (memoized; the per-field sum is only an upper
-        # bound — a doc holding the term in two fields counts once)
-        cache = getattr(self, "_cf_df_cache", None)
-        if cache is None:
-            cache = self._cf_df_cache = {}
-        fkey = tuple(sorted(fnames))
-        missing = [t for t in live if (fkey, t) not in cache]
-        if missing:
-            rows = (p.filter(F.col("field").isin(fnames)
-                             & F.col("term").isin(missing))
-                    .groupBy("term")
-                    .agg(F.countDistinct("segment_id", "docid")
-                         .alias("df")).collect())
-            got = {r["term"]: int(r["df"]) for r in rows}
-            for t in missing:
-                cache[(fkey, t)] = got.get(t, 0)
-        df_any = {t: cache[(fkey, t)] for t in live}
+        df_any = self._any_field_dfs(fnames, live)
 
         scan = p.filter(F.col("field").isin(fnames)
                         & F.col("term").isin(live))
@@ -1257,16 +1377,12 @@ class Searcher:
             return None
         if len(subs) == 1:
             return subs[0]
-        u = subs[0]
-        for s in subs[1:]:
-            u = u.unionByName(s)
         tie = float(node.tie_breaker)
-        agg = u.groupBy("segment_id", "docid").agg(
-            F.max("score").alias("__mx"), F.sum("score").alias("__sm"))
+        agg = _clause_sum(_union_clauses(subs), F.max("score").alias("__mx"))
         return agg.select(
             "segment_id", "docid",
             (F.col("__mx")
-             + F.lit(tie) * (F.col("__sm") - F.col("__mx"))).alias("score"))
+             + F.lit(tie) * (F.col("score") - F.col("__mx"))).alias("score"))
 
     def _cand_phrase_prefix(self, node: A.PhrasePrefixQ,
                             dfs: dict) -> DataFrame | None:
@@ -1428,12 +1544,14 @@ class Searcher:
         idf_pairs: list[Column] = []
         must_flag_pairs: list[Column] = []
         bb_pairs: list[Column] = []
-        for f, t in pairs:
+        ci_pairs: list[Column] = []
+        for i, (f, t) in enumerate(pairs):
             idf = bm25.idf(dfs[(f, t)], self.num_docs)
             idf_pairs.extend([F.lit(f + "\x00" + t),
                               F.lit(idf * (bm25.K1 + 1.0))])
             must_flag_pairs.extend(
                 [F.lit(f + "\x00" + t), F.lit(1 if (f, t) in must_pairs else 0)])
+            ci_pairs.extend([F.lit(f + "\x00" + t), F.lit(i)])
         for f in sorted({f for f, _ in pairs}):
             bb_pairs.extend([F.lit(f), F.lit(bm25.B / self.avgdl(f))])
         idf_k = F.element_at(F.create_map(*idf_pairs), key)
@@ -1446,6 +1564,7 @@ class Searcher:
             "segment_id", "docid",
             (idf_k * tf / denom).alias("score"),
             is_must.alias("__m"),
+            F.element_at(F.create_map(*ci_pairs), key).alias("__ci"),
         )
         # skew guard: a rare must-term bounds the result set, so when the
         # df spread is large (e.g. needle AND the/role:tool), semi-join
@@ -1467,11 +1586,8 @@ class Searcher:
                 scored = scored.join(F.broadcast(rare_keys),
                                      on=["segment_id", "docid"],
                                      how="left_semi")
-        out = (
-            scored.groupBy("segment_id", "docid")
-            .agg(F.sum("score").alias("score"), F.sum("__m").alias("__nm"),
-                 F.count("*").alias("__nt"))
-        )
+        out = _clause_sum(scored, F.sum("__m").alias("__nm"),
+                          F.count("*").alias("__nt"))
         if must_pairs:
             out = out.filter(F.col("__nm") == len(must_pairs))
         if msm > 0:
@@ -1558,13 +1674,10 @@ class Searcher:
         elif shoulds:
             out = shoulds[0]
             if len(shoulds) > 1:  # single clause is already (seg, docid)-unique
-                for s in shoulds[1:]:
-                    out = out.unionByName(s)
                 # each clause's candidate set is (seg, docid)-unique, so
                 # the row count IS the matched-should count
-                out = out.groupBy("segment_id", "docid").agg(
-                    F.sum("score").alias("score"),
-                    F.count("*").alias("__smc"))
+                out = _clause_sum(_union_clauses(shoulds),
+                                  F.count("*").alias("__smc"))
                 if msm > 0:
                     out = out.filter(F.col("__smc") >= msm)
                 out = out.drop("__smc")
@@ -1761,8 +1874,9 @@ class Searcher:
 
     def _restricted(self, keep: set[str]) -> "Searcher":
         """A searcher over a SUBSET of segments that keeps GLOBAL
-        statistics (num_docs, avgdl, and the already-resolved per-term
-        dfs), so scores match the full-index execution exactly."""
+        statistics (num_docs, avgdl, and every memoized per-term
+        lookup, which it reads through to the parent), so scores match
+        the full-index execution exactly."""
         sub = Searcher.__new__(Searcher)
         sub.spark = self.spark
         sub.schema = self.schema
@@ -1772,11 +1886,13 @@ class Searcher:
         sub.bases = {sid: b for sid, b in self.bases.items() if sid in keep}
         sub.num_docs = self.num_docs
         sub.tombstone_meta = self.tombstone_meta
-        sub._tomb_df = None
-        sub._tomb_loaded = False
+        sub._tomb = _UNSET
+        sub._seg_by_id = {s["segment_id"]: s for s in sub.segments}
+        sub._memo = self._memo
+        sub._prune_local = threading.local()
         sub._tables = {}
         sub._parent = self  # reuse loaded tables (see _table)
-        sub._df_cache = dict(getattr(self, "_df_cache", {}))
+        sub._block_pred = None
         full, n = self.segments, self.num_docs
         sub.avgdl = lambda field, _s=full, _n=n: (
             sum(x["field_stats"].get(field, {}).get("total_tokens", 0)
@@ -1784,21 +1900,19 @@ class Searcher:
         )
         return sub
 
-    def seg_max_tfs(self, pairs: set[tuple[str, str]]) -> dict:
-        """(field, term) → {segment_id: max_tf}; one pushdown-filtered
-        termdict scan for the misses, memoized per searcher snapshot (a
-        repeated query never re-reads the termdict).  The same scan also
-        fills the per-BLOCK max-tf cache (termdict ``block_mtf`` column,
-        written since the block-granular WAND build) consumed by
-        seg_block_mtfs — one lookup job serves both granularities."""
-        cache = getattr(self, "_mtf_cache", None)
-        if cache is None:
-            cache = self._mtf_cache = {}
-        bcache = getattr(self, "_bmtf_cache", None)
-        if bcache is None:
-            bcache = self._bmtf_cache = {}
-        missing = {p for p in pairs if p not in cache}
-        if missing and self.segments:
+    def _max_tf_maps(self, pairs) -> dict:
+        """(field, term) → ({segment_id: max_tf}, {segment_id: {block:
+        max_tf}}); one pushdown-filtered termdict scan for the misses,
+        memoized per searcher snapshot (a repeated query never re-reads
+        the termdict).  The block maps come from the termdict
+        ``block_mtf`` column (written since the block-granular WAND
+        build), so one lookup job serves both granularities."""
+        if self._parent is not None:
+            return self._parent._max_tf_maps(pairs)
+        if not self.segments:
+            return {p: ({}, {}) for p in pairs}
+
+        def compute(missing: list) -> dict:
             td = self._table("termdict")
             has_blocks = "block_mtf" in td.columns
             cols = ["segment_id", "field", "term", "max_tf"]
@@ -1809,25 +1923,27 @@ class Searcher:
                           & F.col("term").isin(sorted({t for _, t in missing})))
                 .select(*cols).collect()
             )
-            for p in missing:
-                cache[p] = {}
-                bcache[p] = {}
+            out = {p: ({}, {}) for p in missing}
             for r in rows:
-                p = (r["field"], r["term"])
-                if p in missing:
-                    cache[p][r["segment_id"]] = int(r["max_tf"])
-                    if has_blocks and r["block_mtf"] is not None:
-                        bcache[p][r["segment_id"]] = {
-                            int(b): int(m) for b, m in r["block_mtf"].items()}
-        return {p: cache.get(p, {}) for p in pairs}
+                maps = out.get((r["field"], r["term"]))
+                if maps is None:
+                    continue
+                maps[0][r["segment_id"]] = int(r["max_tf"])
+                if has_blocks and r["block_mtf"] is not None:
+                    maps[1][r["segment_id"]] = {
+                        int(b): int(m) for b, m in r["block_mtf"].items()}
+            return out
+
+        return self._memoized("mtf", pairs, compute)
+
+    def seg_max_tfs(self, pairs: set[tuple[str, str]]) -> dict:
+        """(field, term) → {segment_id: max_tf} (see _max_tf_maps)."""
+        return {p: m[0] for p, m in self._max_tf_maps(pairs).items()}
 
     def seg_block_mtfs(self, pairs: set[tuple[str, str]]) -> dict:
-        """(field, term) → {segment_id: {block: max_tf}} from the cache
-        warmed by seg_max_tfs (empty maps when the index predates the
-        block-granular termdict)."""
-        self.seg_max_tfs(pairs)
-        bcache = getattr(self, "_bmtf_cache", {})
-        return {p: bcache.get(p, {}) for p in pairs}
+        """(field, term) → {segment_id: {block: max_tf}} (empty maps
+        when the index predates the block-granular termdict)."""
+        return {p: m[1] for p, m in self._max_tf_maps(pairs).items()}
 
     def _segment_bounds(self, node: A.Node) -> dict[str, float] | None:
         """Per-segment upper bound of ``node``'s score, or None when the
@@ -1854,11 +1970,7 @@ class Searcher:
         disjoint with the segment's [min, max] for the field (stats
         written at build, build.py), else the constant-score 1.0.
         Conservative: any parse/format doubt returns 1.0."""
-        by_id = getattr(self, "_seg_by_id", None)
-        if by_id is None:
-            by_id = self._seg_by_id = {
-                s["segment_id"]: s for s in self.segments}
-        meta = by_id.get(sid)
+        meta = self._seg_by_id.get(sid)
         st = meta["field_stats"].get(node.field) if meta else None
         if not st or "min" not in st:
             return 1.0
@@ -2058,21 +2170,11 @@ class Searcher:
             # docids [b*block_docs, (b+1)*block_docs), so the proof
             # stays exact at block granularity too.
 
-            memo = getattr(self, "_ids_memo", None)
-            if memo is None:
-                memo = self._ids_memo = {}
-            key = tuple(node.values)
-            rows = memo.get(key)
-            if rows is None:
-                rows = memo[key] = self._ids_rows(node.values)
+            rows = self._ids_rows_memo(node.values)
             seg, blk = sid if isinstance(sid, tuple) else (sid, None)
             if blk is None:
                 return 1.0 if any(s == seg for s, _ in rows) else 0.0
-            by_id = getattr(self, "_seg_by_id", None)
-            if by_id is None:
-                by_id = self._seg_by_id = {
-                    s["segment_id"]: s for s in self.segments}
-            bd = (by_id.get(seg) or {}).get("block_docs")
+            bd = (self._seg_by_id.get(seg) or {}).get("block_docs")
             if not bd:
                 return 1.0 if any(s == seg for s, _ in rows) else 0.0
             return 1.0 if any(s == seg and d // bd == blk
@@ -2195,10 +2297,7 @@ class Searcher:
         (reference: searcher.search behind
         /root/reference/src-rust/index.rs:260) at the docid-range
         granularity parquet row-group stats can actually prune."""
-        by_id = getattr(self, "_seg_by_id", None)
-        if by_id is None:
-            by_id = self._seg_by_id = {
-                s["segment_id"]: s for s in self.segments}
+        by_id = self._seg_by_id
         cover = self._term_cover(node)
         pairs = collect_terms(node)
         bmtf = self.seg_block_mtfs(pairs) if cover else {}
@@ -2501,11 +2600,7 @@ class Searcher:
         zone and shift the bound by the offset whenever the two differ
         (e.g. session UTC on a non-UTC host), pruning segments that hold
         true top-k rows.  None = no stats / no resolvable tz → unprunable."""
-        by_id = getattr(self, "_seg_by_id", None)
-        if by_id is None:
-            by_id = self._seg_by_id = {
-                s["segment_id"]: s for s in self.segments}
-        meta = by_id.get(sid)
+        meta = self._seg_by_id.get(sid)
         st = meta["field_stats"].get(sort_by) if meta else None
         if not st or "max" not in st:
             return None

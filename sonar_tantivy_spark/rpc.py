@@ -32,9 +32,19 @@ from __future__ import annotations
 
 import json
 import sys
+from datetime import date
 from typing import Any, Callable
 
 from sonar_tantivy_spark.catalog import IndexCatalog
+
+
+def _json_default(o: Any) -> str:
+    """``json.dumps`` hook: ``date`` / ``datetime`` values (stored date
+    fields come back from Spark as datetimes) encode as ISO strings."""
+    if isinstance(o, date):
+        return o.isoformat()
+    raise TypeError(
+        f"Object of type {type(o).__name__} is not JSON serializable")
 
 
 class Rpc:
@@ -70,7 +80,7 @@ class Rpc:
         except Exception as e:  # any handler error → err response
             out = {"id": -rid, "msg": None,
                    "err": str(e).strip("'\"")}
-        return json.dumps(out, separators=(",", ":"))
+        return json.dumps(out, separators=(",", ":"), default=_json_default)
 
     def stdio_loop(self) -> None:
         # handshake: the SERVER sends a hello request first (rpc.rs:124)
@@ -129,7 +139,7 @@ class Rpc:
         res = idx.query_json(msg["search"])
         # Res::Json(String): the reference returns the result as a
         # JSON-encoded STRING in msg, not an object (handles.rs:22-23)
-        return json.dumps(res)
+        return json.dumps(res, default=_json_default)
 
     def _query_multi(self, msg: dict) -> list:
         res = self.catalog.multi_query(msg["query"], msg["indexes"])

@@ -119,3 +119,29 @@ def test_wire_segment_registration(rpc):
         "segments": [{"segment_id": manifest[0]["segment_id"],
                       "max_doc": manifest[0]["max_doc"]}]})
     assert r["err"] is not None
+
+
+def test_wire_date_fields_encode_as_iso(rpc):
+    """Stored date fields come back from Spark as datetimes; both the
+    response frame and query_json's JSON-encoded string carry them as
+    ISO strings."""
+    from sonar_tantivy_spark.sources.transcripts import TRANSCRIPT_SCHEMA
+
+    call(rpc, "create_index", {"name": "tx", "schema": TRANSCRIPT_SCHEMA})
+    docs = [
+        [["text", "deploy the build"], ["role", "user"],
+         ["ts", "2026-01-02T03:04:05"], ["conv_id", "c1"], ["turn_idx", 0]],
+        [["text", "build is green"], ["role", "assistant"],
+         ["ts", "2026-01-02T03:05:00"], ["conv_id", "c1"], ["turn_idx", 1]],
+    ]
+    assert call(rpc, "add_documents",
+                {"index": "tx", "documents": docs})["err"] is None
+    r = call(rpc, "query", {"index": "tx", "query": "deploy"})
+    assert r["err"] is None
+    assert r["msg"][0]["doc"]["ts"] == ["2026-01-02T03:04:05"]
+    r = call(rpc, "query_json", {"index": "tx", "search": {
+        "query": {"term": {"text": "build"}}, "limit": 5}})
+    assert r["err"] is None
+    docs = json.loads(r["msg"])["docs"]
+    assert sorted(d["doc"]["ts"][0] for d in docs) == [
+        "2026-01-02T03:04:05", "2026-01-02T03:05:00"]
