@@ -32,10 +32,19 @@ from sonar_tantivy_spark.operators.snippet import (
 )
 from sonar_tantivy_spark.plans import ast as A
 from sonar_tantivy_spark.plans.schema import IndexSchema
-from sonar_tantivy_spark.sources.tableio import FsStorage, MemStorage
+from sonar_tantivy_spark.sources.tableio import FsStorage, MemStorage, key_filter
 
 DEFAULT_QUERY_LIMIT = 10  # handles.rs:143 unwrap_or(10)
 MULTI_QUERY_LIMIT = 100  # index.rs:141 hardcoded per-index limit
+
+
+def _seed_key(s: Searcher, docid: int) -> tuple[str, int]:
+    """(segment_id, local docid) of one GLOBAL docid; KeyError when it
+    is out of range."""
+    rows = s._ids_rows([docid])
+    if not rows:
+        raise KeyError(f"docid {docid} out of range")
+    return rows[0]
 
 
 class _SnapshotSlot:
@@ -1277,11 +1286,12 @@ class Index:
         is existing machinery, so the scores are plain BM25.
 
         1. Read the seed doc's (term, tf) rows.  Fast path (what
-           Lucene MLT itself does): fetch the STORED field from the
-           doc store — docids are monotonic within each segment's
-           files, so the docid equality predicate prunes to one row
-           group — and re-analyze it driver-side with the field's own
-           tokenizer (one doc, identical analyzer = identical tf).
+           Lucene MLT itself does): point-read the STORED field from
+           the doc store (``Searcher.fetch_stored``: docids are
+           monotonic within each segment's files, so one row group is
+           decoded, with no Spark job) and re-analyze it driver-side
+           with the field's own tokenizer (one doc, identical analyzer
+           = identical tf).
            Fallback for non-stored / non-string fields: a filtered
            postings scan.  (Postings files are sorted by (field, term,
            docid), so a docid predicate there cannot prune row groups
@@ -1319,33 +1329,22 @@ class Index:
         from sonar_tantivy_spark.functions import bm25
 
         s = self.searcher()
-        # global docid → (segment, local docid): bases are cumulative
-        sid, local = None, None
-        for seg_id, base in sorted(s.bases.items(), key=lambda kv: kv[1]):
-            if docid >= base:
-                sid, local = seg_id, docid - base
-        max_docs = {seg["segment_id"]: int(seg["max_doc"])
-                    for seg in s.segments}
-        if sid is None or local >= max_docs.get(sid, 0):
-            # same bound-check as termvectors/delete_docs: an id past
-            # the last segment must error, never silently seed nothing
-            raise KeyError(f"docid {docid} out of range")
+        # an id past the last segment must error, never silently seed
+        # nothing
+        sid, local = _seed_key(s, docid)
         seed = None
         fd = self.schema.field(field)
         if fd is not None and fd.stored and fd.tokenizer is not None:
-            docs = s._table("docs")
-            if docs is not None and field in docs.columns:
-                row = (docs.filter((F.col("segment_id") == sid)
-                                   & (F.col("docid") == local))
-                       .select(field).collect())
-                if row and isinstance(row[0][0], str):
-                    from collections import Counter
+            text = s.fetch_stored([(sid, local)], [field]).get(
+                (sid, local), {}).get(field)
+            if isinstance(text, str):
+                from collections import Counter
 
-                    from sonar_tantivy_spark import analyzer
+                from sonar_tantivy_spark import analyzer
 
-                    seed = [{"term": t, "tf": c} for t, c in
-                            Counter(analyzer.analyze_terms(
-                                row[0][0], fd.tokenizer)).items()]
+                seed = [{"term": t, "tf": c} for t, c in
+                        Counter(analyzer.analyze_terms(
+                            text, fd.tokenizer)).items()]
         if seed is None:
             p = s._table("postings")
             if p is None:
@@ -1444,8 +1443,8 @@ class Index:
         """ES ``_termvectors`` analog (BEYOND-REFERENCE): the per-term
         view of ONE document — ``[{"term", "tf", "positions", "df"}]``
         sorted by term.  Same bounded seed read as more_like_this: a
-        STORED analyzed field comes off the doc store (the docid
-        equality predicate prunes to one row group) and is re-analyzed
+        STORED analyzed field is point-read off the doc store (one row
+        group, no Spark job) and is re-analyzed
         driver-side with the field's own tokenizer — identical
         analyzer, identical tf/positions; non-stored fields fall back
         to a filtered postings scan.  dfs are summed across segments
@@ -1455,31 +1454,21 @@ class Index:
         from pyspark.sql import functions as F
 
         s = self.searcher()
-        sid, local = None, None
-        for seg_id, base in sorted(s.bases.items(), key=lambda kv: kv[1]):
-            if docid >= base:
-                sid, local = seg_id, docid - base
-        max_docs = {seg["segment_id"]: int(seg["max_doc"])
-                    for seg in s.segments}
-        if sid is None or local >= max_docs.get(sid, 0):
-            raise KeyError(f"docid {docid} out of range")
+        sid, local = _seed_key(s, docid)
         rows: list[dict] | None = None
         fd = self.schema.field(field)
         if fd is not None and fd.stored and fd.tokenizer is not None:
-            docs = s._table("docs")
-            if docs is not None and field in docs.columns:
-                got = (docs.filter((F.col("segment_id") == sid)
-                                   & (F.col("docid") == local))
-                       .select(field).collect())
-                if got and isinstance(got[0][0], str):
-                    from sonar_tantivy_spark import analyzer
+            text = s.fetch_stored([(sid, local)], [field]).get(
+                (sid, local), {}).get(field)
+            if isinstance(text, str):
+                from sonar_tantivy_spark import analyzer
 
-                    pos: dict[str, list[int]] = {}
-                    for i, t in enumerate(analyzer.analyze_terms(
-                            got[0][0], fd.tokenizer)):
-                        pos.setdefault(t, []).append(i)
-                    rows = [{"term": t, "tf": len(p), "positions": p}
-                            for t, p in pos.items()]
+                pos: dict[str, list[int]] = {}
+                for i, t in enumerate(analyzer.analyze_terms(
+                        text, fd.tokenizer)):
+                    pos.setdefault(t, []).append(i)
+                rows = [{"term": t, "tf": len(p), "positions": p}
+                        for t, p in pos.items()]
         if rows is None:
             p = s._table("postings")
             if p is None:
@@ -1575,10 +1564,10 @@ class Index:
     def mget(self, docids: list[int]) -> list[dict]:
         """ES ``_mget`` analog: stored fields for a list of GLOBAL
         docids, in request order, missing ids reported not dropped —
-        [{"docid", "found", "doc"}].  One pushdown-filtered doc-store
-        scan for the whole batch (the bounded retrieve shape: ≤ |ids|
-        row-group reads, never a corpus job); deleted docs are
-        anti-joined out like any query hit."""
+        [{"docid", "found", "doc"}].  One doc-store point read for the
+        whole batch (the retrieve shape: ≤ |ids| row-group reads, no
+        Spark job); deleted docs are reported missing, looked up in
+        the tombstone ledger only when the snapshot has deletes."""
         s = self.searcher()
         # _ids_rows returns (segment_id, local) pairs for LIVE in-range
         # ids — invert to docid_g → (sid, local)
@@ -1586,27 +1575,12 @@ class Index:
         by_g: dict[int, tuple[str, int]] = {}
         for sid, local in pairs:
             by_g[int(s.bases[sid] + local)] = (sid, local)
-        out_rows: dict[tuple[str, int], dict] = {}
-        if by_g:
-            docs = s._table("docs")
-            cond = None
-            for sid, local in by_g.values():
-                c = (F.col("segment_id") == sid) & (F.col("docid") == local)
-                cond = c if cond is None else (cond | c)
-            cand = docs.filter(cond).select(
-                "segment_id", "docid",
-                *[f.name for f in self.schema.fields if f.stored])
-            tomb = s._tombstones()
-            if tomb is not None:
-                cand = cand.join(tomb, on=["segment_id", "docid"],
-                                 how="left_anti")
-            stored = {f.name for f in self.schema.fields if f.stored}
-            for d in cand.collect():
-                row = d.asDict()
-                out_rows[(row["segment_id"], row["docid"])] = {
-                    k: [v] if not isinstance(v, list) else v
-                    for k, v in row.items()
-                    if k in stored and v is not None}
+        keys = list(by_g.values())
+        if keys and s.tombstone_meta:
+            dead = {(r["segment_id"], r["docid"]) for r in
+                    s._tombstones().filter(key_filter(keys)).collect()}
+            keys = [k for k in keys if k not in dead]
+        out_rows = s.stored_docs(keys)
         results = []
         for g in docids:
             key = by_g.get(int(g))

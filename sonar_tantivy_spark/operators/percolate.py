@@ -64,6 +64,10 @@ from sonar_tantivy_spark.plans.schema import IndexSchema
 
 _TEXTY = (A.TermQ, A.PhraseQ, A.PrefixQ, A.TermSetQ, A.PhrasePrefixQ,
           A.SpanNearQ, A.SpanNotQ, A.FuzzyQ, A.RegexQ)
+# node kinds whose compiled match reads map keys or raw columns, never
+# position arrays: positions_plan gives them no terms
+_KEY_ONLY = (A.TermQ, A.TermSetQ, A.PrefixQ, A.RegexQ, A.FuzzyQ,
+             A.ExistsQ, A.RangeQ, A.AllQ)
 
 
 def _tmap_udf(tokenizer: str, pos_terms: frozenset | None = None):
@@ -177,7 +181,9 @@ def positions_plan(queries: dict[str, A.Node],
     chains), or None when the field must keep full positions (a
     phrase_prefix reads positions of arbitrary prefix-matched keys).
     Fields referenced only by key-lookup shapes get an empty set —
-    their maps carry keys with empty position arrays."""
+    their maps carry keys with empty position arrays.  Fails closed: a
+    node kind this walk does not know keeps full positions on every
+    text field it references."""
     out: dict[str, frozenset | None] = {}
     acc: dict[str, set | None] = {}
 
@@ -210,6 +216,9 @@ def positions_plan(queries: dict[str, A.Node],
         elif isinstance(n, A.BoostingQ):
             walk(n.positive)
             walk(n.negative)
+        elif not isinstance(n, _KEY_ONLY):
+            for f in referenced_text_fields(n, schema):
+                acc[f] = None
 
     for node in queries.values():
         walk(node)

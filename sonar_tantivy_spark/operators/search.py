@@ -4285,11 +4285,7 @@ class Searcher:
                .filter(F.col("__rn") <= size)
                .orderBy(field, "__rn"))
         rows = top.collect()
-        hits_df = self.spark.createDataFrame(
-            [(r["segment_id"], r["docid"], r["score"], r["docid_g"])
-             for r in rows] or [],
-            "segment_id string, docid long, score double, docid_g long")
-        fetched = self.retrieve(hits_df)
+        fetched = self.retrieve_rows(rows)
         per_key: dict = {}
         for r, hit in zip(rows, fetched):
             per_key.setdefault(r[field], []).append(hit)
@@ -4398,38 +4394,44 @@ class Searcher:
              "bg_count": int(r["bg"]), "score": float(r["score"])}
             for r in rows]}
 
+    def fetch_stored(self, keys, fields) -> dict[tuple[str, int], dict]:
+        """Stored ``fields`` of ``keys`` ((segment_id, local docid)
+        pairs) → {key: {field: value}} — the doc store point read
+        (index.rs:275 ``searcher.doc(addr)``).  On disk it reads the
+        hit segments' parquet files directly, with no Spark job; keys
+        of ghost or unknown segments are simply absent."""
+        if self._parent is not None:
+            return self._parent.fetch_stored(keys, fields)
+        return self.storage.fetch_rows(self.spark, "docs", self.segments,
+                                       list(keys), list(fields),
+                                       self._memoized)
+
+    def stored_docs(self, keys) -> dict[tuple[str, int], dict]:
+        """{key: doc} for ``keys``: every non-null stored field, each
+        value wrapped in a list (the reference's multi-value doc
+        shape)."""
+        stored = [f.name for f in self.schema.fields if f.stored]
+        return {
+            key: {k: v if isinstance(v, list) else [v]
+                  for k, v in row.items() if v is not None}
+            for key, row in self.fetch_stored(keys, stored).items()
+        }
+
     def retrieve(self, hits: DataFrame) -> list[dict]:
         """Fetch stored fields for top-k rows (k ≤ 100: collect the keys,
-        pushdown-filter the docs scan — index.rs:274-281 analog)."""
-        rows = hits.collect()
-        if not rows:
-            return []
-        docs = self._table("docs")
-        by_seg: dict[str, list[int]] = {}
-        for r in rows:
-            by_seg.setdefault(r["segment_id"], []).append(r["docid"])
-        cond = None
-        for sid, ids in by_seg.items():
-            c = (F.col("segment_id") == sid) & F.col("docid").isin(ids)
-            cond = c if cond is None else (cond | c)
-        stored = {f.name for f in self.schema.fields if f.stored}
-        fetched = {
-            (d["segment_id"], d["docid"]): d.asDict()
-            for d in docs.filter(cond).collect()
-        }
-        out = []
-        for r in rows:
-            drow = fetched.get((r["segment_id"], r["docid"]), {})
-            doc = {
-                k: [v] if not isinstance(v, list) else v
-                for k, v in drow.items()
-                if k in stored and v is not None
-            }
-            out.append(
-                {"score": float(r["score"]), "doc": doc,
-                 "docid": int(r["docid_g"]), "snippet": None}
-            )
-        return out
+        then one point read — index.rs:274-281 analog)."""
+        return self.retrieve_rows(hits.collect())
+
+    def retrieve_rows(self, rows: list) -> list[dict]:
+        """``retrieve`` over already-collected hit rows (segment_id,
+        docid, score, docid_g)."""
+        docs = self.stored_docs([(r["segment_id"], r["docid"]) for r in rows])
+        return [
+            {"score": float(r["score"]),
+             "doc": docs.get((r["segment_id"], r["docid"]), {}),
+             "docid": int(r["docid_g"]), "snippet": None}
+            for r in rows
+        ]
 
 
 def regex_literal_prefix(pattern: str) -> str:

@@ -34,16 +34,85 @@ import json
 import os
 import shutil
 import time
-from typing import Any
+from typing import Any, Callable
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 TABLES = ("docs", "postings", "doclens", "termdict")
 
 
 class SegmentExistsError(RuntimeError):
     pass
+
+
+def key_filter(keys: list[tuple[str, int]]) -> Column:
+    """OR of per-segment ``docid IN (...)`` predicates over ``keys``."""
+    by_seg: dict[str, list[int]] = {}
+    for sid, d in keys:
+        by_seg.setdefault(sid, []).append(d)
+    cond = None
+    for sid, ids in by_seg.items():
+        c = (F.col("segment_id") == sid) & F.col("docid").isin(ids)
+        cond = c if cond is None else (cond | c)
+    return cond
+
+
+def _data_files(root: str) -> list[str]:
+    """Data files under a partition directory, listed the way Spark's
+    file index does: hidden names (``.``-prefixed, e.g. checksums) and
+    ``_``-prefixed names without ``=`` (``_SUCCESS``, ``_temporary``)
+    are skipped; ``k=v`` sub-partitions (``__tsbucket=...``) are
+    descended."""
+    out: list[str] = []
+    for name in sorted(os.listdir(root)):
+        if name.startswith(".") or (name.startswith("_") and "=" not in name):
+            continue
+        path = os.path.join(root, name)
+        if os.path.isdir(path):
+            out.extend(_data_files(path))
+        else:
+            out.append(path)
+    return out
+
+
+def _footers(part_dir: str) -> list[tuple[str, Any, list, list]]:
+    """(path, footer, column names, per-row-group docid (min, max)) for
+    every data file of one segment partition; a bound is None when the
+    writer kept no statistics (the row group is then always read)."""
+    out = []
+    for path in _data_files(part_dir):
+        meta = pq.read_metadata(path)
+        names = meta.schema.to_arrow_schema().names
+        ci = names.index("docid")
+        ranges = []
+        for i in range(meta.num_row_groups):
+            st = meta.row_group(i).column(ci).statistics
+            ranges.append((st.min, st.max) if st is not None
+                          and st.has_min_max else (None, None))
+        out.append((path, meta, names, ranges))
+    return out
+
+
+def _py_values(col: pa.ChunkedArray, binary_as_bytes: bool) -> list:
+    """Python values of one column, as ``DataFrame.collect()`` returns
+    them: timestamps through ``TimestampType.fromInternal`` on UTC
+    microseconds (Python's local zone, like PySpark), binary as
+    ``bytes`` or ``bytearray`` per Spark's binaryAsBytes setting."""
+    t = col.type
+    if pa.types.is_timestamp(t):
+        conv = T.TimestampType().fromInternal
+        micros = col.cast(pa.timestamp("us", t.tz)).cast(pa.int64())
+        return [None if v is None else conv(v) for v in micros.to_pylist()]
+    vals = col.to_pylist()
+    if not binary_as_bytes and (pa.types.is_binary(t)
+                                or pa.types.is_large_binary(t)):
+        return [None if v is None else bytearray(v) for v in vals]
+    return vals
 
 
 class FsStorage:
@@ -184,6 +253,51 @@ class FsStorage:
                 df, allowMissingColumns=True)
         return out
 
+    def fetch_rows(
+        self, spark: SparkSession, table: str, segments: list[dict],
+        keys: list[tuple[str, int]], columns: list[str],
+        memoized: Callable,
+    ) -> dict[tuple[str, int], dict]:
+        """Point read of ``keys`` (segment_id, local docid) straight from
+        the parquet files — no Spark job.  Per hit segment the data
+        files' docid row-group ranges come from ``memoized`` (the
+        Searcher's snapshot memo, one entry per segment); only row
+        groups that can hold a wanted docid are decoded, and only the
+        wanted ``columns`` the file has.  A column missing from a file
+        (an older epoch) is absent from its rows; keys keep the file's
+        column order."""
+        want: dict[str, set[int]] = {}
+        for sid, d in keys:
+            want.setdefault(sid, set()).add(int(d))
+        dirs = {s["segment_id"]: s["tables"][table] for s in segments
+                if s["segment_id"] in want and s["tables"].get(table)}
+        if not dirs:
+            return {}
+        files = memoized(f"footers:{table}", list(dirs),
+                         lambda missing: {sid: _footers(dirs[sid])
+                                          for sid in missing})
+        as_bytes = spark.conf.get(
+            "spark.sql.execution.pyspark.binaryAsBytes", "true") == "true"
+        wanted = set(columns)
+        out: dict[tuple[str, int], dict] = {}
+        for sid, seg_files in files.items():
+            ids = want[sid]
+            for path, meta, names, ranges in seg_files:
+                rgs = [i for i, (lo, hi) in enumerate(ranges)
+                       if lo is None or any(lo <= d <= hi for d in ids)]
+                if not rgs:
+                    continue
+                cols = [c for c in names if c in wanted and c != "docid"]
+                tbl = pq.ParquetFile(
+                    path, metadata=meta, coerce_int96_timestamp_unit="us",
+                ).read_row_groups(rgs, columns=["docid", *cols])
+                tbl = tbl.filter(pc.is_in(tbl["docid"],
+                                          pa.array(sorted(ids), pa.int64())))
+                vals = [_py_values(tbl[c], as_bytes) for c in cols]
+                for r, d in enumerate(tbl["docid"].to_pylist()):
+                    out[(sid, d)] = {c: v[r] for c, v in zip(cols, vals)}
+        return out
+
 
 class MemStorage:
     """In-memory index backing for create_ram_index
@@ -263,3 +377,21 @@ class MemStorage:
             part = df.filter(F.col("segment_id").isin(sids))
             out = part if out is None else out.unionByName(part)
         return out
+
+    def fetch_rows(
+        self, spark: SparkSession, table: str, segments: list[dict],
+        keys: list[tuple[str, int]], columns: list[str],
+        memoized: Callable,
+    ) -> dict[tuple[str, int], dict]:
+        """Point read of ``keys`` as a pushdown-filtered Spark collect:
+        RAM tables live only in the JVM, so a job is the one way in."""
+        df = self.load_table(spark, table, segments)
+        if df is None or not keys:
+            return {}
+        wanted = set(columns)
+        cols = [c for c in df.columns if c in wanted]
+        return {
+            (r["segment_id"], r["docid"]): {c: r[c] for c in cols}
+            for r in df.filter(key_filter(keys))
+            .select("segment_id", "docid", *cols).collect()
+        }

@@ -229,3 +229,104 @@ def test_membership_parity_under_position_pruning(spark, corpus, oracle,
                 if name in got.get((rec["conv_id"], int(rec["turn_idx"])),
                                    set())}
         assert have == want, (name, sorted(have ^ want)[:5])
+
+
+# ---------------------------------------- positions_plan fails closed
+_T = "text"
+_CHAIN = A.PhraseQ(_T, ["hello", "world"], slop=1)
+# one example per node kind _Compiler.compile accepts; a kind added to
+# compile fails test_positions_plan_covers_every_compiled_kind until it
+# gets an example here
+_KIND_EXAMPLES = {
+    "TermQ": A.TermQ(_T, "hello"),
+    "TermSetQ": A.TermSetQ(_T, ["hello", "mundo"]),
+    "PrefixQ": A.PrefixQ(_T, "wor"),
+    "RegexQ": A.RegexQ(_T, "wor.*"),
+    "FuzzyQ": A.FuzzyQ(_T, "helo", 1),
+    "PhraseQ": _CHAIN,
+    "PhrasePrefixQ": A.PhrasePrefixQ(_T, ["hello"], "wor"),
+    "SpanNearQ": A.SpanNearQ(_T, [("hello",), ("world", "mundo")], slop=1),
+    "SpanFirstQ": A.SpanFirstQ(A.SpanNearQ(_T, [("hello",), ("world",)]),
+                               end=3),
+    "SpanNotQ": A.SpanNotQ(_T, ("hello",), ("world",), pre=0, post=1),
+    "ExistsQ": A.ExistsQ("tool"),
+    "RangeQ": A.RangeQ("ts", gte="2026-01-02 00:00:00"),
+    "AllQ": A.AllQ(),
+    "BoolQ": A.BoolQ(must=[_CHAIN], must_not=[A.TermQ(_T, "mundo")]),
+    "DisMaxQ": A.DisMaxQ([A.PhraseQ(_T, ["big", "world"]),
+                          A.TermQ(_T, "mundo")]),
+    "BoostQ": A.BoostQ(_CHAIN, 2.0),
+    "ConstScoreQ": A.ConstScoreQ(
+        A.SpanNearQ(_T, [("world",), ("hello",)], in_order=False)),
+    "FunctionScoreQ": A.FunctionScoreQ(_CHAIN),
+    "BoostingQ": A.BoostingQ(_CHAIN, A.PhraseQ(_T, ["big", "world"])),
+}
+_KIND_TEXTS = ["hello world", "world hello", "hello big world",
+               "hello mundo", "big world hello world", "nothing here",
+               "hello there world mundo", "helo wordy"]
+
+
+def _compiled_kinds() -> set[str]:
+    import inspect
+    import re
+
+    from sonar_tantivy_spark.operators.percolate import _Compiler
+
+    return set(re.findall(r"\bA\.(\w+Q)\b",
+                          inspect.getsource(_Compiler.compile)))
+
+
+def test_positions_plan_covers_every_compiled_kind(spark, index,
+                                                   monkeypatch):
+    """Every node kind compile accepts matches the same docs under its
+    position-pruning plan as with full positions on every field."""
+    from datetime import datetime
+
+    from sonar_tantivy_spark.operators import percolate as P
+
+    assert _compiled_kinds() == set(_KIND_EXAMPLES)
+    rows = [{"text": t, "role": "user", "tool": "grep" if i % 2 else None,
+             "ts": datetime(2026, 1, 1 + i), "conv_id": "c",
+             "turn_idx": i} for i, t in enumerate(_KIND_TEXTS)]
+    df = spark.createDataFrame(
+        rows, "text string, role string, tool string, ts timestamp, "
+              "conv_id string, turn_idx long")
+
+    def matches(node) -> list:
+        return sorted(
+            (r["turn_idx"], tuple(r["matched_queries"])) for r in
+            P.percolate_df(df, index.schema, {"q": node},
+                           keep_cols=["turn_idx"], explode=False).collect())
+
+    planned = {k: matches(n) for k, n in _KIND_EXAMPLES.items()}
+    full_plan = P.positions_plan
+
+    def everything_full(queries, schema):
+        return {f: None for f in full_plan(queries, schema)}
+
+    monkeypatch.setattr(P, "positions_plan", everything_full)
+    for kind, node in _KIND_EXAMPLES.items():
+        assert planned[kind] == matches(node), kind
+    # the examples are not vacuous: most match some but not all docs
+    assert sum(0 < sum(1 for _, m in v if m) < len(_KIND_TEXTS)
+               for v in planned.values()) >= len(_KIND_EXAMPLES) - 3
+
+
+def test_positions_plan_fails_closed_on_unknown_kind(index, monkeypatch):
+    """A node kind positions_plan does not know keeps full positions on
+    every text field it references, instead of contributing no terms."""
+    from dataclasses import dataclass
+
+    from sonar_tantivy_spark.operators import percolate as P
+
+    @dataclass
+    class NewChainQ(A.Node):
+        field: str
+
+    monkeypatch.setattr(P, "_TEXTY", P._TEXTY + (NewChainQ,))
+    node = A.BoolQ(must=[_CHAIN, NewChainQ(_T)],
+                   should=[A.TermQ("role", "user")])
+    plan = P.positions_plan({"q": node}, index.schema)
+    assert plan == {_T: None, "role": frozenset()}
+    known = P.positions_plan({"q": A.BoolQ(must=[_CHAIN])}, index.schema)
+    assert known == {_T: frozenset({"hello", "world"})}
