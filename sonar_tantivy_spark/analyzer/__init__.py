@@ -15,16 +15,16 @@ UTF-8 byte length is >= 40.  Token *positions* are assigned by the
 tokenizer before filtering, so a dropped long token leaves a position
 gap — this matters for phrase queries.
 
-Everything is exposed both as plain Python (for query-term analysis on
-the driver and for the pure-Python test oracle) and as a vectorized
-pandas transform used from Arrow-batched UDFs — no per-row Python UDFs
-in the Spark hot path (BASELINE.json:15).
+One kernel, ``analyze_token``, holds the per-token chain (byte cap →
+lowercase → optional stem).  ``tokenize`` (query-term analysis on the
+driver and the pure-Python test oracle), the build's and the
+percolator's Arrow-batched UDFs and the snippet highlighter all call
+it — no per-row Python UDFs in the Spark hot path (BASELINE.json:15).
 """
 
 from __future__ import annotations
 
 import re
-from typing import Iterable, Iterator
 
 from sonar_tantivy_spark.functions.porter2 import stem
 
@@ -34,6 +34,22 @@ _TOKEN_RE = re.compile(r"[^\W_]+", re.UNICODE)
 MAX_TOKEN_BYTES = 40
 
 TOKENIZERS = ("en_stem", "default", "raw")
+
+
+def analyze_token(tok: str, do_stem: bool) -> str | None:
+    """One raw tokenizer token → its analyzed term, or None when
+    RemoveLongFilter drops it (UTF-8 length >= 40 bytes).
+
+    Tokens under 10 chars skip the encode: 9 code points are at most 36
+    UTF-8 bytes.  The Arrow UDFs (build, percolate) front this with a
+    token → term dict; that dict lives in the UDF closure, which Spark
+    unpickles once per task, so it holds one task's distinct tokens and
+    needs no cap.
+    """
+    if len(tok) >= 10 and len(tok.encode("utf-8")) >= MAX_TOKEN_BYTES:
+        return None
+    low = tok.lower()
+    return stem(low) if do_stem else low
 
 
 def tokenize(text: str, tokenizer: str = "en_stem") -> list[tuple[str, int]]:
@@ -48,29 +64,13 @@ def tokenize(text: str, tokenizer: str = "en_stem") -> list[tuple[str, int]]:
         return [(text, 0)] if text != "" else []
     out: list[tuple[str, int]] = []
     do_stem = tokenizer == "en_stem"
-    for pos, m in enumerate(_TOKEN_RE.finditer(text)):
-        tok = m.group(0)
-        if len(tok.encode("utf-8")) >= MAX_TOKEN_BYTES:
-            continue
-        tok = tok.lower()
-        if do_stem:
-            tok = stem(tok)
-        out.append((tok, pos))
+    for pos, tok in enumerate(_TOKEN_RE.findall(text)):
+        term = analyze_token(tok, do_stem)
+        if term is not None:
+            out.append((term, pos))
     return out
 
 
 def analyze_terms(text: str, tokenizer: str = "en_stem") -> list[str]:
     """Terms only (used to analyze query strings)."""
     return [t for t, _ in tokenize(text, tokenizer)]
-
-
-def tokenize_batch(
-    texts: Iterable[str | None], tokenizer: str = "en_stem"
-) -> Iterator[list[tuple[str, int]]]:
-    """Vectorized batch form used inside Arrow/pandas UDFs.
-
-    ``porter2.stem`` is lru_cached, so per-batch cost is ~one dict hit per
-    token occurrence; the distinct-term working set dominates.
-    """
-    for text in texts:
-        yield tokenize(text, tokenizer)

@@ -32,6 +32,7 @@ from sonar_tantivy_spark.operators.snippet import (
 )
 from sonar_tantivy_spark.plans import ast as A
 from sonar_tantivy_spark.plans.schema import IndexSchema
+from sonar_tantivy_spark.pool import surface_all
 from sonar_tantivy_spark.sources.tableio import FsStorage, MemStorage, key_filter
 
 DEFAULT_QUERY_LIMIT = 10  # handles.rs:143 unwrap_or(10)
@@ -439,12 +440,15 @@ class Index:
                     fut_aggs = (pool.submit(s.aggregations, node, aggs,
                                             cand)
                                 if aggs else None)
-                    out: dict[str, Any] = {"docs": _page(fut_hits.result()),
-                                           "facets": {}}
-                    if fut_facets is not None:
-                        out["facets"] = fut_facets.result()
-                    if fut_aggs is not None:
-                        out["aggs"] = fut_aggs.result()
+                    futs = [f for f in (fut_hits, fut_facets, fut_aggs)
+                            if f is not None]
+                    with surface_all(futs):
+                        out: dict[str, Any] = {
+                            "docs": _page(fut_hits.result()), "facets": {}}
+                        if fut_facets is not None:
+                            out["facets"] = fut_facets.result()
+                        if fut_aggs is not None:
+                            out["aggs"] = fut_aggs.result()
                 return _done(out)
             finally:
                 cand.unpersist()
@@ -1262,7 +1266,8 @@ class Index:
             return [self.query_json(s) for s in searches]
         with ThreadPoolExecutor(max_workers=min(8, len(searches))) as pool:
             futs = [pool.submit(self.query_json, s) for s in searches]
-            return [f.result() for f in futs]
+            with surface_all(futs):
+                return [f.result() for f in futs]
 
     def num_deleted(self) -> int:
         """Live tombstone count (rows for already-compacted segments
@@ -1755,7 +1760,8 @@ class IndexCatalog:
         with ThreadPoolExecutor(max_workers=min(8, len(names))) as pool:
             futs = {n: pool.submit(
                 self.open(n).query, query, MULTI_QUERY_LIMIT) for n in names}
-            return {n: f.result() for n, f in futs.items()}
+            with surface_all(list(futs.values())):
+                return {n: f.result() for n, f in futs.items()}
 
     def list_indexes(self) -> list[str]:
         """All committed index names under the base path (ES _cat/indices

@@ -1218,10 +1218,10 @@ def q_dd_winnow_pairs(spark, sf_dir):
     return rep_pairs.unionByName(stars)
 
 
-# multimodal plumbing ---------------------------------------------------------
+# binary payload metadata -----------------------------------------------------
 def q_mm_binary_meta(spark, sf_dir):
-    """Opaque-binary column plumbing: payload bytes + deterministic stub
-    'decode' (real decoders are stubbed — see operators/multimodal.py)."""
+    """Opaque-binary column plumbing: payload byte length + a
+    deterministic frame count derived from it (no media decoding)."""
     d = _docs(spark, sf_dir)
     nb = F.octet_length("text").cast("long")
     return d.select(

@@ -113,8 +113,3 @@ def fieldnorm_id_col(len_col):
         .cast("int")
     )
 
-
-def fieldnorm_table_sql_values() -> str:
-    """The decode table as a SQL VALUES list — shared by DuckDB oracle
-    queries so that engine and oracle quantize identically."""
-    return ", ".join(f"({i}, {v})" for i, v in enumerate(FIELDNORM_TABLE))

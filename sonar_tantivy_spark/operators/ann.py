@@ -228,14 +228,6 @@ def _cos_lit(col, vec) -> F.Column:
     return dot_lit(col, vec) / (norm_col(col) * F.lit(n))
 
 
-def cell_col(emb_col, cents) -> F.Column:
-    """IVF cell = argmax cosine over the centroid list (ties -> lowest
-    cell id, via array_position's first-match rule).  Pure column math;
-    cosines rounded to 7 so the argmax is reproducible across engines."""
-    scores = F.array(*[F.round(_cos_lit(emb_col, cv), 7) for cv in cents])
-    return (F.array_position(scores, F.array_max(scores)) - 1).cast("int")
-
-
 def cells_col(emb_col, cents, assign: int = ASSIGN) -> F.Column:
     """Top-``assign`` cells by (cosine desc, cell id asc) — spilled
     assignment.  Pure column math: sort_array over (−cos, cid) structs

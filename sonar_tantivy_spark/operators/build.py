@@ -48,6 +48,7 @@ from pyspark.storagelevel import StorageLevel
 from sonar_tantivy_spark.analyzer import tokenize as _tokenize_py
 from sonar_tantivy_spark.functions.bm25 import fieldnorm_id_col
 from sonar_tantivy_spark.plans.schema import IndexSchema
+from sonar_tantivy_spark.pool import surface_all
 
 _TOKENS_TYPE = T.StructType(
     [
@@ -141,8 +142,7 @@ def make_perdoc_postings_udf(tokenizer: str):
     Output: struct(dl, postings: array<struct(term, tf, positions)>).
     """
 
-    from sonar_tantivy_spark.analyzer import _TOKEN_RE, MAX_TOKEN_BYTES
-    from sonar_tantivy_spark.functions.porter2 import stem as _stem
+    from sonar_tantivy_spark.analyzer import _TOKEN_RE, analyze_token
 
     findall = _TOKEN_RE.findall
     do_stem = tokenizer == "en_stem"
@@ -150,12 +150,6 @@ def make_perdoc_postings_udf(tokenizer: str):
     # Keyed pre-lowercase so the whole analyze chain is one dict hit for
     # repeated tokens — cost scales with distinct tokens, not occurrences.
     memo: dict[str, str | None] = {}
-
-    def analyze(tok: str) -> str | None:
-        if len(tok) >= 10 and len(tok.encode("utf-8")) >= MAX_TOKEN_BYTES:
-            return None  # tokens under 10 chars are always < 40 bytes
-        low = tok.lower()
-        return _stem(low) if do_stem else low
 
     @F.pandas_udf(_PERDOC_TYPE)
     def _udf(texts: pd.Series) -> pd.DataFrame:
@@ -168,7 +162,7 @@ def make_perdoc_postings_udf(tokenizer: str):
                 for pos, tok in enumerate(findall(text)):
                     a = memo_get(tok, "\x00")
                     if a == "\x00":
-                        a = memo[tok] = analyze(tok)
+                        a = memo[tok] = analyze_token(tok, do_stem)
                     if a is None:
                         continue
                     dl += 1
@@ -449,12 +443,14 @@ def build_segments(
     # barriers while most executor cores idle.
     from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
+    side: list = []
+    with ThreadPoolExecutor(max_workers=2) as pool, surface_all(side):
         fut_docs = pool.submit(
             storage.write_table,
             docs_tbl.sortWithinPartitions("segment_id", "docid"), epoch, "docs",
             tuple(docs_part_cols),
         )
+        side.append(fut_docs)
         storage.write_table(
             postings.sortWithinPartitions("segment_id", "field", "term", "docid"),
             epoch, "postings",
@@ -473,6 +469,7 @@ def build_segments(
             doclens.sortWithinPartitions("segment_id", "field", "docid"),
             epoch, "doclens",
         )
+        side.append(fut_doclens)
         termdict = termdict_from_postings(postings_r)
         storage.write_table(
             termdict.sortWithinPartitions("segment_id", "field", "term"),

@@ -16,33 +16,12 @@ test suite asserts this.
 
 from __future__ import annotations
 
-import contextlib
 import math
 import os
 
 from pyspark.sql import functions as F
 
-
-@contextlib.contextmanager
-def _surface_all(futures: list):
-    """On exit, wait on every future in ``futures`` — also when the
-    body raised — and raise if anything failed: the body's error first,
-    else the first future's, with every other error attached as a note.
-    A failed main-thread write then never hides a sibling's failure."""
-    errors: list[BaseException] = []
-    try:
-        yield
-    except BaseException as e:  # noqa: BLE001 - re-raised below
-        errors.append(e)
-    for f in futures:
-        e = f.exception()
-        if e is not None:
-            errors.append(e)
-    if errors:
-        head = errors[0]
-        for e in errors[1:]:
-            head.add_note(f"also failed: {type(e).__name__}: {e}")
-        raise head
+from sonar_tantivy_spark.pool import surface_all
 
 
 def compact_to(index, target_segments: int = 1) -> list[dict]:
@@ -120,7 +99,7 @@ def compact_to(index, target_segments: int = 1) -> list[dict]:
     from concurrent.futures import ThreadPoolExecutor
 
     side: list = []
-    with ThreadPoolExecutor(max_workers=2) as pool, _surface_all(side):
+    with ThreadPoolExecutor(max_workers=2) as pool, surface_all(side):
         side.append(pool.submit(
             storage.write_table, docs.sortWithinPartitions("docid"),
             epoch, "docs", docs_parts))
@@ -435,7 +414,7 @@ def compact(index, segment_ids: list[str] | None = None) -> dict:
     from concurrent.futures import ThreadPoolExecutor
 
     side: list = []
-    with ThreadPoolExecutor(max_workers=2) as pool, _surface_all(side):
+    with ThreadPoolExecutor(max_workers=2) as pool, surface_all(side):
         side.append(pool.submit(
             storage.write_table, merged_docs.sortWithinPartitions("docid"),
             epoch, "docs", docs_parts))

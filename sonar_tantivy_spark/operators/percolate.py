@@ -16,8 +16,8 @@ Spark inversion: queries are FEW (a saved-search registry; at most
 thousands) and docs are MANY, so
 
 1. ONE Arrow-batched pandas UDF pass per referenced text field builds
-   an in-row ``term -> sorted positions`` map (``tokenize_batch``, the
-   same analyzer the index build uses) — zero shuffle, no joins;
+   an in-row ``term -> sorted positions`` map (``analyze_token``, the
+   same analyzer kernel the index build uses) — zero shuffle, no joins;
 2. every registered query compiles ONCE (driver-side) to a JVM Column
    predicate over those maps + the raw doc columns — term lookups are
    ``map[key] IS NOT NULL``, phrase/span chains are the IDENTICAL
@@ -102,19 +102,12 @@ def _tmap_udf(tokenizer: str, pos_terms: frozenset | None = None):
 
         return tmap_raw
 
-    from sonar_tantivy_spark.analyzer import _TOKEN_RE, MAX_TOKEN_BYTES
-    from sonar_tantivy_spark.functions.porter2 import stem as _stem
+    from sonar_tantivy_spark.analyzer import _TOKEN_RE, analyze_token
 
     findall = _TOKEN_RE.findall
     do_stem = tokenizer == "en_stem"
     memo: dict[str, str | None] = {}
     _no_pos: list[int] = []  # shared empty positions value
-
-    def analyze(tok: str) -> str | None:
-        if len(tok) >= 10 and len(tok.encode("utf-8")) >= MAX_TOKEN_BYTES:
-            return None  # tokens under 10 chars are always < 40 bytes
-        low = tok.lower()
-        return _stem(low) if do_stem else low
 
     @pandas_udf(_MAP_T)
     def tmap(texts: pd.Series) -> pd.Series:
@@ -127,7 +120,7 @@ def _tmap_udf(tokenizer: str, pos_terms: frozenset | None = None):
                 for pos, tok in enumerate(findall(text)):
                     a = memo_get(tok, "\x00")
                     if a == "\x00":
-                        a = memo[tok] = analyze(tok)
+                        a = memo[tok] = analyze_token(tok, do_stem)
                     if a is None:
                         continue
                     if keep is not None and a not in keep:

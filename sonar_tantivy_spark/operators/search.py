@@ -49,6 +49,7 @@ from pyspark.sql import types as T
 from sonar_tantivy_spark.functions import bm25
 from sonar_tantivy_spark.plans import ast as A
 from sonar_tantivy_spark.plans.schema import IndexSchema
+from sonar_tantivy_spark.pool import surface_all
 
 # Skew-guard broadcast budget: the rare-term (segment_id, docid) key set is
 # ~16 B/row on the wire (short segment id + long), so cap by BYTES, not rows
@@ -3854,11 +3855,11 @@ class Searcher:
             if len(runnable) > 1:
                 from concurrent.futures import ThreadPoolExecutor
 
+                futs: list = []
                 with ThreadPoolExecutor(
-                        max_workers=min(4, len(runnable))) as pool:
-                    futs = [pool.submit(_exec_one, *t) for t in runnable]
-                    for f in futs:
-                        f.result()
+                        max_workers=min(4, len(runnable))) as pool, \
+                        surface_all(futs):
+                    futs.extend(pool.submit(_exec_one, *t) for t in runnable)
             else:
                 for t in runnable:
                     _exec_one(*t)

@@ -15,12 +15,22 @@ covering whole tokens.
 
 from __future__ import annotations
 
-import re
-
-from sonar_tantivy_spark.analyzer import _TOKEN_RE, MAX_TOKEN_BYTES
-from sonar_tantivy_spark.functions.porter2 import stem
+from sonar_tantivy_spark.analyzer import _TOKEN_RE, analyze_token
 
 DEFAULT_MAX_CHARS = 150
+
+
+def _spans(text: str, query_terms: set[str],
+           tokenizer: str) -> list[tuple[int, int, bool]]:
+    """(start, end, matched) of every token the analyzer keeps: a token
+    matches when its analyzed term is in ``query_terms``."""
+    do_stem = tokenizer == "en_stem"
+    spans: list[tuple[int, int, bool]] = []
+    for m in _TOKEN_RE.finditer(text):
+        term = analyze_token(m.group(0), do_stem)
+        if term is not None:
+            spans.append((m.start(), m.end(), term in query_terms))
+    return spans
 
 
 def generate_snippet(
@@ -31,15 +41,7 @@ def generate_snippet(
 ) -> str | None:
     if not text or not query_terms:
         return None
-    spans: list[tuple[int, int, bool]] = []  # (start, end, matched)
-    for m in _TOKEN_RE.finditer(text):
-        tok = m.group(0)
-        if len(tok.encode("utf-8")) >= MAX_TOKEN_BYTES:
-            continue
-        analyzed = tok.lower()
-        if tokenizer == "en_stem":
-            analyzed = stem(analyzed)
-        spans.append((m.start(), m.end(), analyzed in query_terms))
+    spans = _spans(text, query_terms, tokenizer)
     if not any(matched for _, _, matched in spans):
         return None
     # best window of whole tokens within max_chars, maximizing matches
@@ -86,15 +88,7 @@ def generate_fragments(
     generate_snippet (tags are caller-supplied, default ES <em>)."""
     if not text or not query_terms or number_of_fragments < 1:
         return []
-    spans: list[tuple[int, int, bool]] = []
-    for m in _TOKEN_RE.finditer(text):
-        tok = m.group(0)
-        if len(tok.encode("utf-8")) >= MAX_TOKEN_BYTES:
-            continue
-        analyzed = tok.lower()
-        if tokenizer == "en_stem":
-            analyzed = stem(analyzed)
-        spans.append((m.start(), m.end(), analyzed in query_terms))
+    spans = _spans(text, query_terms, tokenizer)
     if not any(matched for _, _, matched in spans):
         return []
     # candidate windows: for each start token, widest fit under max_chars

@@ -1,11 +1,13 @@
-"""A merge runs its docs / doclens rewrites beside the postings and
-termdict writes; a failure in any of them must surface, also when the
-main-thread write fails too (its raise must not drop a sibling's)."""
+"""A merge or a segment build runs its docs / doclens writes beside the
+postings and termdict writes, and ``query_json`` runs its hit, facet and
+agg collectors side by side; a failure in any of them must surface, also
+when another one fails too (one raise must not drop a sibling's)."""
 
 import pytest
 
 from sonar_tantivy_spark import IndexCatalog
 from sonar_tantivy_spark.operators import merge as M
+from sonar_tantivy_spark.operators.search import Searcher
 
 SCHEMA = [
     {"name": "body", "type": "text",
@@ -34,6 +36,10 @@ def _failing(storage, monkeypatch, tables: set[str]) -> None:
     monkeypatch.setattr(storage, "write_table", write_table)
 
 
+def _report(exc: BaseException) -> str:
+    return str(exc) + " ".join(getattr(exc, "__notes__", []))
+
+
 @pytest.mark.parametrize("merge", [
     lambda ix: M.compact(ix),
     lambda ix: M.compact_to(ix, target_segments=1),
@@ -45,7 +51,37 @@ def test_every_write_error_surfaces(idx, monkeypatch, merge, tables):
     _failing(idx.storage, monkeypatch, tables)
     with pytest.raises(OSError) as ei:
         merge(idx)
-    report = str(ei.value) + " ".join(getattr(ei.value, "__notes__", []))
     for t in tables:
-        assert f"disk full writing {t}" in report
+        assert f"disk full writing {t}" in _report(ei.value)
     assert idx.storage.manifest() == before  # nothing committed
+
+
+@pytest.mark.parametrize("tables", [
+    {"docs"}, {"docs", "postings"}, {"docs", "doclens"},
+    {"doclens", "termdict"},
+], ids=["docs", "docs+postings", "docs+doclens", "doclens+termdict"])
+def test_every_build_write_error_surfaces(idx, monkeypatch, tables):
+    before = idx.storage.manifest()
+    _failing(idx.storage, monkeypatch, tables)
+    with pytest.raises(OSError) as ei:
+        idx.add([{"body": "epsilon zeta"}])
+    for t in tables:
+        assert f"disk full writing {t}" in _report(ei.value)
+    assert idx.storage.manifest() == before  # nothing committed
+
+
+def test_query_json_surfaces_hits_and_aggs_errors(idx, monkeypatch):
+    def failing(what):
+        def raise_(*args, **kw):
+            raise RuntimeError(f"{what} collector failed")
+        return raise_
+
+    monkeypatch.setattr(Searcher, "retrieve", failing("hits"))
+    monkeypatch.setattr(Searcher, "aggregations", failing("aggs"))
+    search = {"query": {"term": {"body": "alpha"}}, "limit": 5,
+              "aggs": {"n": {"value_count": {"field": "body"}}}}
+    with pytest.raises(RuntimeError) as ei:
+        idx.query_json(search)
+    report = _report(ei.value)
+    assert "hits collector failed" in report
+    assert "aggs collector failed" in report

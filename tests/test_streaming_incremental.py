@@ -1,15 +1,6 @@
-"""Structured-Streaming incremental indexing + multimodal plumbing."""
-
-import pytest
-
-from pyspark.sql import functions as F
+"""Structured-Streaming incremental indexing."""
 
 from sonar_tantivy_spark import IndexCatalog
-from sonar_tantivy_spark.operators.multimodal import (
-    extract_features,
-    media_from_docs,
-    near_dup_by_feature,
-)
 from sonar_tantivy_spark.sources.transcripts import (
     TRANSCRIPT_SCHEMA,
     generate_transcripts,
@@ -62,75 +53,6 @@ def test_incremental_stream_matches_batch(spark, tmp_path):
     ws = {key(r): round(r["score"], 6) for r in want_rows}
     assert gs == ws
     assert want  # batch reference non-empty
-
-
-def test_multimodal_features(spark, tmp_path):
-    docs = spark.createDataFrame(
-        [(i, f"payload text {i % 5}") for i in range(50)], "doc_id long, text string")
-    media = media_from_docs(docs)
-    assert media.schema["payload"].dataType.typeName() == "binary"
-    feats = extract_features(media, dim=8, frame_stride=4)
-    rows = feats.collect()
-    assert len(rows) == 50
-    for r in rows:
-        assert len(r["feature"]) == 8
-        assert r["n_frames"] >= 1 and len(r["sha1"]) == 40
-    # determinism: same payload → same feature
-    by_text = {}
-    for r in rows:
-        by_text.setdefault(r["sha1"], set()).add(tuple(r["feature"]))
-    assert all(len(v) == 1 for v in by_text.values())
-
-    dups = near_dup_by_feature(feats, threshold=0.999).collect()
-    # docs with identical text (i % 5) are exact feature dups
-    assert len(dups) > 0
-    feat_map = {r["media_id"]: tuple(r["feature"]) for r in rows}
-    for d in dups:
-        assert d["cos"] >= 0.999
-        if feat_map[d["m1"]] == feat_map[d["m2"]]:
-            assert d["cos"] == pytest.approx(1.0, abs=1e-9)
-
-
-def test_multimodal_stub_gate(spark):
-    docs = spark.createDataFrame([(1, "x")], "doc_id long, text string")
-    media = media_from_docs(docs)
-    with pytest.raises(Exception, match="NotImplementedError|decoders"):
-        extract_features(media, decode_stub=False).collect()
-
-
-def test_multimodal_resize(spark):
-    from sonar_tantivy_spark.operators.multimodal import resize_images
-
-    docs = spark.createDataFrame(
-        [(i, f"payload text {i}") for i in range(12)],
-        "doc_id long, text string")
-    media = media_from_docs(docs)
-    out = resize_images(media, width=64, height=32).collect()
-    assert len(out) == 12
-    by_kind = {}
-    for r in out:
-        by_kind.setdefault(r["kind"], []).append(r)
-    for r in by_kind["image"]:
-        assert r["width"] == 64 and r["height"] == 32
-        assert len(r["payload"]) == 64 * 32 // 64
-    # non-image rows pass through untouched
-    for k in ("audio", "video"):
-        for r in by_kind[k]:
-            assert r["width"] is None and bytes(r["payload"]).startswith(b"payload")
-    # determinism: same payload + size -> same fake bytes
-    again = {r["media_id"]: bytes(r["payload"])
-             for r in resize_images(media, width=64, height=32).collect()}
-    for r in out:
-        assert bytes(r["payload"]) == again[r["media_id"]]
-
-
-def test_multimodal_resize_stub_gate(spark):
-    from sonar_tantivy_spark.operators.multimodal import resize_images
-
-    docs = spark.createDataFrame([(0, "img")], "doc_id long, text string")
-    media = media_from_docs(docs).filter("kind = 'image'")
-    with pytest.raises(Exception, match="NotImplementedError|PIL"):
-        resize_images(media, decode_stub=False).collect()
 
 
 def test_incremental_auto_compact_and_replay_ledger(spark, tmp_path):
