@@ -32,6 +32,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sonar_tantivy_spark.pool import surface_all
+
 N_TABLES = 8
 N_PLANES = 7  # per table; plane vectors = corpus vec_ids 1..56
 MULTIPROBE = 1  # Hamming radius of the query's probe set per table
@@ -412,6 +414,20 @@ class IvfIndex:
          .write.partitionBy("cell").parquet(path))
 
 
+def _pooled_sums(one, n_queries: int) -> tuple[int, int]:
+    """Run ``one(qid)`` for every query id from a small thread pool (the
+    tiny per-query jobs overlap) and sum its (hits, candidates) pairs.
+    Every query is waited on: a failure raises with the other failures
+    attached as notes (pool.surface_all)."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    futs: list = []
+    with ThreadPoolExecutor(max_workers=8) as pool, surface_all(futs):
+        futs.extend(pool.submit(one, qid) for qid in range(n_queries))
+    pairs = [f.result() for f in futs]
+    return sum(h for h, _ in pairs), sum(c for _, c in pairs)
+
+
 def measure_recall_ivf(spark: SparkSession, sf_dir: str,
                        n_queries: int = 20, k: int = 5) -> dict:
     """recall@k of the TRAINED IVF path (IvfIndex — the shipped
@@ -425,34 +441,30 @@ def measure_recall_ivf(spark: SparkSession, sf_dir: str,
     tail would otherwise idle the cluster — the recall/scan numbers are
     computed from the same per-query results and are bit-identical to
     the sequential loop."""
-    from concurrent.futures import ThreadPoolExecutor
-
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     idx = IvfIndex.build(emb)
     idx.assigned = idx.assigned.persist()
-    n = idx.assigned.count()
-    n_cells = len(idx.cents)
-    nprobe = default_nprobe(n_cells)
-    pop_rows = (idx.assigned.select(F.explode("cells").alias("cell"))
-                .groupBy("cell").agg(F.count("*").alias("c")).collect())
-    cell_pop = {r["cell"]: r["c"] for r in pop_rows}
-    qvecs = {r["vec_id"]: r["embedding"] for r in
-             idx.assigned.filter(F.col("vec_id") < n_queries).collect()}
-    exact_sets = exact_topk_batch(emb, qvecs, k)  # ONE ground-truth job
+    try:
+        n = idx.assigned.count()
+        n_cells = len(idx.cents)
+        nprobe = default_nprobe(n_cells)
+        pop_rows = (idx.assigned.select(F.explode("cells").alias("cell"))
+                    .groupBy("cell").agg(F.count("*").alias("c")).collect())
+        cell_pop = {r["cell"]: r["c"] for r in pop_rows}
+        qvecs = {r["vec_id"]: r["embedding"] for r in
+                 idx.assigned.filter(F.col("vec_id") < n_queries).collect()}
+        exact_sets = exact_topk_batch(emb, qvecs, k)  # ONE ground-truth job
 
-    def one(qid: int) -> tuple[int, int]:
-        approx = {r["vec_id"] for r in
-                  idx.topk(qid, k, qvec=qvecs[qid]).collect()}
-        probes = idx.probe_cells(qvecs[qid])
-        return (len(exact_sets[qid] & approx),
-                sum(cell_pop.get(c, 0) for c in probes) - 1)
+        def one(qid: int) -> tuple[int, int]:
+            approx = {r["vec_id"] for r in
+                      idx.topk(qid, k, qvec=qvecs[qid]).collect()}
+            probes = idx.probe_cells(qvecs[qid])
+            return (len(exact_sets[qid] & approx),
+                    sum(cell_pop.get(c, 0) for c in probes) - 1)
 
-    hits = cands = 0
-    with ThreadPoolExecutor(max_workers=8) as pool:
-        for h, c in pool.map(one, range(n_queries)):
-            hits += h
-            cands += c
-    idx.assigned.unpersist()
+        hits, cands = _pooled_sums(one, n_queries)
+    finally:
+        idx.assigned.unpersist()
     return {
         "recall_at_k": round(hits / (n_queries * k), 4),
         "k": k,
@@ -480,8 +492,6 @@ def measure_recall(spark: SparkSession, sf_dir: str, n_queries: int = 20,
     * the per-query approx top-k jobs are independent and run from a
       small thread pool (guide §2.6) so the tiny TakeOrdered jobs
       overlap instead of serializing 20 job barriers."""
-    from concurrent.futures import ThreadPoolExecutor
-
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     # ONE collect serves both the deterministic plane vectors
     # (vec_ids 1..T*P, plane_tables' rule) and the query vectors
@@ -496,28 +506,26 @@ def measure_recall(spark: SparkSession, sf_dir: str, n_queries: int = 20,
     tables = [[head[t * N_PLANES + i + 1] for i in range(N_PLANES)]
               for t in range(N_TABLES)]
     bucketed = with_buckets(emb, tables).persist()
-    n = bucketed.count()
-    qvecs = {qid: head[qid] for qid in range(n_queries)}
-    bcols = [f"b{t}" for t in range(len(tables))]
-    bucket_rows = [tuple(r) for r in bucketed.select(*bcols).collect()]
-    exact_sets = exact_topk_batch(emb, qvecs, k)  # ONE ground-truth job
+    try:
+        n = bucketed.count()
+        qvecs = {qid: head[qid] for qid in range(n_queries)}
+        bcols = [f"b{t}" for t in range(len(tables))]
+        bucket_rows = [tuple(r) for r in bucketed.select(*bcols).collect()]
+        exact_sets = exact_topk_batch(emb, qvecs, k)  # ONE ground-truth job
 
-    def one(qid: int) -> tuple[int, int]:
-        approx_df = lsh_topk(bucketed, qid, k, tables=tables,
-                             qvec=qvecs[qid])
-        approx = {r["vec_id"] for r in approx_df.collect()}
-        probes = [frozenset(probe_set(bucket_of(qvecs[qid], planes)))
-                  for planes in tables]
-        c = sum(1 for row in bucket_rows
-                if any(b in p for b, p in zip(row, probes)))
-        return len(exact_sets[qid] & approx), c
+        def one(qid: int) -> tuple[int, int]:
+            approx_df = lsh_topk(bucketed, qid, k, tables=tables,
+                                 qvec=qvecs[qid])
+            approx = {r["vec_id"] for r in approx_df.collect()}
+            probes = [frozenset(probe_set(bucket_of(qvecs[qid], planes)))
+                      for planes in tables]
+            c = sum(1 for row in bucket_rows
+                    if any(b in p for b, p in zip(row, probes)))
+            return len(exact_sets[qid] & approx), c
 
-    hits = cands = 0
-    with ThreadPoolExecutor(max_workers=8) as pool:
-        for h, c in pool.map(one, range(n_queries)):
-            hits += h
-            cands += c
-    bucketed.unpersist()
+        hits, cands = _pooled_sums(one, n_queries)
+    finally:
+        bucketed.unpersist()
     return {
         "recall_at_k": round(hits / (n_queries * k), 4),
         "k": k,

@@ -254,7 +254,10 @@ def validate_for_percolation(node: A.Node, schema: IndexSchema) -> None:
         validate_for_percolation(node.child, schema)
 
 
-_EMPTY = F.array().cast("array<int>")
+def _empty() -> Column:
+    """The empty position array.  Built per use: a module-level Column
+    would need an active SparkSession at import time."""
+    return F.array().cast("array<int>")
 
 
 class _Compiler:
@@ -267,7 +270,7 @@ class _Compiler:
 
     # position array for one analyzed term (empty when absent)
     def _pos(self, field: str, term: str) -> Column:
-        return F.coalesce(self.tmap(field).getItem(term), _EMPTY)
+        return F.coalesce(self.tmap(field).getItem(term), _empty())
 
     def _has(self, field: str, term: str) -> Column:
         return self.tmap(field).getItem(term).isNotNull()
@@ -339,7 +342,8 @@ class _Compiler:
             pfx_pos = F.array_sort(F.flatten(F.filter(
                 F.transform(keys, lambda k: F.when(
                     k.startswith(node.prefix),
-                    F.element_at(self.tmap(node.field), k)).otherwise(_EMPTY)),
+                    F.element_at(self.tmap(node.field), k))
+                    .otherwise(_empty())),
                 lambda a: F.size(a) > 0)))
             pos = [self._pos(node.field, t) for t in node.terms]
             pos.append(pfx_pos)
@@ -403,7 +407,7 @@ class _Compiler:
     def _union_pos(self, field: str, alts) -> Column:
         arrs = [self._pos(field, t) for t in dict.fromkeys(alts)]
         if not arrs:
-            return _EMPTY
+            return _empty()
         if len(arrs) == 1:
             return arrs[0]
         return F.array_sort(F.array_distinct(F.concat(*arrs)))
@@ -411,7 +415,7 @@ class _Compiler:
     def _span_chain(self, node: A.SpanNearQ) -> Column:
         pos = [self._union_pos(node.field, c) for c in node.clauses]
         if not pos:
-            return _EMPTY
+            return _empty()
         return self._chain(node.field, pos, int(node.slop),
                            bool(node.in_order))
 

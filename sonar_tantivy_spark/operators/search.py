@@ -39,7 +39,7 @@ from __future__ import annotations
 
 import math
 import threading
-from collections import OrderedDict
+from collections import OrderedDict, defaultdict
 from typing import Any
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -2717,10 +2717,8 @@ class Searcher:
             .groupBy(child.alias("facet")).agg(F.count("*").alias("count"))
         )
 
-    _CALENDAR_INTERVALS = {
-        "minute": "minute", "hour": "hour", "day": "day", "week": "week",
-        "month": "month", "quarter": "quarter", "year": "year",
-    }
+    _CALENDAR_INTERVALS = ("minute", "hour", "day", "week", "month",
+                           "quarter", "year")
 
     def aggregations(self, node: A.Node, aggs: dict,
                      cands: DataFrame | None = None) -> dict:
@@ -2749,7 +2747,8 @@ class Searcher:
              name: {"string_stats":   {"field": f,
                                        "show_distribution": False}}}
 
-        Bucket aggs (terms / histogram / date_histogram) take metric
+        Bucket aggs (terms / histogram / date_histogram / composite /
+        multi_terms, and the one-bucket global / sampler) take metric
         sub-aggs (avg/sum/min/max/value_count/stats/cardinality) via an
         in-body or ES-sibling ``"aggs"`` block — computed as extra
         expressions in the bucket's own groupBy (one hash aggregation,
@@ -2788,328 +2787,22 @@ class Searcher:
                 norm[name] = {kind: body}
             else:
                 norm[name] = spec
-        aggs = norm
         fields: set[str] = set()
-        for name, spec in aggs.items():
+        runnable: list[tuple[str, Any]] = []
+        siblings: list[tuple[str, Any]] = []
+        for name, spec in norm.items():
             if not isinstance(spec, dict) or len(spec) != 1:
                 raise A.QueryError(f"agg {name!r}: expected one agg kind")
-            kind, body = next(iter(spec.items()))
-            if kind == "filters":
-                flt = (body or {}).get("filters")
-                if not isinstance(flt, dict) or not flt:
-                    raise A.QueryError(
-                        f"agg {name!r}: filters needs a dict of named "
-                        f"filter queries")
-                for fname, q in flt.items():  # fail at parse time
-                    A.parse_json(q, self.schema)
-                continue
-            if kind == "global":
-                # ES global agg: one bucket over the WHOLE index,
-                # ignoring the query — only meaningful with sub-aggs
-                metrics, th = self._sub_agg_plan(name, body or {})
-                if th is not None:
-                    raise A.QueryError(
-                        f"agg {name!r}: top_hits is not supported "
-                        f"under global")
-                if self._pipe_agg_plan(name, body or {}):
-                    raise A.QueryError(
-                        f"agg {name!r}: pipeline sub-aggs need a "
-                        f"bucket agg parent")
-                for sub_name, skind, sf in metrics:
-                    sdef = self.schema.field(sf)
-                    if sdef is None or not sdef.stored:
-                        raise A.QueryError(
-                            f"agg {name!r}: sub-agg {sub_name!r}: field "
-                            f"{sf!r} is not a stored field")
-                    if skind in ("avg", "sum", "min", "max", "stats") \
-                            and sdef.type not in ("i64", "u64", "f64"):
-                        raise A.QueryError(
-                            f"agg {name!r}: sub-agg {sub_name!r}: "
-                            f"{skind} needs a numeric field, "
-                            f"{sf!r} is {sdef.type}")
-                continue  # runs off its own all-docs frame, not matched
-            if kind in self._SIBLING_KINDS:
-                # ES sibling pipeline agg: reduces ANOTHER agg's bucket
-                # list ("parent>path"), deferred until parents ran
-                path = (body or {}).get("buckets_path", "")
-                parent = path.split(">", 1)[0]
-                if ">" not in path or parent not in aggs:
-                    raise A.QueryError(
-                        f"agg {name!r}: {kind} needs buckets_path "
-                        f"'<sibling bucket agg>>metric'")
-                pkind = next(iter(aggs[parent]))
-                if pkind not in ("terms", "histogram", "date_histogram",
-                                 "composite"):
-                    raise A.QueryError(
-                        f"agg {name!r}: buckets_path parent {parent!r} "
-                        f"is not a bucket agg")
-                continue
-            if kind == "composite":
-                sources = (body or {}).get("sources")
-                if not isinstance(sources, list) or not sources:
-                    raise A.QueryError(
-                        f"agg {name!r}: composite needs a sources list")
-                for s in sources:
-                    if not isinstance(s, dict) or len(s) != 1:
-                        raise A.QueryError(
-                            f"agg {name!r}: each composite source is "
-                            f"{{name: {{'terms': {{'field': ..}}}}}}")
-                    (sname, sspec), = s.items()
-                    sf = (sspec or {}).get("terms", {}).get("field") \
-                        if isinstance(sspec, dict) else None
-                    if not sf:
-                        raise A.QueryError(
-                            f"agg {name!r}: composite source {sname!r}: "
-                            f"only terms sources are supported")
-                    sdef = self.schema.field(sf)
-                    if sdef is None or not sdef.stored:
-                        raise A.QueryError(
-                            f"agg {name!r}: composite source {sname!r}: "
-                            f"field {sf!r} is not a stored field")
-                    fields.add(sf)
-                metrics, th = self._sub_agg_plan(name, body)
-                if th is not None:
-                    raise A.QueryError(
-                        f"agg {name!r}: top_hits is not supported "
-                        f"under composite")
-                for sub_name, skind, sf in metrics:
-                    sdef = self.schema.field(sf)
-                    if sdef is None or not sdef.stored:
-                        raise A.QueryError(
-                            f"agg {name!r}: sub-agg {sub_name!r}: field "
-                            f"{sf!r} is not a stored field")
-                    fields.add(sf)
-                continue
-            if kind == "multi_terms":
-                tlist = (body or {}).get("terms")
-                if not isinstance(tlist, list) or len(tlist) < 2:
-                    raise A.QueryError(
-                        f"agg {name!r}: multi_terms needs a list of >= 2 "
-                        f"{{'field': ..}} terms")
-                for t in tlist:
-                    tf = (t or {}).get("field") if isinstance(t, dict) \
-                        else None
-                    if not tf:
-                        raise A.QueryError(
-                            f"agg {name!r}: each multi_terms term is "
-                            f"{{'field': ..}}")
-                    tdef = self.schema.field(tf)
-                    if tdef is None or not tdef.stored:
-                        raise A.QueryError(
-                            f"agg {name!r}: field {tf!r} is not a "
-                            f"stored field")
-                    fields.add(tf)
-                metrics, th = self._sub_agg_plan(name, body)
-                if th is not None:
-                    raise A.QueryError(
-                        f"agg {name!r}: a top_hits sub-agg is only "
-                        f"supported under a terms agg")
-                for sub_name, skind, sf in metrics:
-                    sdef = self.schema.field(sf)
-                    if sdef is None or not sdef.stored:
-                        raise A.QueryError(
-                            f"agg {name!r}: sub-agg {sub_name!r}: field "
-                            f"{sf!r} is not a stored field")
-                    fields.add(sf)
-                continue
-            if kind in ("sampler", "diversified_sampler"):
-                ss = int((body or {}).get("shard_size", 100))
-                if ss <= 0:
-                    raise A.QueryError(
-                        f"agg {name!r}: sampler shard_size must be > 0")
-                if kind == "diversified_sampler":
-                    divf = (body or {}).get("field")
-                    ddef = self.schema.field(divf) if divf else None
-                    if ddef is None or not ddef.stored:
-                        raise A.QueryError(
-                            f"agg {name!r}: diversified_sampler needs a "
-                            f"stored dedup field, {divf!r} is not one")
-                    if int((body or {}).get("max_docs_per_value", 1)) < 1:
-                        raise A.QueryError(
-                            f"agg {name!r}: max_docs_per_value must "
-                            f"be >= 1")
-                metrics, th = self._sub_agg_plan(name, body or {})
-                if th is not None:
-                    raise A.QueryError(
-                        f"agg {name!r}: top_hits is not supported "
-                        f"under sampler")
-                if self._pipe_agg_plan(name, body or {}):
-                    raise A.QueryError(
-                        f"agg {name!r}: pipeline sub-aggs need a "
-                        f"bucket agg parent")
-                for sub_name, skind, sf in metrics:
-                    sdef = self.schema.field(sf)
-                    if sdef is None or not sdef.stored:
-                        raise A.QueryError(
-                            f"agg {name!r}: sub-agg {sub_name!r}: field "
-                            f"{sf!r} is not a stored field")
-                continue  # fields join happens off the SAMPLE frame
-            if kind == "top_metrics":
-                mlist = (body or {}).get("metrics")
-                if isinstance(mlist, dict):
-                    mlist = [mlist]
-                srt = (body or {}).get("sort")
-                if not isinstance(mlist, list) or not mlist \
-                        or not isinstance(srt, dict) or len(srt) != 1:
-                    raise A.QueryError(
-                        f"agg {name!r}: top_metrics needs metrics "
-                        f"[{{'field': ..}}] and sort {{field: asc|desc}}")
-                (sfield, sdir), = srt.items()
-                if str(sdir).lower() not in ("asc", "desc"):
-                    raise A.QueryError(
-                        f"agg {name!r}: sort direction must be asc|desc")
-                for mf in [m.get("field") for m in mlist] + [sfield]:
-                    mdef = self.schema.field(mf) if mf else None
-                    if mdef is None or not mdef.stored:
-                        raise A.QueryError(
-                            f"agg {name!r}: field {mf!r} is not a "
-                            f"stored field")
-                    fields.add(mf)
-                continue
-            if kind == "t_test":
-                ttype = str((body or {}).get("type", "heteroscedastic"))
-                if ttype not in ("paired", "homoscedastic",
-                                 "heteroscedastic"):
-                    raise A.QueryError(
-                        f"agg {name!r}: t_test type must be paired/"
-                        f"homoscedastic/heteroscedastic")
-                for part in ("a", "b"):
-                    pf = ((body or {}).get(part) or {}).get("field")
-                    pdef = self.schema.field(pf) if pf else None
-                    if pdef is None or not pdef.stored:
-                        raise A.QueryError(
-                            f"agg {name!r}: t_test needs a.field and "
-                            f"b.field (stored), {pf!r} is not")
-                    if pdef.type not in ("i64", "u64", "f64"):
-                        raise A.QueryError(
-                            f"agg {name!r}: t_test needs numeric "
-                            f"fields, {pf!r} is {pdef.type}")
-                    fields.add(pf)
-                continue
-            if kind == "matrix_stats":
-                mfields = (body or {}).get("fields")
-                if not isinstance(mfields, list) or len(mfields) < 2:
-                    raise A.QueryError(
-                        f"agg {name!r}: matrix_stats needs >= 2 fields")
-                for mf in mfields:
-                    mdef = self.schema.field(mf) if mf else None
-                    if mdef is None or not mdef.stored:
-                        raise A.QueryError(
-                            f"agg {name!r}: field {mf!r} is not a "
-                            f"stored field")
-                    if mdef.type not in ("i64", "u64", "f64"):
-                        raise A.QueryError(
-                            f"agg {name!r}: matrix_stats needs numeric "
-                            f"fields, {mf!r} is {mdef.type}")
-                    fields.add(mf)
-                continue
-            if kind == "weighted_avg":
-                for part in ("value", "weight"):
-                    pf = ((body or {}).get(part) or {}).get("field")
-                    if not pf:
-                        raise A.QueryError(
-                            f"agg {name!r}: weighted_avg needs "
-                            f"value.field and weight.field")
-                    pdef = self.schema.field(pf)
-                    if pdef is None or not pdef.stored:
-                        raise A.QueryError(
-                            f"agg {name!r}: field {pf!r} is not a "
-                            f"stored field")
-                    if pdef.type not in ("i64", "u64", "f64"):
-                        raise A.QueryError(
-                            f"agg {name!r}: weighted_avg needs numeric "
-                            f"fields, {pf!r} is {pdef.type}")
-                    fields.add(pf)
-                continue
-            if kind == "adjacency_matrix":
-                flt = (body or {}).get("filters")
-                if not isinstance(flt, dict) or not flt:
-                    raise A.QueryError(
-                        f"agg {name!r}: adjacency_matrix needs a dict "
-                        f"of named filter queries")
-                for fname, q in flt.items():
-                    if "&" in fname:
-                        raise A.QueryError(
-                            f"agg {name!r}: filter name {fname!r} may "
-                            f"not contain '&' (the intersection "
-                            f"separator)")
-                    A.parse_json(q, self.schema)  # fail at parse time
-                continue
-            f = (body or {}).get("field")
-            if not f:
-                raise A.QueryError(f"agg {name!r}: missing field")
-            fdef = self.schema.field(f)
-            if kind == "significant_terms":
-                # runs off the POSTINGS (term space), not the doc store
-                if fdef is None or not fdef.indexed:
-                    raise A.QueryError(
-                        f"agg {name!r}: significant_terms needs an "
-                        f"indexed field, {f!r} is not")
-                continue
-            if kind == "significant_text":
-                # re-ANALYZES the stored text of matched docs, so the
-                # field must be stored AND carry a tokenizer; the
-                # background stays the termdict (the field is indexed
-                # here — ES supports un-indexed text, this engine's
-                # background statistics come from its own postings)
-                if fdef is None or not fdef.stored \
-                        or not fdef.indexed or fdef.tokenizer is None:
-                    raise A.QueryError(
-                        f"agg {name!r}: significant_text needs a "
-                        f"stored indexed text field, {f!r} is not one")
-                continue
-            if fdef is None or not fdef.stored:
-                raise A.QueryError(
-                    f"agg {name!r}: field {f!r} is not a stored field")
-            # ES typing rules: numeric metrics/histograms need numeric
-            # fields, date_histogram needs a date — fail at parse time
-            # instead of as an executor-side ANSI cast error
-            if kind in ("stats", "extended_stats", "percentiles",
-                        "percentile_ranks", "histogram", "range",
-                        "avg", "sum", "min", "max",
-                        "median_absolute_deviation", "boxplot") \
-                    and fdef.type not in ("i64", "u64", "f64"):
-                raise A.QueryError(
-                    f"agg {name!r}: {kind} needs a numeric field, "
-                    f"{f!r} is {fdef.type}")
-            if kind in ("date_histogram", "auto_date_histogram") \
-                    and fdef.type != "date":
-                raise A.QueryError(
-                    f"agg {name!r}: {kind} needs a date field, "
-                    f"{f!r} is {fdef.type}")
-            if kind == "auto_date_histogram" \
-                    and int((body or {}).get("buckets", 10)) < 1:
-                raise A.QueryError(
-                    f"agg {name!r}: buckets must be >= 1")
-            if kind == "string_stats" and fdef.type != "text":
-                raise A.QueryError(
-                    f"agg {name!r}: string_stats needs a text field, "
-                    f"{f!r} is {fdef.type}")
-            if kind in ("terms", "histogram", "date_histogram"):
-                self._pipe_agg_plan(name, body)  # fail-fast validation
-                metrics, th = self._sub_agg_plan(name, body)
-                if th is not None and kind != "terms":
-                    raise A.QueryError(
-                        f"agg {name!r}: a top_hits sub-agg is only "
-                        f"supported under a terms agg")
-                for sub_name, skind, sf in metrics:
-                    sdef = self.schema.field(sf)
-                    if sdef is None or not sdef.stored:
-                        raise A.QueryError(
-                            f"agg {name!r}: sub-agg {sub_name!r}: field "
-                            f"{sf!r} is not a stored field")
-                    if skind in ("avg", "sum", "min", "max", "stats") \
-                            and sdef.type not in ("i64", "u64", "f64"):
-                        raise A.QueryError(
-                            f"agg {name!r}: sub-agg {sub_name!r}: "
-                            f"{skind} needs a numeric field, "
-                            f"{sf!r} is {sdef.type}")
-                    fields.add(sf)
-            elif "aggs" in (body or {}):
-                raise A.QueryError(
-                    f"agg {name!r}: sub-aggs are only supported under "
-                    f"bucket aggs (terms/histogram/date_histogram)")
-            fields.add(f)
+            (kind, body), = spec.items()
+            family = self._AGG_FAMILIES.get(kind)
+            if family is None:
+                raise A.QueryError(f"agg {name!r}: unknown kind {kind!r}")
+            need, run = family(self, name, kind, body or {}, norm)
+            fields.update(need)
+            # sibling pipeline aggs run over the other aggs' REDUCED
+            # buckets — deferred until every parent has its output
+            (siblings if kind in self._SIBLING_KINDS
+             else runnable).append((name, run))
         if cands is None:
             cands = self.candidates(node)
         keys = cands.select("segment_id", "docid")
@@ -3125,733 +2818,13 @@ class Searcher:
                     and bound * _BYTES_PER_KEY <= _BCAST_KEY_BYTES_CAP:
                 keys = F.broadcast(keys)
             matched = keys.join(docs, on=["segment_id", "docid"]).persist()
-        else:  # significant_terms-only request: no doc-store join at all
+        else:  # no agg reads a stored field: no doc-store join at all
             matched = keys.persist()
         try:
-            out: dict[str, Any] = {}
-            siblings: list[tuple[str, str, dict]] = []
-
-            # one agg request = one closure; independent requests are
-            # submitted concurrently below (guide §2.6) — each is its
-            # own small Spark job over the shared persisted ``matched``
-            # frame, so overlapping them fills the cluster instead of
-            # serializing one job barrier per agg.  Writes go to
-            # distinct ``out`` keys, so the shared dict is safe.
-            def _exec_one(name: str, kind: str, body) -> None:
-                if kind == "significant_terms":
-                    out[name] = self._sig_terms(body, matched)
-                    return
-                if kind == "significant_text":
-                    out[name] = self._sig_text(body, matched)
-                    return
-                if kind == "global":
-                    # whole-index bucket (tombstone-filtered like every
-                    # other surface): count + metric sub-aggs in ONE
-                    # aggregation over the all-docs candidate keys
-                    metrics, _ = self._sub_agg_plan(name, body or {})
-                    gkeys = (self.candidates(A.AllQ())
-                             .select("segment_id", "docid"))
-                    gfields = sorted({f for _, _, f in metrics})
-                    gm = gkeys
-                    if gfields:
-                        gdocs = self._table("docs").select(
-                            "segment_id", "docid", *gfields)
-                        gm = gkeys.join(gdocs, on=["segment_id", "docid"])
-                    row = gm.agg(F.count("*").alias("doc_count"),
-                                 *self._metric_exprs(metrics)).collect()[0]
-                    out[name] = {"doc_count": int(row["doc_count"]),
-                                 **self._shape_metrics(metrics, row)}
-                    return
-                if kind == "filters":
-                    # ES filters agg: one named bucket per sub-query,
-                    # each bucket counts matched docs ALSO matching the
-                    # filter — a left-semi join of the (persisted)
-                    # match keys against the filter's candidate keys,
-                    # so each filter costs one postings scan, never a
-                    # rescore of the main query
-                    mkeys = matched.select("segment_id", "docid")
-                    buckets = {}
-                    for fname, q in body["filters"].items():
-                        sub = A.parse_json(q, self.schema)
-                        skeys = (self.candidates(sub)
-                                 .select("segment_id", "docid"))
-                        buckets[fname] = {"doc_count": int(
-                            mkeys.join(skeys, on=["segment_id", "docid"],
-                                       how="left_semi").count())}
-                    out[name] = {"buckets": buckets}
-                    return
-                if kind == "composite":
-                    # ES composite agg: deterministic multi-source key
-                    # paging.  ONE hash aggregation on the source tuple
-                    # (map-side partials), then the after-key predicate
-                    # prunes BEFORE the ordered limit — page N costs one
-                    # agg + top-size under the key's total order, never
-                    # a depth-(N·size) re-rank, which is what pages a
-                    # 100 TB match set to exhaustion.
-                    snames, sfields = [], []
-                    for s in body["sources"]:
-                        (sname, sspec), = s.items()
-                        snames.append(sname)
-                        sfields.append(sspec["terms"]["field"])
-                    size = int(body.get("size", 10))
-                    after = body.get("after")
-                    metrics, _ = self._sub_agg_plan(name, body)
-                    b = matched
-                    for sf in sfields:  # ES: missing any source → out
-                        b = b.filter(F.col(sf).isNotNull())
-                    g = (b.groupBy(*[F.col(sf).alias(sn)
-                                     for sn, sf in zip(snames, sfields)])
-                         .agg(F.count("*").alias("doc_count"),
-                              *self._metric_exprs(metrics)))
-                    if after:
-                        if set(after) != set(snames):
-                            raise A.QueryError(
-                                f"agg {name!r}: after key must name "
-                                f"every source")
-                        pred, eq = None, None
-                        for sn in snames:  # strict lexicographic >
-                            gt = F.col(sn) > F.lit(after[sn])
-                            step = gt if eq is None else eq & gt
-                            pred = step if pred is None else pred | step
-                            e = F.col(sn) == F.lit(after[sn])
-                            eq = e if eq is None else eq & e
-                        g = g.filter(pred)
-                    rows = (g.orderBy(*[F.asc(sn) for sn in snames])
-                            .limit(size).collect())
-                    buckets = [
-                        {"key": {sn: r[sn] for sn in snames},
-                         "doc_count": int(r["doc_count"]),
-                         **self._shape_metrics(metrics, r)}
-                        for r in rows]
-                    out[name] = {"buckets": buckets}
-                    if len(buckets) == size:
-                        out[name]["after_key"] = dict(buckets[-1]["key"])
-                    return
-                if kind == "multi_terms":
-                    # ES multi_terms: buckets keyed by a TUPLE of field
-                    # values — the same ONE hash aggregation as terms
-                    # (groupBy on the tuple), metric sub-aggs riding it;
-                    # a doc missing ANY key field falls out (ES rule)
-                    tfields = [t["field"] for t in body["terms"]]
-                    size = int(body.get("size", 10))
-                    metrics, _ = self._sub_agg_plan(name, body)
-                    b = matched
-                    for tf in tfields:
-                        b = b.filter(F.col(tf).isNotNull())
-                    kcols = [F.col(tf).alias(f"__k{i}")
-                             for i, tf in enumerate(tfields)]
-                    grouped = (b.groupBy(*kcols)
-                               .agg(F.count("*").alias("doc_count"),
-                                    *self._metric_exprs(metrics)))
-                    rows = (grouped.orderBy(
-                        F.desc("doc_count"),
-                        *[F.asc(f"__k{i}") for i in range(len(tfields))])
-                        .limit(size).collect())
-                    buckets = [
-                        {"key": [r[f"__k{i}"]
-                                 for i in range(len(tfields))],
-                         "key_as_string": "|".join(
-                             str(r[f"__k{i}"])
-                             for i in range(len(tfields))),
-                         "doc_count": int(r["doc_count"]),
-                         **self._shape_metrics(metrics, r)}
-                        for r in rows]
-                    out[name] = {"buckets": buckets}
-                    return
-                if kind == "weighted_avg":
-                    # ES weighted_avg: sum(v*w)/sum(w) over rows where
-                    # BOTH are present — one aggregation, map-side
-                    # partials; null value with present weight counts
-                    # the weight only if value_missing is set (not
-                    # supported: nulls drop, the ES default)
-                    vf = F.col(body["value"]["field"]).cast("double")
-                    wf = F.col(body["weight"]["field"]).cast("double")
-                    both = matched.filter(vf.isNotNull()
-                                          & wf.isNotNull())
-                    r = both.agg(
-                        F.sum(vf * wf).alias("vw"),
-                        F.sum(wf).alias("w")).collect()[0]
-                    out[name] = {"value": (
-                        None if r["w"] is None or r["w"] == 0
-                        else float(r["vw"]) / float(r["w"]))}
-                    return
-                if kind in ("sampler", "diversified_sampler"):
-                    # ES sampler agg: sub-aggs over the best-scoring
-                    # shard_size docs PER SHARD.  The engine's shard is
-                    # the segment: ONE window over the scored candidate
-                    # set (rank by score desc, docid asc within each
-                    # segment — deterministic where ES is
-                    # shard-layout-dependent), then the doc-store join
-                    # and one aggregation over the sample only.  The
-                    # window is hash-partitioned by segment_id and
-                    # top-k bounded, so no executor ever sorts more
-                    # than one segment's matches.
-                    # diversified_sampler: same plan with ONE extra
-                    # window ranked per (segment, dedup-field value) —
-                    # keep max_docs_per_value best per value BEFORE the
-                    # shard_size cut (the ES de-duplication order); the
-                    # dedup field joins in ahead of the windows, null
-                    # values are exempt from the cap (the ES rule:
-                    # docs missing the field are not de-duplicated).
-                    from pyspark.sql import Window
-                    ss = int(body.get("shard_size", 100))
-                    metrics, _ = self._sub_agg_plan(name, body)
-                    sample = cands.select("segment_id", "docid", "score")
-                    if kind == "diversified_sampler":
-                        divf = body["field"]
-                        mdv = int(body.get("max_docs_per_value", 1))
-                        ddocs = self._table("docs").select(
-                            "segment_id", "docid", divf)
-                        sample = sample.join(
-                            ddocs, on=["segment_id", "docid"], how="left")
-                        wv = Window.partitionBy(
-                            "segment_id", divf).orderBy(
-                            F.desc("score"), F.asc("docid"))
-                        sample = (sample
-                                  .withColumn("__rv", F.row_number().over(wv))
-                                  .filter(F.col(divf).isNull()
-                                          | (F.col("__rv") <= mdv))
-                                  .drop("__rv", divf))
-                    w = Window.partitionBy("segment_id").orderBy(
-                        F.desc("score"), F.asc("docid"))
-                    sample = (sample
-                              .withColumn("__r", F.row_number().over(w))
-                              .filter(F.col("__r") <= ss)
-                              .drop("__r"))
-                    sfields = sorted({sf for _, _, sf in metrics})
-                    if sfields:
-                        sdocs = self._table("docs").select(
-                            "segment_id", "docid", *sfields)
-                        sample = sample.join(
-                            sdocs, on=["segment_id", "docid"])
-                    r = sample.agg(F.count("*").alias("doc_count"),
-                                   *self._metric_exprs(metrics)).collect()[0]
-                    out[name] = {"doc_count": int(r["doc_count"]),
-                                 **self._shape_metrics(metrics, r)}
-                    return
-                if kind == "top_metrics":
-                    # ES top_metrics: the metric fields of the top
-                    # ``size`` docs under an explicit field sort — ONE
-                    # TakeOrderedAndProject over the matched frame
-                    # (never a full sort), docid tie-break pinned for
-                    # determinism
-                    mlist = body["metrics"]
-                    if isinstance(mlist, dict):
-                        mlist = [mlist]
-                    (sfield, sdir), = body["sort"].items()
-                    size = int(body.get("size", 1))
-                    desc = str(sdir).lower() == "desc"
-                    sc = F.col(sfield)
-                    rows = (matched.filter(sc.isNotNull())
-                            .orderBy(sc.desc() if desc else sc.asc(),
-                                     F.asc("segment_id"), F.asc("docid"))
-                            .limit(size).collect())
-                    out[name] = {"top": [
-                        {"sort": [r[sfield]],
-                         "metrics": {m["field"]: r[m["field"]]
-                                     for m in mlist}}
-                        for r in rows]}
-                    return
-                if kind == "t_test":
-                    # ES t_test agg: Student's t statistic between two
-                    # numeric fields — ONE aggregation of count/avg/
-                    # var_samp (paired: over the per-row difference;
-                    # unpaired: per field), driver-side arithmetic on
-                    # the 1-row result.  Pinned: rows missing either
-                    # field drop (the ES paired rule, applied to both
-                    # modes so a/b stay comparable).
-                    import math as _m
-                    ttype = str(body.get("type", "heteroscedastic"))
-                    va = F.col(body["a"]["field"]).cast("double")
-                    vb = F.col(body["b"]["field"]).cast("double")
-                    both = matched.filter(va.isNotNull() & vb.isNotNull())
-                    if ttype == "paired":
-                        d = va - vb
-                        r = both.agg(F.count(d).alias("n"),
-                                     F.avg(d).alias("m"),
-                                     F.var_samp(d).alias("v")).collect()[0]
-                        n = int(r["n"])
-                        t = (None if n < 2 or not r["v"]
-                             else float(r["m"])
-                             / _m.sqrt(float(r["v"]) / n))
-                    else:
-                        r = both.agg(
-                            F.count(va).alias("na"), F.avg(va).alias("ma"),
-                            F.var_samp(va).alias("va"),
-                            F.count(vb).alias("nb"), F.avg(vb).alias("mb"),
-                            F.var_samp(vb).alias("vb")).collect()[0]
-                        na, nb = int(r["na"]), int(r["nb"])
-                        if na < 2 or nb < 2 \
-                                or r["va"] is None or r["vb"] is None:
-                            t = None
-                        elif ttype == "homoscedastic":
-                            sp2 = (((na - 1) * float(r["va"])
-                                    + (nb - 1) * float(r["vb"]))
-                                   / (na + nb - 2))
-                            den = _m.sqrt(sp2 * (1.0 / na + 1.0 / nb))
-                            t = ((float(r["ma"]) - float(r["mb"])) / den
-                                 if den else None)
-                        else:  # heteroscedastic (Welch)
-                            den = _m.sqrt(float(r["va"]) / na
-                                          + float(r["vb"]) / nb)
-                            t = ((float(r["ma"]) - float(r["mb"])) / den
-                                 if den else None)
-                    out[name] = {"value": t}
-                    return
-                if kind == "matrix_stats":
-                    # ES matrix_stats: per-field moments + pairwise
-                    # covariance/correlation over rows holding EVERY
-                    # field (the ES listwise-deletion rule) — ONE
-                    # aggregation carrying all the moment expressions
-                    # (map-side partials; O(k²) expressions for k
-                    # fields, k is tiny).  Variance/covariance are
-                    # SAMPLE (n-1) like ES; skewness/kurtosis follow
-                    # Spark's population definitions (g1, g2 excess) —
-                    # pinned here, asserted vs numpy in pytest.
-                    mfields = body["fields"]
-                    cols = {mf: F.col(mf).cast("double")
-                            for mf in mfields}
-                    b = matched
-                    for mf in mfields:
-                        b = b.filter(cols[mf].isNotNull())
-                    exprs = [F.count("*").alias("n")]
-                    for mf in mfields:
-                        exprs += [
-                            F.avg(cols[mf]).alias(f"m__{mf}"),
-                            F.var_samp(cols[mf]).alias(f"v__{mf}"),
-                            F.skewness(cols[mf]).alias(f"s__{mf}"),
-                            F.kurtosis(cols[mf]).alias(f"k__{mf}")]
-                    for i, fa in enumerate(mfields):
-                        for fb in mfields[i + 1:]:
-                            exprs += [
-                                F.covar_samp(cols[fa], cols[fb])
-                                .alias(f"c__{fa}__{fb}"),
-                                F.corr(cols[fa], cols[fb])
-                                .alias(f"r__{fa}__{fb}")]
-                    r = b.agg(*exprs).collect()[0]
-                    n = int(r["n"])
-
-                    def _pair(pre, fa, fb, diag):
-                        if fa == fb:
-                            return diag
-                        key = (f"{pre}__{fa}__{fb}"
-                               if f"{pre}__{fa}__{fb}" in r.asDict()
-                               else f"{pre}__{fb}__{fa}")
-                        return (None if r[key] is None
-                                else float(r[key]))
-                    flds = []
-                    for mf in mfields:
-                        flds.append({
-                            "name": mf, "count": n,
-                            "mean": (None if r[f"m__{mf}"] is None
-                                     else float(r[f"m__{mf}"])),
-                            "variance": (None if r[f"v__{mf}"] is None
-                                         else float(r[f"v__{mf}"])),
-                            "skewness": (None if r[f"s__{mf}"] is None
-                                         else float(r[f"s__{mf}"])),
-                            "kurtosis": (None if r[f"k__{mf}"] is None
-                                         else float(r[f"k__{mf}"])),
-                            "covariance": {
-                                fo: _pair("c", mf, fo,
-                                          (None if r[f"v__{mf}"] is None
-                                           else float(r[f"v__{mf}"])))
-                                for fo in mfields},
-                            "correlation": {
-                                fo: _pair("r", mf, fo, 1.0)
-                                for fo in mfields}})
-                    out[name] = {"doc_count": n, "fields": flds}
-                    return
-                if kind == "adjacency_matrix":
-                    # ES adjacency_matrix: one bucket per named filter
-                    # (matched ∩ filter) plus one per PAIR
-                    # ("a&b" = matched ∩ a ∩ b).  Each filter costs one
-                    # postings scan for its candidate keys; the
-                    # intersections are key-only hash joins — never a
-                    # rescore of the main query.  Filter count is tiny
-                    # (ES caps at 100), so the pair loop is bounded.
-                    mkeys = matched.select("segment_id", "docid")
-                    fkeys = {}
-                    for fname in sorted(body["filters"]):
-                        sub = A.parse_json(body["filters"][fname],
-                                           self.schema)
-                        fkeys[fname] = (
-                            self.candidates(sub)
-                            .select("segment_id", "docid")
-                            .join(mkeys, on=["segment_id", "docid"],
-                                  how="left_semi").persist())
-                    try:
-                        buckets = []
-                        names = sorted(fkeys)
-                        for fname in names:
-                            n = int(fkeys[fname].count())
-                            if n:
-                                buckets.append({"key": fname,
-                                                "doc_count": n})
-                        for i, a in enumerate(names):
-                            for bn in names[i + 1:]:
-                                n = int(fkeys[a].join(
-                                    fkeys[bn],
-                                    on=["segment_id", "docid"],
-                                    how="left_semi").count())
-                                if n:  # ES omits empty intersections
-                                    buckets.append(
-                                        {"key": f"{a}&{bn}",
-                                         "doc_count": n})
-                        out[name] = {"buckets": buckets}
-                    finally:
-                        for df in fkeys.values():
-                            df.unpersist()
-                    return
-                col = F.col(body["field"])
-                # ES rule: docs missing the field fall out of every agg
-                # (count(col)/min/max/avg/sum skip nulls natively; the
-                # bucketed aggs must not grow a null bucket)
-                bucketed = matched.filter(col.isNotNull())
-                if kind == "terms":
-                    size = int(body.get("size", 10))
-                    metrics, th = self._sub_agg_plan(name, body)
-                    # ES order knob: _count (default) / _key / a
-                    # single-value metric sub-agg's name; all resolve
-                    # to a column of the SAME one hash aggregation, so
-                    # ordering by a metric costs nothing extra — the
-                    # ordered limit stays TakeOrderedAndProject
-                    order = body.get("order") or {"_count": "desc"}
-                    if not isinstance(order, dict) or len(order) != 1:
-                        raise A.QueryError(
-                            f"agg {name!r}: order is {{path: asc|desc}}")
-                    (okey, odir), = order.items()
-                    desc = str(odir).lower() == "desc"
-                    if okey == "_count":
-                        ocols = [F.desc("doc_count") if desc
-                                 else F.asc("doc_count"), F.asc("key")]
-                    elif okey == "_key":
-                        ocols = [F.desc("key") if desc else F.asc("key")]
-                    else:
-                        mi = next((i for i, (sn, mk, _) in
-                                   enumerate(metrics)
-                                   if sn == okey
-                                   and mk not in ("stats",)), None)
-                        if mi is None:
-                            raise A.QueryError(
-                                f"agg {name!r}: order key {okey!r} is "
-                                f"not _count/_key/a single-value "
-                                f"metric sub-agg")
-                        oc = F.col(f"__s{mi}_value")
-                        ocols = [oc.desc_nulls_last() if desc
-                                 else oc.asc_nulls_last(), F.asc("key")]
-                    mdc = int(body.get("min_doc_count", 1))
-                    grouped = (bucketed.groupBy(col.alias("key"))
-                               .agg(F.count("*").alias("doc_count"),
-                                    *self._metric_exprs(metrics)))
-                    if mdc > 1:
-                        grouped = grouped.filter(
-                            F.col("doc_count") >= mdc)
-                    rows = grouped.orderBy(*ocols).limit(size).collect()
-                    buckets = [{"key": r["key"], "doc_count": r["doc_count"],
-                                **self._shape_metrics(metrics, r)}
-                               for r in rows]
-                    buckets = self._apply_pipes(
-                        name, buckets, self._pipe_agg_plan(name, body))
-                    if th and buckets:
-                        th_name, th_size = th
-                        per_key = self._bucket_top_hits(
-                            cands, body["field"],
-                            [b["key"] for b in buckets], th_size)
-                        for b in buckets:
-                            b[th_name] = {"hits": per_key.get(b["key"], [])}
-                    out[name] = {"buckets": buckets}
-                elif kind == "histogram":
-                    interval = float(body["interval"])
-                    if interval <= 0:
-                        raise A.QueryError(f"agg {name!r}: interval must be > 0")
-                    metrics, _ = self._sub_agg_plan(name, body)
-                    key = (F.floor(col.cast("double") / interval)
-                           * interval).alias("key")
-                    mdc = int(body.get("min_doc_count", 1))
-                    grouped = (bucketed.groupBy(key)
-                               .agg(F.count("*").alias("doc_count"),
-                                    *self._metric_exprs(metrics)))
-                    if mdc > 1:
-                        grouped = grouped.filter(
-                            F.col("doc_count") >= mdc)
-                    rows = grouped.orderBy("key").collect()
-                    buckets = [
-                        {"key": float(r["key"]), "doc_count": r["doc_count"],
-                         **self._shape_metrics(metrics, r)}
-                        for r in rows]
-                    if mdc == 0 and len(buckets) > 1:
-                        # ES min_doc_count=0: fill interior gaps with
-                        # empty buckets (doc_count 0, metrics null) —
-                        # a driver-side pass over the REDUCED bucket
-                        # list; this is what makes derivative /
-                        # moving_fn see evenly spaced buckets
-                        filled, expect = [], buckets[0]["key"]
-                        for b in buckets:
-                            while b["key"] - expect > interval / 2:
-                                filled.append({
-                                    "key": expect, "doc_count": 0,
-                                    **{sn: ({k: None for k in
-                                             ("count", "min", "max",
-                                              "avg", "sum")}
-                                            if mk == "stats"
-                                            else {"value": None})
-                                       for sn, mk, _ in metrics}})
-                                expect += interval
-                            filled.append(b)
-                            expect = b["key"] + interval
-                        buckets = filled
-                    out[name] = {"buckets": self._apply_pipes(
-                        name, buckets, self._pipe_agg_plan(name, body))}
-                elif kind == "date_histogram":
-                    unit = self._CALENDAR_INTERVALS.get(
-                        str(body.get("calendar_interval", "day")).lower())
-                    if unit is None:
-                        raise A.QueryError(
-                            f"agg {name!r}: unsupported calendar_interval")
-                    metrics, _ = self._sub_agg_plan(name, body)
-                    key = F.date_trunc(unit, col).alias("key")
-                    rows = (bucketed.groupBy(key)
-                            .agg(F.count("*").alias("doc_count"),
-                                 *self._metric_exprs(metrics))
-                            .orderBy("key").collect())
-                    buckets = [
-                        {"key_as_string": r["key"].isoformat(),
-                         "doc_count": r["doc_count"],
-                         **self._shape_metrics(metrics, r)}
-                        for r in rows]
-                    out[name] = {"buckets": self._apply_pipes(
-                        name, buckets, self._pipe_agg_plan(name, body))}
-                elif kind == "auto_date_histogram":
-                    # ES auto_date_histogram: pick the smallest calendar
-                    # interval keeping bucket count <= ``buckets``.
-                    # ONE min/max aggregation sizes the span driver-side
-                    # against a pinned seconds-per-unit ladder (month=30d,
-                    # year=365d — an estimate is fine: it only picks the
-                    # unit; the buckets themselves come from exact
-                    # date_trunc), then the same one-hash-agg plan as
-                    # date_histogram on the chosen unit.
-                    target = int(body.get("buckets", 10))
-                    span_r = bucketed.agg(
-                        F.min(col).alias("lo"),
-                        F.max(col).alias("hi")).collect()[0]
-                    ladder = [("second", 1), ("minute", 60),
-                              ("hour", 3600), ("day", 86400),
-                              ("month", 2592000), ("year", 31536000)]
-                    unit = "year"
-                    if span_r["lo"] is not None:
-                        span = (span_r["hi"] - span_r["lo"]).total_seconds()
-                        for u, secs in ladder:
-                            if span / secs + 1 <= target:
-                                unit = u
-                                break
-                    rows = (bucketed
-                            .groupBy(F.date_trunc(unit, col).alias("key"))
-                            .agg(F.count("*").alias("doc_count"))
-                            .orderBy("key").collect())
-                    out[name] = {
-                        "interval": unit,
-                        "buckets": [
-                            {"key_as_string": r["key"].isoformat(),
-                             "doc_count": int(r["doc_count"])}
-                            for r in rows]}
-                elif kind == "stats":
-                    r = matched.agg(
-                        F.count(col).alias("count"),
-                        F.min(col).alias("min"), F.max(col).alias("max"),
-                        F.avg(col).alias("avg"), F.sum(col).alias("sum"),
-                    ).collect()[0]
-                    out[name] = {k: r[k] for k in
-                                 ("count", "min", "max", "avg", "sum")}
-                elif kind == "extended_stats":
-                    v = col.cast("double")
-                    r = matched.agg(
-                        F.count(col).alias("count"),
-                        F.min(col).alias("min"), F.max(col).alias("max"),
-                        F.avg(col).alias("avg"), F.sum(col).alias("sum"),
-                        F.sum(v * v).alias("sum_of_squares"),
-                        F.var_pop(v).alias("variance"),
-                        F.stddev_pop(v).alias("std_deviation"),
-                    ).collect()[0]
-                    out[name] = {k: r[k] for k in
-                                 ("count", "min", "max", "avg", "sum",
-                                  "sum_of_squares", "variance",
-                                  "std_deviation")}
-                elif kind == "range":
-                    # ES range agg: [from, to) buckets, overlapping
-                    # allowed — ONE pass, each bucket a conditional sum
-                    ranges = body.get("ranges") or []
-                    if not ranges:
-                        raise A.QueryError(
-                            f"agg {name!r}: range needs ranges")
-                    v = col.cast("double")
-                    exprs, keys = [], []
-                    for i, rg in enumerate(ranges):
-                        lo, hi = rg.get("from"), rg.get("to")
-                        if lo is None and hi is None:
-                            raise A.QueryError(
-                                f"agg {name!r}: a range needs from/to")
-                        c = col.isNotNull()
-                        if lo is not None:
-                            c = c & (v >= float(lo))
-                        if hi is not None:
-                            c = c & (v < float(hi))
-                        exprs.append(F.sum(F.when(c, 1).otherwise(0))
-                                     .alias(f"r{i}"))
-                        keys.append(f"{lo if lo is not None else '*'}-"
-                                    f"{hi if hi is not None else '*'}")
-                    r = matched.agg(*exprs).collect()[0]
-                    out[name] = {"buckets": [
-                        {"key": k, "from": rg.get("from"),
-                         "to": rg.get("to"), "doc_count": int(r[f"r{i}"])}
-                        for i, (k, rg) in enumerate(zip(keys, ranges))]}
-                elif kind == "percentile_ranks":
-                    vals = [float(x) for x in body.get("values") or []]
-                    if not vals:
-                        raise A.QueryError(
-                            f"agg {name!r}: percentile_ranks needs values")
-                    v = col.cast("double")
-                    exprs = [
-                        (F.lit(100.0)
-                         * F.avg(F.when(v <= x, 1.0).otherwise(0.0)))
-                        .alias(f"p{i}")
-                        for i, x in enumerate(vals)]
-                    r = matched.filter(col.isNotNull()).agg(*exprs).collect()[0]
-                    out[name] = {"values": {
-                        str(x): (None if r[f"p{i}"] is None
-                                 else float(r[f"p{i}"]))
-                        for i, x in enumerate(vals)}}
-                elif kind == "percentiles":
-                    pcts = [float(p) for p in
-                            body.get("percents", [1, 5, 25, 50, 75, 95, 99])]
-                    fracs = F.array(*[F.lit(p / 100.0) for p in pcts])
-                    fn = F.percentile_approx if body.get("approx") \
-                        else F.percentile
-                    r = matched.agg(
-                        fn(col.cast("double"), fracs).alias("v")).collect()[0]
-                    vals = r["v"] or [None] * len(pcts)
-                    out[name] = {"values": {
-                        str(p): (None if v is None else float(v))
-                        for p, v in zip(pcts, vals)}}
-                elif kind == "cardinality":
-                    expr = (F.count_distinct(col) if body.get("exact")
-                            else F.approx_count_distinct(col))
-                    out[name] = {"value": int(
-                        matched.agg(expr.alias("v")).collect()[0]["v"])}
-                elif kind in ("avg", "sum", "min", "max"):
-                    v = matched.agg(getattr(F, kind)(col)
-                                    .alias("v")).collect()[0]["v"]
-                    out[name] = {"value": v}
-                elif kind == "value_count":
-                    out[name] = {"value": int(
-                        matched.agg(F.count(col).alias("v"))
-                        .collect()[0]["v"])}
-                elif kind == "missing":
-                    # ES missing agg: matched docs WITHOUT the field —
-                    # the complement of every other agg's null rule
-                    out[name] = {"doc_count": int(
-                        matched.filter(col.isNull()).count())}
-                elif kind == "rare_terms":
-                    # ES rare_terms: the LONG TAIL — buckets whose
-                    # doc_count <= max_doc_count, ordered count-asc
-                    # then key-asc.  ES bounds memory with a cuckoo
-                    # filter; the engine's exact equivalent is the one
-                    # hash aggregation + a driver-bounded limit
-                    # (max_buckets, default 1000) so the driver never
-                    # materialises an unbounded tail at corpus scale.
-                    mdc = int(body.get("max_doc_count", 1))
-                    cap = int(body.get("max_buckets", 1000))
-                    rows = (bucketed.groupBy(col.alias("key"))
-                            .agg(F.count("*").alias("doc_count"))
-                            .filter(F.col("doc_count") <= mdc)
-                            .orderBy(F.asc("doc_count"), F.asc("key"))
-                            .limit(cap).collect())
-                    out[name] = {"buckets": [
-                        {"key": r["key"],
-                         "doc_count": int(r["doc_count"])}
-                        for r in rows]}
-                elif kind == "median_absolute_deviation":
-                    # ES MAD: median(|x - median(x)|).  Exact by
-                    # default (two percentile passes over the persisted
-                    # match frame — deterministic, oracle-matchable);
-                    # "approx": true switches both passes to
-                    # percentile_approx (one-pass sketch each, the
-                    # 100 TB default, same rationale as percentiles).
-                    fn = F.percentile_approx if body.get("approx") \
-                        else F.percentile
-                    v = col.cast("double")
-                    m = matched.agg(
-                        fn(v, F.lit(0.5)).alias("m")).collect()[0]["m"]
-                    if m is None:
-                        out[name] = {"value": None}
-                    else:
-                        r = matched.agg(
-                            fn(F.abs(v - F.lit(float(m))), F.lit(0.5))
-                            .alias("mad")).collect()[0]["mad"]
-                        out[name] = {"value": (
-                            None if r is None else float(r))}
-                elif kind == "boxplot":
-                    # ES boxplot: min / q1 / q2 / q3 / max — ONE
-                    # aggregation (exact interpolated percentiles by
-                    # default; "approx": true for the sketch path)
-                    fn = F.percentile_approx if body.get("approx") \
-                        else F.percentile
-                    v = col.cast("double")
-                    r = matched.agg(
-                        F.min(v).alias("mn"), F.max(v).alias("mx"),
-                        fn(v, F.array(F.lit(0.25), F.lit(0.5),
-                                      F.lit(0.75))).alias("q"),
-                    ).collect()[0]
-                    q = r["q"] or [None, None, None]
-                    out[name] = {
-                        "min": r["mn"], "max": r["mx"],
-                        "q1": q[0], "q2": q[1], "q3": q[2]}
-                elif kind == "string_stats":
-                    # ES string_stats: count / min_length / max_length
-                    # / avg_length in ONE aggregation; with
-                    # "show_distribution": true also the Shannon
-                    # entropy of the CHARACTER distribution — a second
-                    # aggregation over exploded characters (distributed
-                    # char-frequency count; cardinality = alphabet
-                    # size, so the reduce is trivially bounded)
-                    ln = F.length(col)
-                    r = matched.agg(
-                        F.count(col).alias("count"),
-                        F.min(ln).alias("min_length"),
-                        F.max(ln).alias("max_length"),
-                        F.avg(ln.cast("double")).alias("avg_length"),
-                    ).collect()[0]
-                    st = {k: r[k] for k in ("count", "min_length",
-                                            "max_length", "avg_length")}
-                    if body.get("show_distribution"):
-                        cf = (matched.filter(col.isNotNull())
-                              .select(F.explode(F.split(col, ""))
-                                      .alias("ch"))
-                              .filter(F.col("ch") != "")
-                              .groupBy("ch")
-                              .agg(F.count("*").alias("n")))
-                        tot = cf.agg(F.sum("n").alias("t")) \
-                            .collect()[0]["t"]
-                        ent = 0.0
-                        if tot:
-                            probs = cf.select(
-                                (F.col("n").cast("double")
-                                 / float(tot)).alias("p")).collect()
-                            ent = -sum(p["p"] * math.log2(p["p"])
-                                       for p in probs)
-                        st["entropy"] = ent
-                    out[name] = st
-                else:
-                    raise A.QueryError(f"agg {name!r}: unknown kind {kind!r}")
-
-            runnable: list[tuple[str, str, Any]] = []
-            for name, spec in aggs.items():
-                kind, body = next(iter(spec.items()))
-                if kind in self._SIBLING_KINDS:
-                    # runs over a sibling's REDUCED buckets — defer
-                    # until every parent agg has produced its output
-                    siblings.append((name, kind, body or {}))
-                    continue
-                runnable.append((name, kind, body))
+            # independent aggs are submitted concurrently (guide §2.6) —
+            # each is its own small Spark job over the shared persisted
+            # ``matched`` frame, so overlapping them fills the cluster
+            # instead of serializing one job barrier per agg
             if len(runnable) > 1:
                 from concurrent.futures import ThreadPoolExecutor
 
@@ -3859,84 +2832,872 @@ class Searcher:
                 with ThreadPoolExecutor(
                         max_workers=min(4, len(runnable))) as pool, \
                         surface_all(futs):
-                    futs.extend(pool.submit(_exec_one, *t) for t in runnable)
+                    futs.extend(pool.submit(run, matched, cands)
+                                for _, run in runnable)
+                results = [fut.result() for fut in futs]
             else:
-                for t in runnable:
-                    _exec_one(*t)
-            for name, kind, body in siblings:
-                # ES sibling pipeline aggs (max/min/avg/sum/stats
-                # _bucket): a pure reduce over the parent's final
-                # bucket list — no distributed work, like the parent
-                # pipeline aggs in _apply_pipes
-                parent, _, sub = body["buckets_path"].partition(">")
-                bl = out[parent].get("buckets") or []
-                pairs = [(b.get("key", b.get("key_as_string")),
-                          self._bpath(b, sub or "doc_count")) for b in bl]
-                vv = [v for _, v in pairs if v is not None]
-                if kind in ("max_bucket", "min_bucket"):
-                    if not vv:
-                        out[name] = {"keys": [], "value": None}
-                    else:
-                        best = max(vv) if kind == "max_bucket" else min(vv)
-                        out[name] = {"keys": [k for k, v in pairs
-                                              if v == best],
-                                     "value": best}
-                elif kind == "avg_bucket":
-                    out[name] = {"value": sum(vv) / len(vv) if vv else None}
-                elif kind == "sum_bucket":
-                    out[name] = {"value": sum(vv) if vv else None}
-                elif kind == "percentiles_bucket":
-                    # exact linear-interpolated percentiles over the
-                    # reduced bucket values (ES uses the same exact
-                    # method here — the input is already tiny)
-                    pcts = [float(p) for p in
-                            body.get("percents", [1, 5, 25, 50, 75,
-                                                  95, 99])]
-                    sv = sorted(vv)
-                    vals_out = {}
-                    for p in pcts:
-                        if not sv:
-                            vals_out[str(p)] = None
-                            continue
-                        pos = (p / 100.0) * (len(sv) - 1)
-                        lo, hi = int(math.floor(pos)), int(math.ceil(pos))
-                        vals_out[str(p)] = (
-                            sv[lo] + (sv[hi] - sv[lo]) * (pos - lo))
-                    out[name] = {"values": vals_out}
-                elif kind == "extended_stats_bucket":
-                    n = len(vv)
-                    mean = sum(vv) / n if n else None
-                    var = (sum((x - mean) ** 2 for x in vv) / n
-                           if n else None)
-                    out[name] = {
-                        "count": n,
-                        "min": min(vv) if vv else None,
-                        "max": max(vv) if vv else None,
-                        "avg": mean,
-                        "sum": sum(vv) if vv else None,
-                        "sum_of_squares": (sum(x * x for x in vv)
-                                           if vv else None),
-                        "variance": var,
-                        "std_deviation": (math.sqrt(var)
-                                          if var is not None else None)}
-                else:  # stats_bucket
-                    out[name] = {
-                        "count": len(vv),
-                        "min": min(vv) if vv else None,
-                        "max": max(vv) if vv else None,
-                        "avg": sum(vv) / len(vv) if vv else None,
-                        "sum": sum(vv) if vv else None}
+                results = [run(matched, cands) for _, run in runnable]
+            out = {name: r for (name, _), r in zip(runnable, results)}
+            for name, reduce in siblings:
+                out[name] = reduce(out)
             return out
         finally:
             matched.unpersist()
 
+    # ----------------------------------------------------- agg families
+    # One family per agg kind (or group of kinds), looked up in
+    # _AGG_FAMILIES.  ``family(self, name, kind, body, aggs)`` raises
+    # QueryError on a bad body and returns ``(fields, run)``: the stored
+    # fields joined into ``matched`` and ``run(matched, cands) -> dict``,
+    # which closes over what validation parsed.  Sibling pipeline
+    # families return ``reduce(out) -> dict`` instead.
+
+    _NUMERIC = ("i64", "u64", "f64")
+
+    def _agg_field(self, name: str, f, types: tuple = (), need: str = "",
+                   where: str = ""):
+        """The check every agg runs on a field it reads from the doc
+        store: ``f`` is a stored field and, given ``types``, of one of
+        them (ES typing rules — fail at parse time instead of as an
+        executor-side ANSI cast error).  ``need`` names what needs the
+        type; ``where`` prefixes the sub-agg or source the field is in."""
+        fdef = self.schema.field(f) if f else None
+        if fdef is None or not fdef.stored:
+            raise A.QueryError(
+                f"agg {name!r}: {where}field {f!r} is not a stored field")
+        if types and fdef.type not in types:
+            what = "numeric" if types == self._NUMERIC else types[0]
+            raise A.QueryError(
+                f"agg {name!r}: {where}{need} needs a {what} field, "
+                f"{f!r} is {fdef.type}")
+        return fdef
+
+    def _field_of(self, name: str, kind: str, body: dict,
+                  types: tuple = (), sub_aggs: bool = False) -> str:
+        """``body["field"]`` of a single-field agg, checked by
+        _agg_field; only the bucket families take an ``aggs`` block."""
+        f = body.get("field")
+        if not f:
+            raise A.QueryError(f"agg {name!r}: missing field")
+        self._agg_field(name, f, types, kind)
+        if "aggs" in body and not sub_aggs:
+            raise A.QueryError(
+                f"agg {name!r}: sub-aggs are only supported under "
+                f"bucket aggs (terms/histogram/date_histogram/composite/"
+                f"multi_terms/global/sampler)")
+        return f
+
+    def _bucket_rows(self, frame: DataFrame, keys: list,
+                     metrics: list[tuple[str, str, str]]) -> DataFrame:
+        """The one hash aggregation of a bucket agg: docs missing any
+        key field fall out (ES rule — no null bucket), then ONE groupBy
+        on the ``keys`` columns ([(field, key column)]) carrying the
+        count and the metric sub-aggs."""
+        for f, _ in keys:
+            frame = frame.filter(F.col(f).isNotNull())
+        return frame.groupBy(*[k for _, k in keys]).agg(
+            F.count("*").alias("doc_count"), *self._metric_exprs(metrics))
+
+    def _one_bucket(self, frame: DataFrame,
+                    metrics: list[tuple[str, str, str]]) -> dict:
+        """A one-bucket agg (global, sampler) over its own key frame:
+        the metric sub-aggs' fields join in, then count + metrics in ONE
+        aggregation."""
+        mfields = sorted({f for _, _, f in metrics})
+        if mfields:
+            docs = self._table("docs").select(
+                "segment_id", "docid", *mfields)
+            frame = frame.join(docs, on=["segment_id", "docid"])
+        row = frame.agg(F.count("*").alias("doc_count"),
+                        *self._metric_exprs(metrics)).collect()[0]
+        return {"doc_count": int(row["doc_count"]),
+                **self._shape_metrics(metrics, row)}
+
+    def _filter_keys(self, name: str, kind: str, body: dict) -> dict:
+        """The named filter queries of a filters / adjacency_matrix
+        body, parsed here so a bad one fails before any Spark work; at
+        run time each one's candidate keys meet the match keys in a
+        left-semi join."""
+        flt = body.get("filters")
+        if not isinstance(flt, dict) or not flt:
+            raise A.QueryError(
+                f"agg {name!r}: {kind} needs a dict of named filter "
+                f"queries")
+        return {fname: A.parse_json(q, self.schema)
+                for fname, q in flt.items()}
+
+    def _numeric_parts(self, name: str, kind: str, body: dict,
+                       parts: tuple[str, str]) -> list[str]:
+        """``body[part]["field"]`` for each of the two parts of a
+        two-field numeric agg (weighted_avg, t_test)."""
+        out = []
+        for part in parts:
+            pf = (body.get(part) or {}).get("field")
+            if not pf:
+                raise A.QueryError(
+                    f"agg {name!r}: {kind} needs {parts[0]}.field and "
+                    f"{parts[1]}.field")
+            self._agg_field(name, pf, self._NUMERIC, kind)
+            out.append(pf)
+        return out
+
+    def _agg_terms(self, name, kind, body, aggs):
+        f = self._field_of(name, kind, body, sub_aggs=True)
+        metrics, th, pipes = self._check_sub_aggs(
+            name, body, top_hits_ok=True, pipes_ok=True)
+        size = int(body.get("size", 10))
+        # ES order knob: _count (default) / _key / a single-value metric
+        # sub-agg's name; all resolve to a column of the SAME one hash
+        # aggregation, so ordering by a metric costs nothing extra — the
+        # ordered limit stays TakeOrderedAndProject
+        order = body.get("order") or {"_count": "desc"}
+        if not isinstance(order, dict) or len(order) != 1:
+            raise A.QueryError(f"agg {name!r}: order is {{path: asc|desc}}")
+        (okey, odir), = order.items()
+        desc = str(odir).lower() == "desc"
+        if okey == "_count":
+            ocols = [F.desc("doc_count") if desc else F.asc("doc_count"),
+                     F.asc("key")]
+        elif okey == "_key":
+            ocols = [F.desc("key") if desc else F.asc("key")]
+        else:
+            mi = next((i for i, (sn, mk, _) in enumerate(metrics)
+                       if sn == okey and mk not in ("stats",)), None)
+            if mi is None:
+                raise A.QueryError(
+                    f"agg {name!r}: order key {okey!r} is not _count/_key/"
+                    f"a single-value metric sub-agg")
+            oc = F.col(f"__s{mi}_value")
+            ocols = [oc.desc_nulls_last() if desc else oc.asc_nulls_last(),
+                     F.asc("key")]
+        mdc = int(body.get("min_doc_count", 1))
+
+        def run(matched, cands):
+            grouped = self._bucket_rows(
+                matched, [(f, F.col(f).alias("key"))], metrics)
+            if mdc > 1:
+                grouped = grouped.filter(F.col("doc_count") >= mdc)
+            rows = grouped.orderBy(*ocols).limit(size).collect()
+            buckets = [{"key": r["key"], "doc_count": r["doc_count"],
+                        **self._shape_metrics(metrics, r)} for r in rows]
+            buckets = self._apply_pipes(name, buckets, pipes)
+            if th and buckets:
+                th_name, th_size = th
+                per_key = self._bucket_top_hits(
+                    cands, f, [b["key"] for b in buckets], th_size)
+                for b in buckets:
+                    b[th_name] = {"hits": per_key.get(b["key"], [])}
+            return {"buckets": buckets}
+        return [f, *(sf for _, _, sf in metrics)], run
+
+    def _agg_histogram(self, name, kind, body, aggs):
+        f = self._field_of(name, kind, body, self._NUMERIC, sub_aggs=True)
+        metrics, _, pipes = self._check_sub_aggs(name, body, pipes_ok=True)
+        interval = float(body["interval"])
+        if interval <= 0:
+            raise A.QueryError(f"agg {name!r}: interval must be > 0")
+        key = (F.floor(F.col(f).cast("double") / interval)
+               * interval).alias("key")
+        mdc = int(body.get("min_doc_count", 1))
+
+        def run(matched, cands):
+            grouped = self._bucket_rows(matched, [(f, key)], metrics)
+            if mdc > 1:
+                grouped = grouped.filter(F.col("doc_count") >= mdc)
+            rows = grouped.orderBy("key").collect()
+            buckets = [{"key": float(r["key"]), "doc_count": r["doc_count"],
+                        **self._shape_metrics(metrics, r)} for r in rows]
+            if mdc == 0 and len(buckets) > 1:
+                # ES min_doc_count=0: fill interior gaps with empty
+                # buckets (doc_count 0, metrics null) — a driver-side
+                # pass over the REDUCED bucket list; this is what makes
+                # derivative / moving_fn see evenly spaced buckets
+                filled, expect = [], buckets[0]["key"]
+                nulls = defaultdict(lambda: None)
+                for b in buckets:
+                    while b["key"] - expect > interval / 2:
+                        filled.append({"key": expect, "doc_count": 0,
+                                       **self._shape_metrics(metrics, nulls)})
+                        expect += interval
+                    filled.append(b)
+                    expect = b["key"] + interval
+                buckets = filled
+            return {"buckets": self._apply_pipes(name, buckets, pipes)}
+        return [f, *(sf for _, _, sf in metrics)], run
+
+    def _agg_date_histogram(self, name, kind, body, aggs):
+        # date_histogram: ONE hash aggregation on date_trunc(unit).
+        # ES auto_date_histogram: pick the smallest calendar interval
+        # keeping bucket count <= ``buckets``.  ONE min/max aggregation
+        # sizes the span driver-side against a pinned seconds-per-unit
+        # ladder (month=30d, year=365d — an estimate is fine: it only
+        # picks the unit; the buckets themselves come from exact
+        # date_trunc), then the same one-hash-agg plan on the chosen unit.
+        auto = kind == "auto_date_histogram"
+        f = self._field_of(name, kind, body, ("date",), sub_aggs=not auto)
+        metrics, _, pipes = self._check_sub_aggs(name, body, pipes_ok=True)
+        unit = str(body.get("calendar_interval", "day")).lower()
+        if auto:
+            target = int(body.get("buckets", 10))
+            if target < 1:
+                raise A.QueryError(f"agg {name!r}: buckets must be >= 1")
+        elif unit not in self._CALENDAR_INTERVALS:
+            raise A.QueryError(f"agg {name!r}: unsupported calendar_interval")
+
+        def run(matched, cands):
+            u, col = unit, F.col(f)
+            if auto:
+                span_r = matched.filter(col.isNotNull()).agg(
+                    F.min(col).alias("lo"), F.max(col).alias("hi")
+                ).collect()[0]
+                ladder = [("second", 1), ("minute", 60), ("hour", 3600),
+                          ("day", 86400), ("month", 2592000),
+                          ("year", 31536000)]
+                u = "year"
+                if span_r["lo"] is not None:
+                    span = (span_r["hi"] - span_r["lo"]).total_seconds()
+                    u = next((lu for lu, secs in ladder
+                              if span / secs + 1 <= target), u)
+            rows = (self._bucket_rows(
+                matched, [(f, F.date_trunc(u, col).alias("key"))], metrics)
+                .orderBy("key").collect())
+            buckets = [{"key_as_string": r["key"].isoformat(),
+                        "doc_count": r["doc_count"],
+                        **self._shape_metrics(metrics, r)} for r in rows]
+            if auto:
+                return {"interval": u, "buckets": buckets}
+            return {"buckets": self._apply_pipes(name, buckets, pipes)}
+        return [f, *(sf for _, _, sf in metrics)], run
+
+    def _agg_rare_terms(self, name, kind, body, aggs):
+        # ES rare_terms: the LONG TAIL — buckets whose doc_count <=
+        # max_doc_count, ordered count-asc then key-asc.  ES bounds
+        # memory with a cuckoo filter; the engine's exact equivalent is
+        # the one hash aggregation + a driver-bounded limit (max_buckets,
+        # default 1000) so the driver never materialises an unbounded
+        # tail at corpus scale.
+        f = self._field_of(name, kind, body)
+        mdc = int(body.get("max_doc_count", 1))
+        cap = int(body.get("max_buckets", 1000))
+
+        def run(matched, cands):
+            rows = (self._bucket_rows(matched, [(f, F.col(f).alias("key"))],
+                                      [])
+                    .filter(F.col("doc_count") <= mdc)
+                    .orderBy(F.asc("doc_count"), F.asc("key"))
+                    .limit(cap).collect())
+            return {"buckets": [{"key": r["key"],
+                                 "doc_count": int(r["doc_count"])}
+                                for r in rows]}
+        return [f], run
+
+    def _agg_composite(self, name, kind, body, aggs):
+        # ES composite agg: deterministic multi-source key paging.  ONE
+        # hash aggregation on the source tuple (map-side partials), then
+        # the after-key predicate prunes BEFORE the ordered limit — page
+        # N costs one agg + top-size under the key's total order, never
+        # a depth-(N·size) re-rank, which is what pages a 100 TB match
+        # set to exhaustion.
+        sources = body.get("sources")
+        if not isinstance(sources, list) or not sources:
+            raise A.QueryError(
+                f"agg {name!r}: composite needs a sources list")
+        keys, snames = [], []
+        for s in sources:
+            if not isinstance(s, dict) or len(s) != 1:
+                raise A.QueryError(
+                    f"agg {name!r}: each composite source is "
+                    f"{{name: {{'terms': {{'field': ..}}}}}}")
+            (sname, sspec), = s.items()
+            sf = (sspec or {}).get("terms", {}).get("field") \
+                if isinstance(sspec, dict) else None
+            if not sf:
+                raise A.QueryError(
+                    f"agg {name!r}: composite source {sname!r}: only "
+                    f"terms sources are supported")
+            self._agg_field(name, sf, where=f"composite source {sname!r}: ")
+            keys.append((sf, F.col(sf).alias(sname)))
+            snames.append(sname)
+        metrics, _, _ = self._check_sub_aggs(name, body, pipes_ok=True)
+        size = int(body.get("size", 10))
+        after = body.get("after")
+        pred = None
+        if after:  # ES: missing any source → out (_bucket_rows)
+            if set(after) != set(snames):
+                raise A.QueryError(
+                    f"agg {name!r}: after key must name every source")
+            eq = None
+            for sn in snames:  # strict lexicographic >
+                gt = F.col(sn) > F.lit(after[sn])
+                step = gt if eq is None else eq & gt
+                pred = step if pred is None else pred | step
+                e = F.col(sn) == F.lit(after[sn])
+                eq = e if eq is None else eq & e
+
+        def run(matched, cands):
+            g = self._bucket_rows(matched, keys, metrics)
+            if pred is not None:
+                g = g.filter(pred)
+            rows = (g.orderBy(*[F.asc(sn) for sn in snames])
+                    .limit(size).collect())
+            buckets = [{"key": {sn: r[sn] for sn in snames},
+                        "doc_count": int(r["doc_count"]),
+                        **self._shape_metrics(metrics, r)} for r in rows]
+            res: dict = {"buckets": buckets}
+            if len(buckets) == size:
+                res["after_key"] = dict(buckets[-1]["key"])
+            return res
+        return [*(sf for sf, _ in keys), *(sf for _, _, sf in metrics)], run
+
+    def _agg_multi_terms(self, name, kind, body, aggs):
+        # ES multi_terms: buckets keyed by a TUPLE of field values — the
+        # same ONE hash aggregation as terms (groupBy on the tuple),
+        # metric sub-aggs riding it; a doc missing ANY key field falls
+        # out (ES rule)
+        tlist = body.get("terms")
+        if not isinstance(tlist, list) or len(tlist) < 2:
+            raise A.QueryError(
+                f"agg {name!r}: multi_terms needs a list of >= 2 "
+                f"{{'field': ..}} terms")
+        keys = []
+        for i, t in enumerate(tlist):
+            tf = (t or {}).get("field") if isinstance(t, dict) else None
+            if not tf:
+                raise A.QueryError(
+                    f"agg {name!r}: each multi_terms term is {{'field': ..}}")
+            self._agg_field(name, tf)
+            keys.append((tf, F.col(tf).alias(f"__k{i}")))
+        metrics, _, _ = self._check_sub_aggs(name, body, pipes_ok=True)
+        size = int(body.get("size", 10))
+        kn = [f"__k{i}" for i in range(len(keys))]
+
+        def run(matched, cands):
+            rows = (self._bucket_rows(matched, keys, metrics)
+                    .orderBy(F.desc("doc_count"), *[F.asc(k) for k in kn])
+                    .limit(size).collect())
+            return {"buckets": [
+                {"key": [r[k] for k in kn],
+                 "key_as_string": "|".join(str(r[k]) for k in kn),
+                 "doc_count": int(r["doc_count"]),
+                 **self._shape_metrics(metrics, r)} for r in rows]}
+        return [*(tf for tf, _ in keys), *(sf for _, _, sf in metrics)], run
+
+    def _agg_global(self, name, kind, body, aggs):
+        # ES global agg: one bucket over the WHOLE index, ignoring the
+        # query — only meaningful with sub-aggs.  It runs off its own
+        # all-docs candidate keys (tombstone-filtered like every other
+        # surface), not ``matched``
+        metrics, _, _ = self._check_sub_aggs(name, body)
+        return (), lambda matched, cands: self._one_bucket(
+            self.candidates(A.AllQ()).select("segment_id", "docid"), metrics)
+
+    def _agg_sampler(self, name, kind, body, aggs):
+        # ES sampler agg: sub-aggs over the best-scoring shard_size docs
+        # PER SHARD.  The engine's shard is the segment: ONE window over
+        # the scored candidate set (rank by score desc, docid asc within
+        # each segment — deterministic where ES is
+        # shard-layout-dependent), then the doc-store join and one
+        # aggregation over the sample only.  The window is
+        # hash-partitioned by segment_id and top-k bounded, so no
+        # executor ever sorts more than one segment's matches.
+        # diversified_sampler: same plan with ONE extra window ranked
+        # per (segment, dedup-field value) — keep max_docs_per_value best
+        # per value BEFORE the shard_size cut (the ES de-duplication
+        # order); the dedup field joins in ahead of the windows, null
+        # values are exempt from the cap (the ES rule: docs missing the
+        # field are not de-duplicated).
+        ss = int(body.get("shard_size", 100))
+        if ss <= 0:
+            raise A.QueryError(f"agg {name!r}: sampler shard_size must be > 0")
+        divf, mdv = None, 1
+        if kind == "diversified_sampler":
+            divf = body.get("field")
+            self._agg_field(name, divf, where=f"{kind} dedup ")
+            mdv = int(body.get("max_docs_per_value", 1))
+            if mdv < 1:
+                raise A.QueryError(
+                    f"agg {name!r}: max_docs_per_value must be >= 1")
+        metrics, _, _ = self._check_sub_aggs(name, body)
+
+        def run(matched, cands):
+            from pyspark.sql import Window
+
+            sample = cands.select("segment_id", "docid", "score")
+            if divf is not None:
+                ddocs = self._table("docs").select(
+                    "segment_id", "docid", divf)
+                sample = sample.join(
+                    ddocs, on=["segment_id", "docid"], how="left")
+                wv = Window.partitionBy("segment_id", divf).orderBy(
+                    F.desc("score"), F.asc("docid"))
+                sample = (sample
+                          .withColumn("__rv", F.row_number().over(wv))
+                          .filter(F.col(divf).isNull()
+                                  | (F.col("__rv") <= mdv))
+                          .drop("__rv", divf))
+            w = Window.partitionBy("segment_id").orderBy(
+                F.desc("score"), F.asc("docid"))
+            sample = (sample.withColumn("__r", F.row_number().over(w))
+                      .filter(F.col("__r") <= ss).drop("__r"))
+            return self._one_bucket(sample, metrics)
+        return (), run  # fields join off the SAMPLE frame, not matched
+
+    def _agg_filters(self, name, kind, body, aggs):
+        # ES filters agg: one named bucket per sub-query, each bucket
+        # counts matched docs ALSO matching the filter — a left-semi join
+        # of the (persisted) match keys against the filter's candidate
+        # keys, so each filter costs one postings scan, never a rescore
+        # of the main query
+        nodes = self._filter_keys(name, kind, body)
+
+        def run(matched, cands):
+            mkeys = matched.select("segment_id", "docid")
+            buckets = {}
+            for fname, sub in nodes.items():
+                skeys = self.candidates(sub).select("segment_id", "docid")
+                buckets[fname] = {"doc_count": int(
+                    mkeys.join(skeys, on=["segment_id", "docid"],
+                               how="left_semi").count())}
+            return {"buckets": buckets}
+        return (), run
+
+    def _agg_adjacency_matrix(self, name, kind, body, aggs):
+        # ES adjacency_matrix: one bucket per named filter (matched ∩
+        # filter) plus one per PAIR ("a&b" = matched ∩ a ∩ b).  Each
+        # filter costs one postings scan for its candidate keys; the
+        # intersections are key-only hash joins — never a rescore of the
+        # main query.  Filter count is tiny (ES caps at 100), so the
+        # pair loop is bounded.
+        nodes = self._filter_keys(name, kind, body)
+        amp = next((n for n in nodes if "&" in n), None)
+        if amp is not None:
+            raise A.QueryError(
+                f"agg {name!r}: filter name {amp!r} may not contain '&' "
+                f"(the intersection separator)")
+
+        def run(matched, cands):
+            mkeys = matched.select("segment_id", "docid")
+            fkeys: dict[str, DataFrame] = {}
+            try:
+                for fname in sorted(nodes):
+                    fkeys[fname] = (
+                        self.candidates(nodes[fname])
+                        .select("segment_id", "docid")
+                        .join(mkeys, on=["segment_id", "docid"],
+                              how="left_semi").persist())
+                buckets = []
+                names = sorted(fkeys)
+                for fname in names:
+                    n = int(fkeys[fname].count())
+                    if n:
+                        buckets.append({"key": fname, "doc_count": n})
+                for i, a in enumerate(names):
+                    for bn in names[i + 1:]:
+                        n = int(fkeys[a].join(
+                            fkeys[bn], on=["segment_id", "docid"],
+                            how="left_semi").count())
+                        if n:  # ES omits empty intersections
+                            buckets.append({"key": f"{a}&{bn}",
+                                            "doc_count": n})
+                return {"buckets": buckets}
+            finally:
+                for df in fkeys.values():
+                    df.unpersist()
+        return (), run
+
+    def _agg_top_metrics(self, name, kind, body, aggs):
+        # ES top_metrics: the metric fields of the top ``size`` docs
+        # under an explicit field sort — ONE TakeOrderedAndProject over
+        # the matched frame (never a full sort), docid tie-break pinned
+        # for determinism
+        mlist = body.get("metrics")
+        if isinstance(mlist, dict):
+            mlist = [mlist]
+        srt = body.get("sort")
+        if not isinstance(mlist, list) or not mlist \
+                or not isinstance(srt, dict) or len(srt) != 1:
+            raise A.QueryError(
+                f"agg {name!r}: top_metrics needs metrics "
+                f"[{{'field': ..}}] and sort {{field: asc|desc}}")
+        (sfield, sdir), = srt.items()
+        sdir = str(sdir).lower()
+        if sdir not in ("asc", "desc"):
+            raise A.QueryError(f"agg {name!r}: sort direction must be asc|desc")
+        mfields = [m.get("field") for m in mlist]
+        for mf in mfields + [sfield]:
+            self._agg_field(name, mf)
+        size = int(body.get("size", 1))
+
+        def run(matched, cands):
+            sc = F.col(sfield)
+            rows = (matched.filter(sc.isNotNull())
+                    .orderBy(sc.desc() if sdir == "desc" else sc.asc(),
+                             F.asc("segment_id"), F.asc("docid"))
+                    .limit(size).collect())
+            return {"top": [{"sort": [r[sfield]],
+                             "metrics": {mf: r[mf] for mf in mfields}}
+                            for r in rows]}
+        return mfields + [sfield], run
+
+    def _agg_t_test(self, name, kind, body, aggs):
+        # ES t_test agg: Student's t statistic between two numeric
+        # fields — ONE aggregation of count/avg/var_samp (paired: over
+        # the per-row difference; unpaired: per field), driver-side
+        # arithmetic on the 1-row result.  Pinned: rows missing either
+        # field drop (the ES paired rule, applied to both modes so a/b
+        # stay comparable).
+        ttype = str(body.get("type", "heteroscedastic"))
+        if ttype not in ("paired", "homoscedastic", "heteroscedastic"):
+            raise A.QueryError(
+                f"agg {name!r}: t_test type must be paired/"
+                f"homoscedastic/heteroscedastic")
+        fa, fb = self._numeric_parts(name, kind, body, ("a", "b"))
+
+        def run(matched, cands):
+            va = F.col(fa).cast("double")
+            vb = F.col(fb).cast("double")
+            both = matched.filter(va.isNotNull() & vb.isNotNull())
+            if ttype == "paired":
+                d = va - vb
+                r = both.agg(F.count(d).alias("n"), F.avg(d).alias("m"),
+                             F.var_samp(d).alias("v")).collect()[0]
+                n = int(r["n"])
+                t = (None if n < 2 or not r["v"]
+                     else float(r["m"]) / math.sqrt(float(r["v"]) / n))
+                return {"value": t}
+            r = both.agg(
+                F.count(va).alias("na"), F.avg(va).alias("ma"),
+                F.var_samp(va).alias("va"),
+                F.count(vb).alias("nb"), F.avg(vb).alias("mb"),
+                F.var_samp(vb).alias("vb")).collect()[0]
+            na, nb = int(r["na"]), int(r["nb"])
+            if na < 2 or nb < 2 or r["va"] is None or r["vb"] is None:
+                return {"value": None}
+            if ttype == "homoscedastic":
+                sp2 = (((na - 1) * float(r["va"])
+                        + (nb - 1) * float(r["vb"])) / (na + nb - 2))
+                den = math.sqrt(sp2 * (1.0 / na + 1.0 / nb))
+            else:  # heteroscedastic (Welch)
+                den = math.sqrt(float(r["va"]) / na + float(r["vb"]) / nb)
+            return {"value": ((float(r["ma"]) - float(r["mb"])) / den
+                              if den else None)}
+        return [fa, fb], run
+
+    def _agg_matrix_stats(self, name, kind, body, aggs):
+        # ES matrix_stats: per-field moments + pairwise covariance/
+        # correlation over rows holding EVERY field (the ES
+        # listwise-deletion rule) — ONE aggregation carrying all the
+        # moment expressions (map-side partials; O(k²) expressions for k
+        # fields, k is tiny).  Variance/covariance are SAMPLE (n-1) like
+        # ES; skewness/kurtosis follow Spark's population definitions
+        # (g1, g2 excess) — pinned here, asserted vs numpy in pytest.
+        mfields = body.get("fields")
+        if not isinstance(mfields, list) or len(mfields) < 2:
+            raise A.QueryError(f"agg {name!r}: matrix_stats needs >= 2 fields")
+        for mf in mfields:
+            self._agg_field(name, mf, self._NUMERIC, kind)
+
+        def run(matched, cands):
+            cols = {mf: F.col(mf).cast("double") for mf in mfields}
+            b = matched
+            for mf in mfields:
+                b = b.filter(cols[mf].isNotNull())
+            exprs = [F.count("*").alias("n")]
+            for mf in mfields:
+                exprs += [F.avg(cols[mf]).alias(f"m__{mf}"),
+                          F.var_samp(cols[mf]).alias(f"v__{mf}"),
+                          F.skewness(cols[mf]).alias(f"s__{mf}"),
+                          F.kurtosis(cols[mf]).alias(f"k__{mf}")]
+            for i, fa in enumerate(mfields):
+                for fb in mfields[i + 1:]:
+                    exprs += [F.covar_samp(cols[fa], cols[fb])
+                              .alias(f"c__{fa}__{fb}"),
+                              F.corr(cols[fa], cols[fb])
+                              .alias(f"r__{fa}__{fb}")]
+            r = b.agg(*exprs).collect()[0]
+            n = int(r["n"])
+
+            def _f(key):
+                return None if r[key] is None else float(r[key])
+
+            def _pair(pre, fa, fb, diag):
+                if fa == fb:
+                    return diag
+                a, b = sorted((fa, fb), key=mfields.index)  # as aliased
+                return _f(f"{pre}__{a}__{b}")
+            return {"doc_count": n, "fields": [
+                {"name": mf, "count": n, "mean": _f(f"m__{mf}"),
+                 "variance": _f(f"v__{mf}"), "skewness": _f(f"s__{mf}"),
+                 "kurtosis": _f(f"k__{mf}"),
+                 "covariance": {fo: _pair("c", mf, fo, _f(f"v__{mf}"))
+                                for fo in mfields},
+                 "correlation": {fo: _pair("r", mf, fo, 1.0)
+                                 for fo in mfields}}
+                for mf in mfields]}
+        return mfields, run
+
+    def _agg_weighted_avg(self, name, kind, body, aggs):
+        # ES weighted_avg: sum(v*w)/sum(w) over rows where BOTH are
+        # present — one aggregation, map-side partials; null value with
+        # present weight counts the weight only if value_missing is set
+        # (not supported: nulls drop, the ES default)
+        fv, fw = self._numeric_parts(name, kind, body, ("value", "weight"))
+
+        def run(matched, cands):
+            vf = F.col(fv).cast("double")
+            wf = F.col(fw).cast("double")
+            r = (matched.filter(vf.isNotNull() & wf.isNotNull())
+                 .agg(F.sum(vf * wf).alias("vw"), F.sum(wf).alias("w"))
+                 .collect()[0])
+            return {"value": (None if r["w"] is None or r["w"] == 0
+                              else float(r["vw"]) / float(r["w"]))}
+        return [fv, fw], run
+
+    def _agg_metric(self, name, kind, body, aggs):
+        # the top-level form of the metric sub-aggs: the same
+        # expressions (_metric_exprs / _shape_metrics) over the whole
+        # match set as one bucket; exact cardinality is the exception
+        f = self._field_of(name, kind, body, self._NUMERIC
+                           if kind in self._NUMERIC_METRICS else ())
+        exact = kind == "cardinality" and body.get("exact")
+        metrics = [(name, kind, f)]
+
+        def run(matched, cands):
+            if exact:
+                return {"value": int(matched.agg(
+                    F.count_distinct(F.col(f)).alias("v")).collect()[0]["v"])}
+            row = matched.agg(*self._metric_exprs(metrics)).collect()[0]
+            return self._shape_metrics(metrics, row)[name]
+        return [f], run
+
+    def _agg_extended_stats(self, name, kind, body, aggs):
+        f = self._field_of(name, kind, body, self._NUMERIC)
+
+        def run(matched, cands):
+            col = F.col(f)
+            v = col.cast("double")
+            r = matched.agg(
+                F.count(col).alias("count"),
+                F.min(col).alias("min"), F.max(col).alias("max"),
+                F.avg(col).alias("avg"), F.sum(col).alias("sum"),
+                F.sum(v * v).alias("sum_of_squares"),
+                F.var_pop(v).alias("variance"),
+                F.stddev_pop(v).alias("std_deviation"),
+            ).collect()[0]
+            return r.asDict()
+        return [f], run
+
+    def _agg_range(self, name, kind, body, aggs):
+        # ES range agg: [from, to) buckets, overlapping allowed — ONE
+        # pass, each bucket a conditional sum
+        f = self._field_of(name, kind, body, self._NUMERIC)
+        ranges = body.get("ranges") or []
+        if not ranges:
+            raise A.QueryError(f"agg {name!r}: range needs ranges")
+        col = F.col(f)
+        v = col.cast("double")
+        exprs, keys = [], []
+        for i, rg in enumerate(ranges):
+            lo, hi = rg.get("from"), rg.get("to")
+            if lo is None and hi is None:
+                raise A.QueryError(f"agg {name!r}: a range needs from/to")
+            c = col.isNotNull()
+            if lo is not None:
+                c = c & (v >= float(lo))
+            if hi is not None:
+                c = c & (v < float(hi))
+            exprs.append(F.sum(F.when(c, 1).otherwise(0)).alias(f"r{i}"))
+            keys.append(f"{lo if lo is not None else '*'}-"
+                        f"{hi if hi is not None else '*'}")
+
+        def run(matched, cands):
+            r = matched.agg(*exprs).collect()[0]
+            return {"buckets": [
+                {"key": k, "from": rg.get("from"), "to": rg.get("to"),
+                 "doc_count": int(r[f"r{i}"])}
+                for i, (k, rg) in enumerate(zip(keys, ranges))]}
+        return [f], run
+
+    def _agg_percentile_ranks(self, name, kind, body, aggs):
+        f = self._field_of(name, kind, body, self._NUMERIC)
+        vals = [float(x) for x in body.get("values") or []]
+        if not vals:
+            raise A.QueryError(f"agg {name!r}: percentile_ranks needs values")
+
+        def run(matched, cands):
+            v = F.col(f).cast("double")
+            r = matched.filter(F.col(f).isNotNull()).agg(*[
+                (F.lit(100.0) * F.avg(F.when(v <= x, 1.0).otherwise(0.0)))
+                .alias(f"p{i}") for i, x in enumerate(vals)]).collect()[0]
+            return {"values": {
+                str(x): None if r[f"p{i}"] is None else float(r[f"p{i}"])
+                for i, x in enumerate(vals)}}
+        return [f], run
+
+    def _agg_percentiles(self, name, kind, body, aggs):
+        f = self._field_of(name, kind, body, self._NUMERIC)
+        pcts = [float(p) for p in
+                body.get("percents", [1, 5, 25, 50, 75, 95, 99])]
+        fn = F.percentile_approx if body.get("approx") else F.percentile
+
+        def run(matched, cands):
+            fracs = F.array(*[F.lit(p / 100.0) for p in pcts])
+            r = matched.agg(
+                fn(F.col(f).cast("double"), fracs).alias("v")).collect()[0]
+            vals = r["v"] or [None] * len(pcts)
+            return {"values": {str(p): None if v is None else float(v)
+                               for p, v in zip(pcts, vals)}}
+        return [f], run
+
+    def _agg_missing(self, name, kind, body, aggs):
+        # ES missing agg: matched docs WITHOUT the field — the
+        # complement of every other agg's null rule
+        f = self._field_of(name, kind, body)
+        return [f], lambda matched, cands: {"doc_count": int(
+            matched.filter(F.col(f).isNull()).count())}
+
+    def _agg_median_absolute_deviation(self, name, kind, body, aggs):
+        # ES MAD: median(|x - median(x)|).  Exact by default (two
+        # percentile passes over the persisted match frame —
+        # deterministic, oracle-matchable); "approx": true switches both
+        # passes to percentile_approx (one-pass sketch each, the 100 TB
+        # default, same rationale as percentiles).
+        f = self._field_of(name, kind, body, self._NUMERIC)
+        fn = F.percentile_approx if body.get("approx") else F.percentile
+
+        def run(matched, cands):
+            v = F.col(f).cast("double")
+            m = matched.agg(fn(v, F.lit(0.5)).alias("m")).collect()[0]["m"]
+            if m is None:
+                return {"value": None}
+            r = matched.agg(fn(F.abs(v - F.lit(float(m))), F.lit(0.5))
+                            .alias("mad")).collect()[0]["mad"]
+            return {"value": None if r is None else float(r)}
+        return [f], run
+
+    def _agg_boxplot(self, name, kind, body, aggs):
+        # ES boxplot: min / q1 / q2 / q3 / max — ONE aggregation (exact
+        # interpolated percentiles by default; "approx": true for the
+        # sketch path)
+        f = self._field_of(name, kind, body, self._NUMERIC)
+        fn = F.percentile_approx if body.get("approx") else F.percentile
+
+        def run(matched, cands):
+            v = F.col(f).cast("double")
+            r = matched.agg(
+                F.min(v).alias("mn"), F.max(v).alias("mx"),
+                fn(v, F.array(F.lit(0.25), F.lit(0.5), F.lit(0.75)))
+                .alias("q")).collect()[0]
+            q = r["q"] or [None, None, None]
+            return {"min": r["mn"], "max": r["mx"],
+                    "q1": q[0], "q2": q[1], "q3": q[2]}
+        return [f], run
+
+    def _agg_string_stats(self, name, kind, body, aggs):
+        # ES string_stats: count / min_length / max_length / avg_length
+        # in ONE aggregation; with "show_distribution": true also the
+        # Shannon entropy of the CHARACTER distribution — a second
+        # aggregation over exploded characters (distributed char-
+        # frequency count; cardinality = alphabet size, so the reduce is
+        # trivially bounded)
+        f = self._field_of(name, kind, body, ("text",))
+
+        def run(matched, cands):
+            col = F.col(f)
+            ln = F.length(col)
+            r = matched.agg(
+                F.count(col).alias("count"),
+                F.min(ln).alias("min_length"), F.max(ln).alias("max_length"),
+                F.avg(ln.cast("double")).alias("avg_length"),
+            ).collect()[0]
+            st = r.asDict()
+            if body.get("show_distribution"):
+                cf = (matched.filter(col.isNotNull())
+                      .select(F.explode(F.split(col, "")).alias("ch"))
+                      .filter(F.col("ch") != "")
+                      .groupBy("ch").agg(F.count("*").alias("n")))
+                tot = cf.agg(F.sum("n").alias("t")).collect()[0]["t"]
+                ent = 0.0
+                if tot:
+                    probs = cf.select((F.col("n").cast("double")
+                                       / float(tot)).alias("p")).collect()
+                    ent = -sum(p["p"] * math.log2(p["p"]) for p in probs)
+                st["entropy"] = ent
+            return st
+        return [f], run
+
+    def _agg_sibling(self, name, kind, body, aggs):
+        # ES sibling pipeline aggs (max/min/avg/sum/stats _bucket): a
+        # pure reduce over the parent's final bucket list
+        # ("parent>path") — no distributed work, like the parent
+        # pipeline aggs in _apply_pipes
+        path = body.get("buckets_path", "")
+        parent, _, sub = path.partition(">")
+        if ">" not in path or parent not in aggs:
+            raise A.QueryError(
+                f"agg {name!r}: {kind} needs buckets_path "
+                f"'<sibling bucket agg>>metric'")
+        pkind = next(iter(aggs[parent]))
+        if pkind not in ("terms", "histogram", "date_histogram",
+                         "composite"):
+            raise A.QueryError(
+                f"agg {name!r}: buckets_path parent {parent!r} is not a "
+                f"bucket agg")
+
+        def reduce(out: dict) -> dict:
+            bl = out[parent].get("buckets") or []
+            pairs = [(b.get("key", b.get("key_as_string")),
+                      self._bpath(b, sub or "doc_count")) for b in bl]
+            vv = [v for _, v in pairs if v is not None]
+            n = len(vv)
+            st = {"count": n,
+                  "min": min(vv) if vv else None,
+                  "max": max(vv) if vv else None,
+                  "avg": sum(vv) / n if n else None,
+                  "sum": sum(vv) if vv else None}
+            if kind in ("max_bucket", "min_bucket"):
+                best = st["max" if kind == "max_bucket" else "min"]
+                return {"keys": [k for k, v in pairs if vv and v == best],
+                        "value": best}
+            if kind in ("avg_bucket", "sum_bucket"):
+                return {"value": st["avg" if kind == "avg_bucket" else "sum"]}
+            if kind == "percentiles_bucket":
+                # exact linear-interpolated percentiles over the reduced
+                # bucket values (ES uses the same exact method here —
+                # the input is already tiny)
+                pcts = [float(p) for p in
+                        body.get("percents", [1, 5, 25, 50, 75, 95, 99])]
+                sv = sorted(vv)
+                vals_out = {}
+                for p in pcts:
+                    if not sv:
+                        vals_out[str(p)] = None
+                        continue
+                    pos = (p / 100.0) * (len(sv) - 1)
+                    lo, hi = int(math.floor(pos)), int(math.ceil(pos))
+                    vals_out[str(p)] = sv[lo] + (sv[hi] - sv[lo]) * (pos - lo)
+                return {"values": vals_out}
+            if kind == "extended_stats_bucket":
+                mean = st["avg"]
+                var = sum((x - mean) ** 2 for x in vv) / n if n else None
+                st.update({
+                    "sum_of_squares": sum(x * x for x in vv) if vv else None,
+                    "variance": var,
+                    "std_deviation": (math.sqrt(var)
+                                      if var is not None else None)})
+            return st  # stats_bucket / extended_stats_bucket
+        return (), reduce
+
     _SUBAGG_METRICS = ("avg", "sum", "min", "max", "value_count",
                        "stats", "cardinality")
+    _NUMERIC_METRICS = ("avg", "sum", "min", "max", "stats")
 
-    @classmethod
-    def _sub_agg_plan(cls, name: str, body: dict) \
-            -> tuple[list[tuple[str, str, str]], tuple[str, int] | None]:
-        """Parse the ES sub-agg block of a bucket agg (one level)::
+    def _check_sub_aggs(self, name: str, body: dict,
+                        top_hits_ok: bool = False, pipes_ok: bool = False) \
+            -> tuple[list[tuple[str, str, str]], tuple[str, int] | None,
+                     list[tuple[str, str, dict]]]:
+        """Parse and check the ES sub-agg block of a bucket agg (one
+        level), by the same rules under every parent::
 
             {"terms": {"field": f, "aggs": {
                 "mean_v":  {"avg": {"field": g}},
@@ -3946,13 +3707,17 @@ class Searcher:
         Metric sub-aggs (avg/sum/min/max/value_count/stats/cardinality)
         compute IN THE SAME groupBy as the bucket — extra agg
         expressions riding the one hash aggregation, zero additional
-        passes.  top_hits is the exception (per-bucket document fetch,
-        terms-only).  Returns (metrics, top_hits) where metrics is
-        [(sub_name, kind, field)] and top_hits is (sub_name, size)."""
-        sub = body.get("aggs") or {}
+        passes; each reads a stored field, a numeric one for
+        avg/sum/min/max/stats.  top_hits is the exception (per-bucket
+        document fetch, terms-only: ``top_hits_ok``); pipeline sub-aggs
+        reduce an ordered bucket list (``pipes_ok``).  Returns
+        (metrics, top_hits, pipes): metrics is [(sub_name, kind,
+        field)], top_hits is (sub_name, size) or None, pipes is
+        [(sub_name, kind, body)] for _apply_pipes."""
         metrics: list[tuple[str, str, str]] = []
         top_hits: tuple[str, int] | None = None
-        for sub_name, sub_spec in sub.items():
+        pipes: list[tuple[str, str, dict]] = []
+        for sub_name, sub_spec in (body.get("aggs") or {}).items():
             if not isinstance(sub_spec, dict) or len(sub_spec) != 1:
                 raise A.QueryError(
                     f"agg {name!r}: sub-agg {sub_name!r}: expected one "
@@ -3963,21 +3728,34 @@ class Searcher:
                     raise A.QueryError(
                         f"agg {name!r}: at most one top_hits sub-agg")
                 top_hits = (sub_name, int((sbody or {}).get("size", 3)))
-            elif skind in cls._SUBAGG_METRICS:
+            elif skind in self._SUBAGG_METRICS:
                 sf = (sbody or {}).get("field")
                 if not sf:
                     raise A.QueryError(
                         f"agg {name!r}: sub-agg {sub_name!r}: missing field")
                 metrics.append((sub_name, skind, sf))
-            elif skind in cls._PIPE_KINDS:
-                continue  # parsed by _pipe_agg_plan (bucket aggs only)
+            elif skind in self._PIPE_KINDS:
+                self._check_pipe(f"agg {name!r}: sub-agg {sub_name!r}:",
+                                 skind, sbody or {})
+                pipes.append((sub_name, skind, sbody or {}))
             else:
                 raise A.QueryError(
                     f"agg {name!r}: sub-agg {sub_name!r}: unsupported "
                     f"kind {skind!r} (metrics "
-                    f"{'/'.join(cls._SUBAGG_METRICS)}, pipeline "
-                    f"{'/'.join(cls._PIPE_KINDS)}, or top_hits)")
-        return metrics, top_hits
+                    f"{'/'.join(self._SUBAGG_METRICS)}, pipeline "
+                    f"{'/'.join(self._PIPE_KINDS)}, or top_hits)")
+        if top_hits is not None and not top_hits_ok:
+            raise A.QueryError(
+                f"agg {name!r}: a top_hits sub-agg is only supported "
+                f"under a terms agg")
+        if pipes and not pipes_ok:
+            raise A.QueryError(
+                f"agg {name!r}: pipeline sub-aggs need a bucket agg parent")
+        for sub_name, skind, sf in metrics:
+            self._agg_field(name, sf, self._NUMERIC
+                            if skind in self._NUMERIC_METRICS else (),
+                            skind, f"sub-agg {sub_name!r}: ")
+        return metrics, top_hits, pipes
 
     _PIPE_KINDS = ("cumulative_sum", "derivative", "moving_fn",
                    "bucket_sort", "serial_diff", "bucket_script",
@@ -4063,58 +3841,37 @@ class Searcher:
         return ev(tree)
 
     @classmethod
-    def _pipe_agg_plan(cls, name: str, body: dict) \
-            -> list[tuple[str, str, dict]]:
-        """Parse (and fail-fast validate) the PIPELINE sub-aggs of a
-        bucket agg — ES parent pipeline aggregations
-        (cumulative_sum / derivative / moving_fn / bucket_sort).  These
-        never touch the doc store: like ES's coordinating-node reduce
-        phase they run over the bucket agg's ALREADY-REDUCED bucket
-        list (cardinality = #buckets, bounded by size/interval — never
-        #docs), so they are pure driver-side post-passes and add zero
-        distributed work at any corpus scale."""
-        pipes: list[tuple[str, str, dict]] = []
-        for sub_name, sub_spec in (body.get("aggs") or {}).items():
-            if not isinstance(sub_spec, dict) or len(sub_spec) != 1:
-                continue  # shape errors raised by _sub_agg_plan
-            (skind, sbody), = sub_spec.items()
-            if skind not in cls._PIPE_KINDS:
-                continue
-            sbody = sbody or {}
-            if skind == "moving_fn":
-                fn = str(sbody.get("fn", "avg"))
-                if fn not in cls._MOVING_FNS:
-                    raise A.QueryError(
-                        f"agg {name!r}: sub-agg {sub_name!r}: moving_fn "
-                        f"fn must be one of "
-                        f"{'/'.join(sorted(cls._MOVING_FNS))}")
-                if int(sbody.get("window", 5)) <= 0:
-                    raise A.QueryError(
-                        f"agg {name!r}: sub-agg {sub_name!r}: window "
-                        f"must be > 0")
-            if skind == "bucket_sort":
-                for s in sbody.get("sort") or []:
-                    if not isinstance(s, dict) or len(s) != 1:
-                        raise A.QueryError(
-                            f"agg {name!r}: sub-agg {sub_name!r}: each "
-                            f"sort entry is {{path: {{'order': ..}}}}")
-            if skind == "serial_diff" and int(sbody.get("lag", 1)) <= 0:
+    def _check_pipe(cls, at: str, skind: str, sbody: dict) -> None:
+        """Fail-fast checks of one PIPELINE sub-agg of a bucket agg
+        (``at`` names it in errors) — ES parent pipeline aggregations.
+        These never touch the doc store: like ES's coordinating-node
+        reduce phase they run over the bucket agg's ALREADY-REDUCED
+        bucket list (cardinality = #buckets, bounded by size/interval —
+        never #docs), so they are pure driver-side post-passes
+        (_apply_pipes) and add zero distributed work at any corpus
+        scale."""
+        if skind == "moving_fn":
+            if str(sbody.get("fn", "avg")) not in cls._MOVING_FNS:
                 raise A.QueryError(
-                    f"agg {name!r}: sub-agg {sub_name!r}: lag must "
-                    f"be > 0")
-            if skind in ("bucket_script", "bucket_selector"):
-                bp = sbody.get("buckets_path")
-                if not isinstance(bp, dict) or not bp:
+                    f"{at} moving_fn fn must be one of "
+                    f"{'/'.join(sorted(cls._MOVING_FNS))}")
+            if int(sbody.get("window", 5)) <= 0:
+                raise A.QueryError(f"{at} window must be > 0")
+        if skind == "bucket_sort":
+            for s in sbody.get("sort") or []:
+                if not isinstance(s, dict) or len(s) != 1:
                     raise A.QueryError(
-                        f"agg {name!r}: sub-agg {sub_name!r}: {skind} "
-                        f"needs buckets_path as {{var: path}}")
-                if not sbody.get("script"):
-                    raise A.QueryError(
-                        f"agg {name!r}: sub-agg {sub_name!r}: {skind} "
-                        f"needs a script")
-                cls._script_eval(str(sbody["script"]), None)  # shape
-            pipes.append((sub_name, skind, sbody))
-        return pipes
+                        f"{at} each sort entry is {{path: {{'order': ..}}}}")
+        if skind == "serial_diff" and int(sbody.get("lag", 1)) <= 0:
+            raise A.QueryError(f"{at} lag must be > 0")
+        if skind in ("bucket_script", "bucket_selector"):
+            bp = sbody.get("buckets_path")
+            if not isinstance(bp, dict) or not bp:
+                raise A.QueryError(
+                    f"{at} {skind} needs buckets_path as {{var: path}}")
+            if not sbody.get("script"):
+                raise A.QueryError(f"{at} {skind} needs a script")
+            cls._script_eval(str(sbody["script"]), None)  # shape
 
     @staticmethod
     def _bpath(bucket: dict, path: str):
@@ -4134,6 +3891,14 @@ class Searcher:
                     f"buckets_path {path!r}: no metric {head!r} in bucket")
             v = m[parts[1]] if len(parts) > 1 else m.get("value")
         return None if v is None else float(v)
+
+    @classmethod
+    def _bucket_script(cls, pbody: dict, bucket: dict):
+        """A bucket_script / bucket_selector script over one bucket's
+        buckets_path variables."""
+        return cls._script_eval(str(pbody["script"]), {
+            var: cls._bpath(bucket, p)
+            for var, p in pbody["buckets_path"].items()})
 
     @classmethod
     def _apply_pipes(cls, name: str, buckets: list[dict],
@@ -4165,9 +3930,7 @@ class Searcher:
                 # metric paths; any missing operand skips the bucket
                 # (gap policy), matching the Painless null semantics
                 for b in buckets:
-                    vs = {var: cls._bpath(b, p)
-                          for var, p in pbody["buckets_path"].items()}
-                    v = cls._script_eval(str(pbody["script"]), vs)
+                    v = cls._bucket_script(pbody, b)
                     if v is not None:
                         b[sub_name] = {"value": float(v)}
                 continue
@@ -4178,10 +3941,6 @@ class Searcher:
                 for b, v in zip(buckets, vals):
                     run += (v or 0.0)
                     b[sub_name] = {"value": run}
-            elif pkind == "derivative":
-                for i, b in enumerate(buckets):
-                    if i and vals[i] is not None and vals[i - 1] is not None:
-                        b[sub_name] = {"value": vals[i] - vals[i - 1]}
             elif pkind == "moving_fn":
                 w = int(pbody.get("window", 5))
                 shift = int(pbody.get("shift", 0))
@@ -4191,10 +3950,12 @@ class Searcher:
                     hi = max(0, min(len(buckets), i + shift))
                     win = [v for v in vals[lo:hi] if v is not None]
                     b[sub_name] = {"value": fn(win) if win else None}
-            elif pkind == "serial_diff":
+            else:  # derivative / serial_diff
                 # ES serial_diff: bucket[i] − bucket[i−lag]; the first
-                # `lag` buckets get no value (nothing to diff against)
-                lag = int(pbody.get("lag", 1))
+                # `lag` buckets get no value (nothing to diff against);
+                # derivative is serial_diff at lag 1
+                lag = (int(pbody.get("lag", 1))
+                       if pkind == "serial_diff" else 1)
                 for i, b in enumerate(buckets):
                     if i >= lag and vals[i] is not None \
                             and vals[i - lag] is not None:
@@ -4203,14 +3964,7 @@ class Searcher:
             # ES bucket_selector: keep buckets whose script is truthy;
             # missing operands (gap policy "skip") DROP the bucket —
             # applied before bucket_sort, like ES's reduce order
-            kept = []
-            for b in buckets:
-                vs = {var: cls._bpath(b, p)
-                      for var, p in pbody["buckets_path"].items()}
-                v = cls._script_eval(str(pbody["script"]), vs)
-                if v:
-                    kept.append(b)
-            buckets = kept
+            buckets = [b for b in buckets if cls._bucket_script(pbody, b)]
         for pbody in sorts:
             for s in reversed(pbody.get("sort") or []):
                 (path, sb), = s.items()
@@ -4259,7 +4013,8 @@ class Searcher:
                 out[sub_name] = {k: row[f"__s{i}_{k}"] for k in
                                  ("count", "min", "max", "avg", "sum")}
             elif kind in ("value_count", "cardinality"):
-                out[sub_name] = {"value": int(row[f"__s{i}_value"])}
+                v = row[f"__s{i}_value"]
+                out[sub_name] = {"value": None if v is None else int(v)}
             else:
                 out[sub_name] = {"value": row[f"__s{i}_value"]}
         return out
@@ -4292,31 +4047,112 @@ class Searcher:
             per_key.setdefault(r[field], []).append(hit)
         return per_key
 
-    def _sig_terms(self, body: dict, matched: DataFrame) -> dict:
-        """ES ``significant_terms`` with the JLH heuristic: for each
-        term of the indexed field, foreground rate fg/M (matched docs
-        holding it / matched docs) vs background rate bg/N (global df /
-        num_docs); score = (fg/M − bg/N) · (fg/M)/(bg/N) for terms
-        over-represented in the match set, 0 otherwise.  Execution: ONE
-        postings scan (field-equality pushdown) left-semi-joined to the
-        matched keys on (segment_id, docid) → per-term hash-agg, joined
-        to the termdict's summed dfs for the background — no driver
-        loop, both sides partition by term.  Background dfs are
-        tombstone-stale until compaction (the engine-wide stats rule,
-        catalog.py num_deleted docs)."""
-        f = body["field"]
+    def _sig_terms(self, name, kind, body, aggs):
+        """ES ``significant_terms`` with the JLH heuristic (_jlh) over an
+        indexed field.  It runs off the POSTINGS (term space), not the
+        doc store: ONE postings scan (field-equality pushdown)
+        left-semi-joined to the matched keys on (segment_id, docid) →
+        per-term hash-agg, joined to the termdict's summed dfs for the
+        background — no driver loop, both sides partition by term.
+        Background dfs are tombstone-stale until compaction (the
+        engine-wide stats rule, catalog.py num_deleted docs)."""
+        f = body.get("field")
+        fdef = self.schema.field(f) if f else None
+        if not f:
+            raise A.QueryError(f"agg {name!r}: missing field")
+        if fdef is None or not fdef.indexed:
+            raise A.QueryError(
+                f"agg {name!r}: significant_terms needs an indexed field, "
+                f"{f!r} is not")
         size = int(body.get("size", 10))
-        m_count = matched.count()
-        if m_count == 0:
-            return {"doc_count": 0, "buckets": []}
-        p = self._table("postings")
-        td = self._table("termdict")
-        if p is None or td is None:
-            return {"doc_count": m_count, "buckets": []}
-        fg = (p.filter(F.col("field") == f)
-              .join(matched, on=["segment_id", "docid"], how="left_semi")
-              .groupBy("term").agg(F.count("*").alias("fg")))
-        bg = (td.filter(F.col("field") == f)
+
+        def run(matched, cands):
+            m_count = matched.count()
+            if m_count == 0:
+                return {"doc_count": 0, "buckets": []}
+            p = self._table("postings")
+            if p is None:  # no segments: no postings, no termdict
+                return {"doc_count": m_count, "buckets": []}
+            fg = (p.filter(F.col("field") == f)
+                  .join(matched, on=["segment_id", "docid"], how="left_semi")
+                  .groupBy("term").agg(F.count("*").alias("fg")))
+            return self._jlh(fg, f, m_count, size)
+        return (), run
+
+    def _sig_text(self, name, kind, body, aggs):
+        """ES ``significant_text``: JLH like significant_terms, but the
+        FOREGROUND counts come from re-ANALYZING the stored text of the
+        matched docs with the field's own build tokenizer (Arrow-batched
+        — the same UDF the indexer runs), not from postings — so the
+        field must be stored AND carry a tokenizer; the background stays
+        the termdict (the field is indexed here — ES supports
+        un-indexed text, this engine's background statistics come from
+        its own postings).  What that buys over significant_terms on
+        this engine is ``filter_duplicate_text``: boilerplate/
+        retweet-style copies are collapsed to ONE doc per distinct text
+        (md5 window, first (segment, docid) kept — the ES near-dup
+        filter pinned to exact dedup) BEFORE counting, so a duplicated
+        passage cannot fake significance.  Foreground M = deduped
+        matched docs; background = the termdict's summed dfs over the
+        WHOLE index (undeduped — the ES asymmetry, documented).  One
+        doc-store join (its own, off the match keys) + one tokenize
+        projection + one per-term hash-agg; both JLH sides partition by
+        term."""
+        f = body.get("field")
+        fdef = self.schema.field(f) if f else None
+        if not f:
+            raise A.QueryError(f"agg {name!r}: missing field")
+        if fdef is None or not fdef.stored \
+                or not fdef.indexed or fdef.tokenizer is None:
+            raise A.QueryError(
+                f"agg {name!r}: significant_text needs a stored indexed "
+                f"text field, {f!r} is not one")
+        size = int(body.get("size", 10))
+        fdt = bool(body.get("filter_duplicate_text", False))
+
+        def run(matched, cands):
+            from sonar_tantivy_spark.operators.build import (
+                make_tokenize_udf,
+            )
+
+            docs = self._table("docs")
+            if docs is None:  # no segments: no doc store, no termdict
+                return {"doc_count": 0, "buckets": []}
+            fgdocs = matched.select("segment_id", "docid").join(
+                docs.select("segment_id", "docid", f),
+                on=["segment_id", "docid"])
+            if fdt:
+                from pyspark.sql import Window
+                w = Window.partitionBy(F.md5(F.coalesce(
+                    F.col(f), F.lit("")))).orderBy(
+                    F.asc("segment_id"), F.asc("docid"))
+                fgdocs = (fgdocs.withColumn("__r", F.row_number().over(w))
+                          .filter(F.col("__r") == 1).drop("__r"))
+            fgdocs = fgdocs.persist()
+            try:
+                m_count = fgdocs.count()
+                if m_count == 0:
+                    return {"doc_count": 0, "buckets": []}
+                tok = make_tokenize_udf(self.schema.tokenizer_for(f))
+                fg = (fgdocs
+                      .select(F.explode(F.array_distinct(
+                          tok(F.coalesce(F.col(f), F.lit("")))["terms"]))
+                          .alias("term"))
+                      .groupBy("term").agg(F.count("*").alias("fg")))
+                return self._jlh(fg, f, m_count, size)
+            finally:
+                fgdocs.unpersist()
+        return (), run
+
+    def _jlh(self, fg: DataFrame, field: str, m_count: int,
+             size: int) -> dict:
+        """The JLH tail significant_terms and significant_text share:
+        for each term of ``field`` in ``fg`` (term, fg), foreground rate
+        fg/M (M = ``m_count`` matched docs) vs background rate bg/N (the
+        termdict's summed dfs / num_docs); score = (fg/M − bg/N) ·
+        (fg/M)/(bg/N) for terms over-represented in the match set, 0
+        otherwise — the top ``size`` by score."""
+        bg = (self._table("termdict").filter(F.col("field") == field)
               .groupBy("term").agg(F.sum("df").alias("bg")))
         n = float(self.num_docs)
         fgp = F.col("fg").cast("double") / float(m_count)
@@ -4332,68 +4168,26 @@ class Searcher:
              "bg_count": int(r["bg"]), "score": float(r["score"])}
             for r in rows]}
 
-    def _sig_text(self, body: dict, matched: DataFrame) -> dict:
-        """ES ``significant_text``: JLH like significant_terms, but the
-        FOREGROUND counts come from re-ANALYZING the stored text of the
-        matched docs with the field's own build tokenizer (Arrow-batched
-        — the same UDF the indexer runs), not from postings.  What that
-        buys over significant_terms on this engine is
-        ``filter_duplicate_text``: boilerplate/retweet-style copies are
-        collapsed to ONE doc per distinct text (md5 window, first
-        (segment, docid) kept — the ES near-dup filter pinned to exact
-        dedup) BEFORE counting, so a duplicated passage cannot fake
-        significance.  Foreground M = deduped matched docs; background =
-        the termdict's summed dfs over the WHOLE index (undeduped — the
-        ES asymmetry, documented).  One doc-store join + one tokenize
-        projection + one per-term hash-agg; both JLH sides partition by
-        term."""
-        from sonar_tantivy_spark.operators.build import make_tokenize_udf
-
-        f = body["field"]
-        size = int(body.get("size", 10))
-        fdt = bool(body.get("filter_duplicate_text", False))
-        docs = self._table("docs")
-        td = self._table("termdict")
-        if docs is None or td is None:
-            return {"doc_count": 0, "buckets": []}
-        fgdocs = matched.select("segment_id", "docid").join(
-            docs.select("segment_id", "docid", f),
-            on=["segment_id", "docid"])
-        if fdt:
-            from pyspark.sql import Window
-            w = Window.partitionBy(F.md5(F.coalesce(
-                F.col(f), F.lit("")))).orderBy(
-                F.asc("segment_id"), F.asc("docid"))
-            fgdocs = (fgdocs.withColumn("__r", F.row_number().over(w))
-                      .filter(F.col("__r") == 1).drop("__r"))
-        fgdocs = fgdocs.persist()
-        try:
-            m_count = fgdocs.count()
-            if m_count == 0:
-                return {"doc_count": 0, "buckets": []}
-            tok = make_tokenize_udf(self.schema.tokenizer_for(f))
-            fg = (fgdocs
-                  .select(F.explode(F.array_distinct(
-                      tok(F.coalesce(F.col(f), F.lit("")))["terms"]))
-                      .alias("term"))
-                  .groupBy("term").agg(F.count("*").alias("fg")))
-            bg = (td.filter(F.col("field") == f)
-                  .groupBy("term").agg(F.sum("df").alias("bg")))
-            n = float(self.num_docs)
-            fgp = F.col("fg").cast("double") / float(m_count)
-            bgp = F.col("bg").cast("double") / n
-            score = (fgp - bgp) * (fgp / bgp)
-            rows = (fg.join(bg, on="term")
-                    .withColumn("score", score)
-                    .filter(F.col("score") > 0.0)
-                    .orderBy(F.desc("score"), F.asc("term"))
-                    .limit(size).collect())
-        finally:
-            fgdocs.unpersist()
-        return {"doc_count": m_count, "buckets": [
-            {"key": r["term"], "doc_count": int(r["fg"]),
-             "bg_count": int(r["bg"]), "score": float(r["score"])}
-            for r in rows]}
+    # every agg kind → its family (see "agg families" above)
+    _AGG_FAMILIES = {
+        "terms": _agg_terms, "histogram": _agg_histogram,
+        "date_histogram": _agg_date_histogram,
+        "auto_date_histogram": _agg_date_histogram,
+        "rare_terms": _agg_rare_terms, "composite": _agg_composite,
+        "multi_terms": _agg_multi_terms, "global": _agg_global,
+        "sampler": _agg_sampler, "diversified_sampler": _agg_sampler,
+        "filters": _agg_filters, "adjacency_matrix": _agg_adjacency_matrix,
+        "top_metrics": _agg_top_metrics, "t_test": _agg_t_test,
+        "matrix_stats": _agg_matrix_stats, "weighted_avg": _agg_weighted_avg,
+        **dict.fromkeys(_SUBAGG_METRICS, _agg_metric),
+        "extended_stats": _agg_extended_stats, "range": _agg_range,
+        "percentile_ranks": _agg_percentile_ranks,
+        "percentiles": _agg_percentiles, "missing": _agg_missing,
+        "median_absolute_deviation": _agg_median_absolute_deviation,
+        "boxplot": _agg_boxplot, "string_stats": _agg_string_stats,
+        "significant_terms": _sig_terms, "significant_text": _sig_text,
+        **dict.fromkeys(_SIBLING_KINDS, _agg_sibling),
+    }
 
     def fetch_stored(self, keys, fields) -> dict[tuple[str, int], dict]:
         """Stored ``fields`` of ``keys`` ((segment_id, local docid)

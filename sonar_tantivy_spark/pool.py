@@ -1,8 +1,9 @@
 """Error surfacing for the engine's thread pools of concurrent Spark jobs.
 
 Every pool site (build, merge, ``query_json``'s collectors, the
-runnable aggs, ``msearch``, ``multi_query``) waits on all of its futures
-through ``surface_all``, so no future's exception is silently dropped.
+runnable aggs, ``msearch``, ``multi_query``, the ANN recall
+measurements) waits on all of its futures through ``surface_all``, so
+no future's exception is silently dropped.
 """
 
 from __future__ import annotations

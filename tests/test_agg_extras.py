@@ -265,3 +265,29 @@ def test_validation_errors(index):
         _aggs(index, {"x": {"string_stats": {"field": "v"}}})
     with pytest.raises(A.QueryError):  # boxplot on text
         _aggs(index, {"x": {"boxplot": {"field": "cat"}}})
+    # the sub-agg typing rule holds under every bucket parent: a numeric
+    # metric over a text field fails at the parent, before any Spark job
+    with pytest.raises(A.QueryError):
+        _aggs(index, {"x": {"composite": {
+            "sources": [{"c": {"terms": {"field": "cat"}}}],
+            "aggs": {"m": {"avg": {"field": "tag"}}}}}})
+    with pytest.raises(A.QueryError):
+        _aggs(index, {"x": {"multi_terms": {
+            "terms": [{"field": "cat"}, {"field": "grp"}],
+            "aggs": {"m": {"sum": {"field": "tag"}}}}}})
+
+
+def test_unknown_kind_fails_at_validation(index, monkeypatch):
+    """An unknown agg kind is refused while the request is validated,
+    with a message naming it — no candidate set is planned first."""
+    from sonar_tantivy_spark.operators.search import Searcher
+
+    def planned(*a, **kw):
+        raise AssertionError("candidates planned before validation")
+
+    s = index.searcher()
+    node = A.parse_json({"term": {"body": "alpha"}}, s.schema)
+    monkeypatch.setattr(Searcher, "candidates", planned)
+    for body in ({}, {"field": "v"}):
+        with pytest.raises(A.QueryError, match="'foo'"):
+            s.aggregations(node, {"x": {"foo": body}})

@@ -276,6 +276,9 @@ def test_sampler_rejections(index):
     with pytest.raises(A.QueryError):
         _aggs(index, {"s": {"sampler": {"shard_size": 5, "aggs": {
             "th": {"top_hits": {"size": 2}}}}}})
+    with pytest.raises(A.QueryError):  # numeric sub-agg on a text field
+        _aggs(index, {"s": {"sampler": {"shard_size": 5, "aggs": {
+            "m": {"avg": {"field": "body"}}}}}})
 
 
 # diversified_sampler ---------------------------------------------------------
@@ -326,3 +329,7 @@ def test_diversified_sampler_rejections(index):
     with pytest.raises(A.QueryError):  # bad cap
         _aggs(index, {"s": {"diversified_sampler": {
             "shard_size": 5, "field": "v", "max_docs_per_value": 0}}})
+    with pytest.raises(A.QueryError):  # numeric sub-agg on a text field
+        _aggs(index, {"s": {"diversified_sampler": {
+            "shard_size": 5, "field": "v", "aggs": {
+                "m": {"stats": {"field": "body"}}}}}})

@@ -119,6 +119,42 @@ def test_ivf_recall_floor(spark):
     assert m["cand_frac"] < 0.45, m
 
 
+def test_recall_pools_surface_every_failure_and_unpersist(spark,
+                                                         monkeypatch):
+    """Both recall harnesses wait on every per-query job: two failing
+    queries both surface (one raised, the other attached as a note), and
+    the frame they persisted is released on the failure path too."""
+    from sonar_tantivy_spark.operators import ann
+
+    seen = {}
+    lsh_topk, ivf_topk = ann.lsh_topk, ann.IvfIndex.topk
+
+    def failing_lsh(emb_df, qid, *a, **kw):
+        seen["lsh"] = emb_df
+        if qid in (0, 2):
+            raise RuntimeError(f"lsh query {qid} failed")
+        return lsh_topk(emb_df, qid, *a, **kw)
+
+    def failing_ivf(self, qid, *a, **kw):
+        seen["ivf"] = self.assigned
+        if qid in (0, 2):
+            raise RuntimeError(f"ivf query {qid} failed")
+        return ivf_topk(self, qid, *a, **kw)
+
+    monkeypatch.setattr(ann, "lsh_topk", failing_lsh)
+    monkeypatch.setattr(ann.IvfIndex, "topk", failing_ivf)
+    for tag, measure in (("lsh", ann.measure_recall),
+                         ("ivf", ann.measure_recall_ivf)):
+        with pytest.raises(RuntimeError) as ei:
+            measure(spark, SF, n_queries=3, k=5)
+        report = " ".join([str(ei.value),
+                           *getattr(ei.value, "__notes__", [])])
+        assert f"{tag} query 0 failed" in report, report
+        assert f"{tag} query 2 failed" in report, report
+        level = seen[tag].storageLevel
+        assert not (level.useMemory or level.useDisk), (tag, level)
+
+
 def test_clean_corpus_single_scan(spark):
     """The composed cleaning pipeline must read documents ONCE (all
     per-doc signals in one projection) and shuffle ONCE (the dedup

@@ -330,3 +330,18 @@ def test_positions_plan_fails_closed_on_unknown_kind(index, monkeypatch):
     assert plan == {_T: None, "role": frozenset()}
     known = P.positions_plan({"q": A.BoolQ(must=[_CHAIN])}, index.schema)
     assert known == {_T: frozenset({"hello", "world"})}
+
+
+def test_module_imports_without_a_session():
+    """Importing the percolator builds no Column: a bare interpreter with
+    no SparkSession imports it cleanly."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    r = subprocess.run(
+        [sys.executable, "-c",
+         "import sonar_tantivy_spark.operators.percolate"],
+        cwd=root, capture_output=True, text=True, timeout=120)
+    assert r.returncode == 0, r.stderr
