@@ -31,8 +31,10 @@ Here every query compiles to a declarative Spark plan:
               the DEFAULT path is block-max segment pruning (top_k_pruned)
 
 Global BM25 stats (N, df, avgdl) aggregate over ALL manifest segments
-(SURVEY.md §2.9); per-term idf is resolved driver-side with one tiny
-termdict lookup job and folded into the score expression as a literal.
+(SURVEY.md §2.9); per-term idf is resolved driver-side from one
+dictionary lookup (Searcher._term_rows — on disk a pyarrow read of the
+termdict files, no Spark job) and folded into the score expression as a
+literal.
 """
 
 from __future__ import annotations
@@ -249,27 +251,30 @@ class Searcher:
             F.lit(0.0).alias("score"),
         )
 
+    def _term_rows(self, pairs) -> dict[tuple[str, str], tuple]:
+        """(field, term) → its dictionary rows, one per segment holding
+        it: (segment_id, df, max_tf, {block: max_tf} or None when the
+        epoch predates the block-granular termdict).  The one dictionary
+        lookup behind term_dfs / seg_max_tfs / seg_block_mtfs: misses
+        are read in ONE storage call (on disk a pyarrow read of the
+        termdict files, no Spark job) and memoized per snapshot, so a
+        repeated term never re-reads the termdict.  Restricted searchers
+        read through to the parent (whole-snapshot rows)."""
+        if self._parent is not None:
+            return self._parent._term_rows(pairs)
+        if not self.segments:
+            return {p: () for p in pairs}
+        return self._memoized(
+            "td", pairs, lambda missing: self.storage.termdict_rows(
+                self.spark, self.segments, missing, self._memoized))
+
     def term_dfs(self, pairs: set[tuple[str, str]]) -> dict[tuple[str, str], int]:
-        """Global doc-freq per (field, term): one pushdown-filtered termdict
-        scan summed across segments; memoized per searcher snapshot."""
+        """Global doc-freq per (field, term): the per-segment dfs of
+        _term_rows, summed."""
         if not pairs or not self.segments:
             return {}
-        if self._parent is not None:
-            return self._parent.term_dfs(pairs)
-
-        def compute(missing: list) -> dict:
-            td = self._table("termdict")
-            rows = (
-                td.filter(F.col("field").isin(sorted({f for f, _ in missing}))
-                          & F.col("term").isin(sorted({t for _, t in missing})))
-                .groupBy("field", "term")
-                .agg(F.sum("df").alias("df"))
-                .collect()
-            )
-            out = {(r["field"], r["term"]): int(r["df"]) for r in rows}
-            return {p: out.get(p, 0) for p in missing}
-
-        return self._memoized("df", pairs, compute)
+        return {p: sum(r[1] for r in rows)
+                for p, rows in self._term_rows(pairs).items()}
 
     # ------------------------------------------------------------- scoring
     def _score_col(self, field: str, idf: float, tf_col: Column) -> Column:
@@ -285,10 +290,13 @@ class Searcher:
         """Dictionary terms the EXPANSION clauses (prefix / regex /
         fuzzy) of ``node`` can match on ``field`` — so snippets can
         highlight them (collect_positive_terms only sees literal
-        terms).  One pushdown-filtered termdict scan per clause,
-        capped: highlighting is best-effort, and a broad ``a*`` must
-        not collect an unbounded dictionary slice driver-side.
-        must_not clauses never highlight (tantivy semantics)."""
+        terms).  Capped per clause: highlighting is best-effort, and a
+        broad ``a*`` must not collect an unbounded dictionary slice
+        driver-side.  A prefix clause is a dictionary range read (the
+        first ``cap`` terms in term order; on disk no Spark job);
+        regex and fuzzy clauses take one pushdown-filtered termdict
+        scan each.  must_not clauses never highlight (tantivy
+        semantics)."""
         clauses: list[A.Node] = []
 
         def walk(n: A.Node) -> None:
@@ -309,17 +317,20 @@ class Searcher:
                 walk(n.positive)  # negative clauses never highlight
 
         walk(node)
-        if not clauses:
-            return set()
-        td = self._table("termdict")
-        if td is None:
+        if not clauses or not self.segments:
             return set()
         out: set[str] = set()
         for c in clauses:
-            terms = td.filter(F.col("field") == field)
             if isinstance(c, A.PrefixQ):
-                terms = terms.filter(F.col("term").startswith(c.prefix))
-            elif isinstance(c, A.RegexQ):
+                out.update(self.storage.termdict_prefix(
+                    self.spark, self.segments, field, c.prefix, cap,
+                    self._memoized))
+                continue
+            td = self._table("termdict")
+            if td is None:  # every segment is a ghost
+                continue
+            terms = td.filter(F.col("field") == field)
+            if isinstance(c, A.RegexQ):
                 terms = terms.filter(
                     F.col("term").rlike("^(?:" + c.pattern + ")$"))
                 lit = regex_literal_prefix(c.pattern)
@@ -1901,50 +1912,16 @@ class Searcher:
         )
         return sub
 
-    def _max_tf_maps(self, pairs) -> dict:
-        """(field, term) → ({segment_id: max_tf}, {segment_id: {block:
-        max_tf}}); one pushdown-filtered termdict scan for the misses,
-        memoized per searcher snapshot (a repeated query never re-reads
-        the termdict).  The block maps come from the termdict
-        ``block_mtf`` column (written since the block-granular WAND
-        build), so one lookup job serves both granularities."""
-        if self._parent is not None:
-            return self._parent._max_tf_maps(pairs)
-        if not self.segments:
-            return {p: ({}, {}) for p in pairs}
-
-        def compute(missing: list) -> dict:
-            td = self._table("termdict")
-            has_blocks = "block_mtf" in td.columns
-            cols = ["segment_id", "field", "term", "max_tf"]
-            if has_blocks:
-                cols.append("block_mtf")
-            rows = (
-                td.filter(F.col("field").isin(sorted({f for f, _ in missing}))
-                          & F.col("term").isin(sorted({t for _, t in missing})))
-                .select(*cols).collect()
-            )
-            out = {p: ({}, {}) for p in missing}
-            for r in rows:
-                maps = out.get((r["field"], r["term"]))
-                if maps is None:
-                    continue
-                maps[0][r["segment_id"]] = int(r["max_tf"])
-                if has_blocks and r["block_mtf"] is not None:
-                    maps[1][r["segment_id"]] = {
-                        int(b): int(m) for b, m in r["block_mtf"].items()}
-            return out
-
-        return self._memoized("mtf", pairs, compute)
-
     def seg_max_tfs(self, pairs: set[tuple[str, str]]) -> dict:
-        """(field, term) → {segment_id: max_tf} (see _max_tf_maps)."""
-        return {p: m[0] for p, m in self._max_tf_maps(pairs).items()}
+        """(field, term) → {segment_id: max_tf} (see _term_rows)."""
+        return {p: {r[0]: r[2] for r in rows}
+                for p, rows in self._term_rows(pairs).items()}
 
     def seg_block_mtfs(self, pairs: set[tuple[str, str]]) -> dict:
-        """(field, term) → {segment_id: {block: max_tf}} (empty maps
-        when the index predates the block-granular termdict)."""
-        return {p: m[1] for p, m in self._max_tf_maps(pairs).items()}
+        """(field, term) → {segment_id: {block: max_tf}} (no entry for a
+        segment whose epoch predates the block-granular termdict)."""
+        return {p: {r[0]: r[3] for r in rows if r[3] is not None}
+                for p, rows in self._term_rows(pairs).items()}
 
     def _segment_bounds(self, node: A.Node) -> dict[str, float] | None:
         """Per-segment upper bound of ``node``'s score, or None when the
@@ -2797,6 +2774,12 @@ class Searcher:
             family = self._AGG_FAMILIES.get(kind)
             if family is None:
                 raise A.QueryError(f"agg {name!r}: unknown kind {kind!r}")
+            if isinstance(body, dict) and "aggs" in body \
+                    and kind not in self._SUB_AGG_KINDS:
+                raise A.QueryError(
+                    f"agg {name!r}: {kind} takes no sub-aggs; they are "
+                    f"only supported under bucket aggs "
+                    f"({'/'.join(self._SUB_AGG_KINDS)})")
             need, run = family(self, name, kind, body or {}, norm)
             fields.update(need)
             # sibling pipeline aggs run over the other aggs' REDUCED
@@ -2873,18 +2856,13 @@ class Searcher:
         return fdef
 
     def _field_of(self, name: str, kind: str, body: dict,
-                  types: tuple = (), sub_aggs: bool = False) -> str:
+                  types: tuple = ()) -> str:
         """``body["field"]`` of a single-field agg, checked by
-        _agg_field; only the bucket families take an ``aggs`` block."""
+        _agg_field."""
         f = body.get("field")
         if not f:
             raise A.QueryError(f"agg {name!r}: missing field")
         self._agg_field(name, f, types, kind)
-        if "aggs" in body and not sub_aggs:
-            raise A.QueryError(
-                f"agg {name!r}: sub-aggs are only supported under "
-                f"bucket aggs (terms/histogram/date_histogram/composite/"
-                f"multi_terms/global/sampler)")
         return f
 
     def _bucket_rows(self, frame: DataFrame, keys: list,
@@ -2942,7 +2920,7 @@ class Searcher:
         return out
 
     def _agg_terms(self, name, kind, body, aggs):
-        f = self._field_of(name, kind, body, sub_aggs=True)
+        f = self._field_of(name, kind, body)
         metrics, th, pipes = self._check_sub_aggs(
             name, body, top_hits_ok=True, pipes_ok=True)
         size = int(body.get("size", 10))
@@ -2991,7 +2969,7 @@ class Searcher:
         return [f, *(sf for _, _, sf in metrics)], run
 
     def _agg_histogram(self, name, kind, body, aggs):
-        f = self._field_of(name, kind, body, self._NUMERIC, sub_aggs=True)
+        f = self._field_of(name, kind, body, self._NUMERIC)
         metrics, _, pipes = self._check_sub_aggs(name, body, pipes_ok=True)
         interval = float(body["interval"])
         if interval <= 0:
@@ -3034,7 +3012,7 @@ class Searcher:
         # picks the unit; the buckets themselves come from exact
         # date_trunc), then the same one-hash-agg plan on the chosen unit.
         auto = kind == "auto_date_histogram"
-        f = self._field_of(name, kind, body, ("date",), sub_aggs=not auto)
+        f = self._field_of(name, kind, body, ("date",))
         metrics, _, pipes = self._check_sub_aggs(name, body, pipes_ok=True)
         unit = str(body.get("calendar_interval", "day")).lower()
         if auto:
@@ -3118,7 +3096,7 @@ class Searcher:
             self._agg_field(name, sf, where=f"composite source {sname!r}: ")
             keys.append((sf, F.col(sf).alias(sname)))
             snames.append(sname)
-        metrics, _, _ = self._check_sub_aggs(name, body, pipes_ok=True)
+        metrics, _, pipes = self._check_sub_aggs(name, body, pipes_ok=True)
         size = int(body.get("size", 10))
         after = body.get("after")
         pred = None
@@ -3143,10 +3121,13 @@ class Searcher:
             buckets = [{"key": {sn: r[sn] for sn in snames},
                         "doc_count": int(r["doc_count"]),
                         **self._shape_metrics(metrics, r)} for r in rows]
-            res: dict = {"buckets": buckets}
+            # the page cursor is the last composite bucket, whatever a
+            # pipeline (bucket_selector / bucket_sort) keeps of the page
+            res: dict = {}
             if len(buckets) == size:
                 res["after_key"] = dict(buckets[-1]["key"])
-            return res
+            return {"buckets": self._apply_pipes(name, buckets, pipes),
+                    **res}
         return [*(sf for sf, _ in keys), *(sf for _, _, sf in metrics)], run
 
     def _agg_multi_terms(self, name, kind, body, aggs):
@@ -3167,7 +3148,7 @@ class Searcher:
                     f"agg {name!r}: each multi_terms term is {{'field': ..}}")
             self._agg_field(name, tf)
             keys.append((tf, F.col(tf).alias(f"__k{i}")))
-        metrics, _, _ = self._check_sub_aggs(name, body, pipes_ok=True)
+        metrics, _, pipes = self._check_sub_aggs(name, body, pipes_ok=True)
         size = int(body.get("size", 10))
         kn = [f"__k{i}" for i in range(len(keys))]
 
@@ -3175,11 +3156,11 @@ class Searcher:
             rows = (self._bucket_rows(matched, keys, metrics)
                     .orderBy(F.desc("doc_count"), *[F.asc(k) for k in kn])
                     .limit(size).collect())
-            return {"buckets": [
+            return {"buckets": self._apply_pipes(name, [
                 {"key": [r[k] for k in kn],
                  "key_as_string": "|".join(str(r[k]) for k in kn),
                  "doc_count": int(r["doc_count"]),
-                 **self._shape_metrics(metrics, r)} for r in rows]}
+                 **self._shape_metrics(metrics, r)} for r in rows], pipes)}
         return [*(tf for tf, _ in keys), *(sf for _, _, sf in metrics)], run
 
     def _agg_global(self, name, kind, body, aggs):
@@ -3688,6 +3669,10 @@ class Searcher:
             return st  # stats_bucket / extended_stats_bucket
         return (), reduce
 
+    # the kinds whose family reads an ``aggs`` sub-agg block
+    _SUB_AGG_KINDS = ("terms", "histogram", "date_histogram", "composite",
+                      "multi_terms", "global", "sampler",
+                      "diversified_sampler")
     _SUBAGG_METRICS = ("avg", "sum", "min", "max", "value_count",
                        "stats", "cardinality")
     _NUMERIC_METRICS = ("avg", "sum", "min", "max", "stats")

@@ -80,22 +80,84 @@ def _data_files(root: str) -> list[str]:
     return out
 
 
-def _footers(part_dir: str) -> list[tuple[str, Any, list, list]]:
-    """(path, footer, column names, per-row-group docid (min, max)) for
-    every data file of one segment partition; a bound is None when the
-    writer kept no statistics (the row group is then always read)."""
+def _footers(part_dir: str, keys: tuple[str, ...]) -> list[tuple]:
+    """(path, footer, column names, per-row-group bounds) for every data
+    file of one segment partition; a row group's bounds hold one
+    (min, max) per ``keys`` column, (None, None) where the writer kept
+    no statistics (the row group then always passes that column)."""
     out = []
     for path in _data_files(part_dir):
         meta = pq.read_metadata(path)
         names = meta.schema.to_arrow_schema().names
-        ci = names.index("docid")
-        ranges = []
+        cis = [names.index(k) for k in keys]
+        bounds = []
         for i in range(meta.num_row_groups):
-            st = meta.row_group(i).column(ci).statistics
-            ranges.append((st.min, st.max) if st is not None
-                          and st.has_min_max else (None, None))
-        out.append((path, meta, names, ranges))
+            rg = meta.row_group(i)
+            b = []
+            for ci in cis:
+                st = rg.column(ci).statistics
+                b.append((st.min, st.max) if st is not None
+                         and st.has_min_max else (None, None))
+            bounds.append(tuple(b))
+        out.append((path, meta, names, bounds))
     return out
+
+
+def _within(bound: tuple, v) -> bool:
+    lo, hi = bound
+    return lo is None or lo <= v <= hi
+
+
+# the columns each point-read table's row groups are pruned on: the
+# docs files are written sorted by docid, the termdict files by
+# (field, term) within a segment (build.py, merge.py)
+_KEYS = {"docs": ("docid",), "termdict": ("field", "term")}
+
+
+def _read_pruned(table: str, segments: list[dict], memoized: Callable,
+                 keep: Callable, wanted: set[str]):
+    """(segment_id, arrow table) per data file of the ``segments`` that
+    have ``table``, holding only the row groups whose key-column
+    bounds pass ``keep(segment_id, bounds)`` and only the ``wanted``
+    columns the file has, in the file's column order — no Spark job.
+    The files' footers and bounds come from ``memoized`` (the Searcher's
+    snapshot memo, one entry per segment); ghost segments (no ``table``
+    dir) are skipped."""
+    dirs = {s["segment_id"]: s["tables"][table] for s in segments
+            if s["tables"].get(table)}
+    if not dirs:
+        return
+    keys = _KEYS[table]
+    files = memoized(f"footers:{table}", list(dirs),
+                     lambda missing: {sid: _footers(dirs[sid], keys)
+                                      for sid in missing})
+    for sid, seg_files in files.items():
+        for path, meta, names, bounds in seg_files:
+            rgs = [i for i, b in enumerate(bounds) if keep(sid, b)]
+            if rgs:
+                yield sid, pq.ParquetFile(
+                    path, metadata=meta, coerce_int96_timestamp_unit="us",
+                ).read_row_groups(rgs, columns=[c for c in names
+                                                if c in wanted])
+
+
+def _td_row(sid: str, df: int, max_tf: int, bmtf) -> tuple:
+    """One segment's dictionary row of a (field, term): (segment_id,
+    df, max_tf, {block: max_tf} from the ``bmtf`` (block, max_tf)
+    entries, or None when the epoch predates the block-granular
+    termdict)."""
+    return (sid, int(df), int(max_tf),
+            None if bmtf is None else {int(b): int(m) for b, m in bmtf})
+
+
+def _by_pair(pairs: set, rows) -> dict:
+    """{(field, term): (its dictionary row per segment)} from ``rows``
+    of (field, term, row); pairs with no row map to ()."""
+    out: dict = {p: [] for p in pairs}
+    for f, t, row in rows:
+        if (f, t) in out:
+            out[(f, t)].append(row)
+    return {p: tuple(v) for p, v in out.items()}
 
 
 def _py_values(col: pa.ChunkedArray, binary_as_bytes: bool) -> list:
@@ -259,44 +321,82 @@ class FsStorage:
         memoized: Callable,
     ) -> dict[tuple[str, int], dict]:
         """Point read of ``keys`` (segment_id, local docid) straight from
-        the parquet files — no Spark job.  Per hit segment the data
-        files' docid row-group ranges come from ``memoized`` (the
-        Searcher's snapshot memo, one entry per segment); only row
-        groups that can hold a wanted docid are decoded, and only the
-        wanted ``columns`` the file has.  A column missing from a file
-        (an older epoch) is absent from its rows; keys keep the file's
+        the parquet files — no Spark job (_read_pruned): only row groups
+        that can hold a wanted docid are decoded, and only the wanted
+        ``columns`` the file has.  A column missing from a file (an
+        older epoch) is absent from its rows; keys keep the file's
         column order."""
         want: dict[str, set[int]] = {}
         for sid, d in keys:
             want.setdefault(sid, set()).add(int(d))
-        dirs = {s["segment_id"]: s["tables"][table] for s in segments
-                if s["segment_id"] in want and s["tables"].get(table)}
-        if not dirs:
-            return {}
-        files = memoized(f"footers:{table}", list(dirs),
-                         lambda missing: {sid: _footers(dirs[sid])
-                                          for sid in missing})
         as_bytes = spark.conf.get(
             "spark.sql.execution.pyspark.binaryAsBytes", "true") == "true"
-        wanted = set(columns)
         out: dict[tuple[str, int], dict] = {}
-        for sid, seg_files in files.items():
-            ids = want[sid]
-            for path, meta, names, ranges in seg_files:
-                rgs = [i for i, (lo, hi) in enumerate(ranges)
-                       if lo is None or any(lo <= d <= hi for d in ids)]
-                if not rgs:
-                    continue
-                cols = [c for c in names if c in wanted and c != "docid"]
-                tbl = pq.ParquetFile(
-                    path, metadata=meta, coerce_int96_timestamp_unit="us",
-                ).read_row_groups(rgs, columns=["docid", *cols])
-                tbl = tbl.filter(pc.is_in(tbl["docid"],
-                                          pa.array(sorted(ids), pa.int64())))
-                vals = [_py_values(tbl[c], as_bytes) for c in cols]
-                for r, d in enumerate(tbl["docid"].to_pylist()):
-                    out[(sid, d)] = {c: v[r] for c, v in zip(cols, vals)}
+        for sid, tbl in _read_pruned(
+                table, [s for s in segments if s["segment_id"] in want],
+                memoized,
+                lambda sid, b: any(_within(b[0], d) for d in want[sid]),
+                {*columns, "docid"}):
+            tbl = tbl.filter(pc.is_in(
+                tbl["docid"], pa.array(sorted(want[sid]), pa.int64())))
+            cols = [c for c in tbl.column_names if c != "docid"]
+            vals = [_py_values(tbl[c], as_bytes) for c in cols]
+            for r, d in enumerate(tbl["docid"].to_pylist()):
+                out[(sid, d)] = {c: v[r] for c, v in zip(cols, vals)}
         return out
+
+    def termdict_rows(
+        self, spark: SparkSession, segments: list[dict],
+        pairs: list[tuple[str, str]], memoized: Callable,
+    ) -> dict[tuple[str, str], tuple]:
+        """(field, term) → its dictionary row per segment (_td_row),
+        read straight from the termdict files — no Spark job: only row
+        groups whose field/term bounds can hold a wanted pair are
+        decoded (_read_pruned), then filtered to the pairs."""
+        pairs = set(pairs)
+        fields = pa.array(sorted({f for f, _ in pairs}), pa.string())
+        terms = pa.array(sorted({t for _, t in pairs}), pa.string())
+        rows = []
+        for sid, tbl in _read_pruned(
+                "termdict", segments, memoized,
+                lambda sid, b: any(_within(b[0], f) and _within(b[1], t)
+                                   for f, t in pairs),
+                # block_mtf is absent from epochs written before the
+                # block-granular termdict
+                {"field", "term", "df", "max_tf", "block_mtf"}):
+            tbl = tbl.filter(pc.and_(pc.is_in(tbl["field"], fields),
+                                     pc.is_in(tbl["term"], terms)))
+            bmtf = (tbl["block_mtf"].to_pylist()
+                    if "block_mtf" in tbl.column_names
+                    else [None] * tbl.num_rows)
+            rows.extend(
+                (f, t, _td_row(sid, df, mtf, b)) for f, t, df, mtf, b in zip(
+                    tbl["field"].to_pylist(), tbl["term"].to_pylist(),
+                    tbl["df"].to_pylist(), tbl["max_tf"].to_pylist(), bmtf))
+        return _by_pair(pairs, rows)
+
+    def termdict_prefix(
+        self, spark: SparkSession, segments: list[dict], field: str,
+        prefix: str, cap: int, memoized: Callable,
+    ) -> list[str]:
+        """The first ``cap`` distinct terms of ``field`` starting with
+        ``prefix``, in term order — the dictionary range [prefix,
+        prefix⁺), read like termdict_rows: a row group is decoded only
+        when its bounds overlap the range."""
+        n = len(prefix)
+
+        def keep(sid, b):
+            (tlo, thi) = b[1]
+            return _within(b[0], field) and (
+                tlo is None or (thi >= prefix and tlo[:n] <= prefix))
+
+        found: set[str] = set()
+        for _, tbl in _read_pruned("termdict", segments, memoized, keep,
+                                   {"field", "term"}):
+            tbl = tbl.filter(pc.and_(pc.equal(tbl["field"], field),
+                                     pc.starts_with(tbl["term"], prefix)))
+            found.update(tbl["term"].to_pylist())
+        return sorted(found)[:cap]
 
 
 class MemStorage:
@@ -395,3 +495,40 @@ class MemStorage:
             for r in df.filter(key_filter(keys))
             .select("segment_id", "docid", *cols).collect()
         }
+
+    def termdict_rows(
+        self, spark: SparkSession, segments: list[dict],
+        pairs: list[tuple[str, str]], memoized: Callable,
+    ) -> dict[tuple[str, str], tuple]:
+        """termdict_rows as ONE pushdown-filtered Spark collect."""
+        pairs = set(pairs)
+        df = self.load_table(spark, "termdict", segments)
+        if df is None:
+            return {p: () for p in pairs}
+        # block maps as (block, max_tf) entries, like the file read's
+        bmtf = (F.map_entries("block_mtf") if "block_mtf" in df.columns
+                else F.lit(None))
+        got = (df.filter(F.col("field").isin(sorted({f for f, _ in pairs}))
+                         & F.col("term").isin(sorted({t for _, t in pairs})))
+               .select("segment_id", "field", "term", "df", "max_tf",
+                       bmtf.alias("block_mtf"))
+               .collect())
+        return _by_pair(pairs, [
+            (r["field"], r["term"], _td_row(
+                r["segment_id"], r["df"], r["max_tf"], r["block_mtf"]))
+            for r in got])
+
+    def termdict_prefix(
+        self, spark: SparkSession, segments: list[dict], field: str,
+        prefix: str, cap: int, memoized: Callable,
+    ) -> list[str]:
+        """termdict_prefix as one Spark job (first ``cap`` in term
+        order, like the file read)."""
+        df = self.load_table(spark, "termdict", segments)
+        if df is None:
+            return []
+        return [r["term"] for r in
+                df.filter((F.col("field") == field)
+                          & F.col("term").startswith(prefix))
+                .select("term").distinct().orderBy("term").limit(cap)
+                .collect()]

@@ -291,3 +291,74 @@ def test_unknown_kind_fails_at_validation(index, monkeypatch):
     for body in ({}, {"field": "v"}):
         with pytest.raises(A.QueryError, match="'foo'"):
             s.aggregations(node, {"x": {"foo": body}})
+
+
+# hand-computed: body:alpha keeps i % 4 != 3, so over i % 12 the cat
+# c0/c2/c4 buckets hold 40 docs each and c1/c3/c5 hold 20; grp follows
+# cat (g = c mod 3)
+def test_composite_applies_pipeline_sub_aggs(index):
+    out = _aggs(index, {"c": {"composite": {
+        "sources": [{"c": {"terms": {"field": "cat"}}}], "size": 4,
+        "aggs": {"cs": {"cumulative_sum": {"buckets_path": "doc_count"}},
+                 "dv": {"derivative": {"buckets_path": "doc_count"}}}}}})
+    got = out["c"]["buckets"]
+    assert [(b["key"]["c"], b["doc_count"]) for b in got] == [
+        ("c0", 40), ("c1", 20), ("c2", 40), ("c3", 20)]
+    assert [b["cs"]["value"] for b in got] == [40.0, 60.0, 100.0, 120.0]
+    assert [b.get("dv", {}).get("value") for b in got] == [
+        None, -20, 20, -20]
+    assert out["c"]["after_key"] == {"c": "c3"}
+    # a selector thins the page; the cursor stays the page's last key
+    out = _aggs(index, {"c": {"composite": {
+        "sources": [{"c": {"terms": {"field": "cat"}}}], "size": 4,
+        "aggs": {"k": {"bucket_selector": {
+            "buckets_path": {"n": "doc_count"}, "script": "n > 30"}}}}}})
+    assert [b["key"]["c"] for b in out["c"]["buckets"]] == ["c0", "c2"]
+    assert out["c"]["after_key"] == {"c": "c3"}
+
+
+def test_multi_terms_applies_pipeline_sub_aggs(index):
+    out = _aggs(index, {"mt": {"multi_terms": {
+        "terms": [{"field": "cat"}, {"field": "grp"}], "size": 6,
+        "aggs": {"cs": {"cumulative_sum": {"buckets_path": "doc_count"}},
+                 "dv": {"derivative": {"buckets_path": "doc_count"}},
+                 "top": {"bucket_sort": {"from": 1, "size": 4}}}}}})
+    got = out["mt"]["buckets"]
+    # bucket_sort runs last: from 1, size 4 over the six buckets
+    assert [(b["key_as_string"], b["doc_count"]) for b in got] == [
+        ("c2|g2", 40), ("c4|g1", 40), ("c1|g1", 20), ("c3|g0", 20)]
+    assert [b["cs"]["value"] for b in got] == [80.0, 120.0, 140.0, 160.0]
+    assert [b["dv"]["value"] for b in got] == [0, 0, -20, 0]
+
+
+@pytest.mark.parametrize("kind,body", [
+    ("filters", {"filters": {"a": {"term": {"body": "extra"}}}}),
+    ("adjacency_matrix", {"filters": {"a": {"term": {"body": "extra"}}}}),
+    ("top_metrics", {"metrics": [{"field": "v"}], "sort": {"w": "desc"}}),
+    ("t_test", {"a": {"field": "v"}, "b": {"field": "w"}}),
+    ("matrix_stats", {"fields": ["v", "w"]}),
+    ("weighted_avg", {"value": {"field": "v"}, "weight": {"field": "w"}}),
+    ("significant_terms", {"field": "body"}),
+    ("significant_text", {"field": "body"}),
+    ("auto_date_histogram", {"field": "v"}),
+    ("max_bucket", {"buckets_path": "h>_count"}),
+    ("stats_bucket", {"buckets_path": "h>_count"}),
+])
+def test_ignored_sub_agg_block_fails_at_validation(index, monkeypatch, kind,
+                                                  body):
+    """A kind that reads no ``aggs`` block refuses one while the request
+    is validated, naming the agg — in body and in the ES sibling shape —
+    instead of answering without it."""
+    from sonar_tantivy_spark.operators.search import Searcher
+
+    def planned(*a, **kw):
+        raise AssertionError("candidates planned before validation")
+
+    s = index.searcher()
+    node = A.parse_json({"term": {"body": "alpha"}}, s.schema)
+    monkeypatch.setattr(Searcher, "candidates", planned)
+    sub = {"m": {"avg": {"field": "v"}}}
+    hist = {"h": {"histogram": {"field": "v", "interval": 10}}}
+    for spec in ({kind: dict(body, aggs=sub)}, {kind: body, "aggs": sub}):
+        with pytest.raises(A.QueryError, match="'bad'.*takes no sub-aggs"):
+            s.aggregations(node, {**hist, "bad": spec})
