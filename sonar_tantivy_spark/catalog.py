@@ -18,6 +18,7 @@ from __future__ import annotations
 import itertools
 import math
 import threading
+from functools import partial
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -32,7 +33,7 @@ from sonar_tantivy_spark.operators.snippet import (
 )
 from sonar_tantivy_spark.plans import ast as A
 from sonar_tantivy_spark.plans.schema import IndexSchema
-from sonar_tantivy_spark.pool import surface_all
+from sonar_tantivy_spark.pool import run_all
 from sonar_tantivy_spark.sources.tableio import FsStorage, MemStorage, key_filter
 
 DEFAULT_QUERY_LIMIT = 10  # handles.rs:143 unwrap_or(10)
@@ -407,11 +408,9 @@ class Index:
             try:
                 # the hit page, facet counts and aggregations are
                 # independent collectors over the SAME persisted scan —
-                # submit them as concurrent Spark jobs (a small thread
+                # run them as concurrent Spark jobs (a small thread
                 # pool) so the tiny top-k job's tail overlaps the agg
                 # jobs instead of serializing one barrier per collector
-                from concurrent.futures import ThreadPoolExecutor
-
                 def _hits() -> list:
                     # post_filter: the persisted cand frame is the
                     # AGGS-side match set; the trimmed hit side runs its
@@ -434,21 +433,15 @@ class Index:
                     key = "facet" if roots else field
                     return {field: {r[key]: r["count"] for r in counts}}
 
-                with ThreadPoolExecutor(max_workers=3) as pool:
-                    fut_hits = pool.submit(_hits)
-                    fut_facets = pool.submit(_facets) if facets else None
-                    fut_aggs = (pool.submit(s.aggregations, node, aggs,
-                                            cand)
-                                if aggs else None)
-                    futs = [f for f in (fut_hits, fut_facets, fut_aggs)
-                            if f is not None]
-                    with surface_all(futs):
-                        out: dict[str, Any] = {
-                            "docs": _page(fut_hits.result()), "facets": {}}
-                        if fut_facets is not None:
-                            out["facets"] = fut_facets.result()
-                        if fut_aggs is not None:
-                            out["aggs"] = fut_aggs.result()
+                collectors = {"docs": _hits}
+                if facets:
+                    collectors["facets"] = _facets
+                if aggs:
+                    collectors["aggs"] = partial(s.aggregations, node, aggs,
+                                                 cand)
+                out: dict[str, Any] = {"docs": None, "facets": {}}
+                out.update(zip(collectors, run_all(collectors.values(), 3)))
+                out["docs"] = _page(out["docs"])
                 return _done(out)
             finally:
                 cand.unpersist()
@@ -1260,14 +1253,7 @@ class Index:
         as CONCURRENT Spark jobs (same rationale as multi_query —
         serial looping is pure added latency on a cluster that can
         interleave)."""
-        from concurrent.futures import ThreadPoolExecutor
-
-        if len(searches) <= 1:
-            return [self.query_json(s) for s in searches]
-        with ThreadPoolExecutor(max_workers=min(8, len(searches))) as pool:
-            futs = [pool.submit(self.query_json, s) for s in searches]
-            with surface_all(futs):
-                return [f.result() for f in futs]
+        return run_all([partial(self.query_json, s) for s in searches], 8)
 
     def num_deleted(self) -> int:
         """Live tombstone count (rows for already-compacted segments
@@ -1752,16 +1738,10 @@ class IndexCatalog:
         interleaves them across executors) — the reference loops
         serially, but nothing in its contract requires that, and at many
         indexes the serial loop is pure added latency."""
-        from concurrent.futures import ThreadPoolExecutor
-
-        if len(names) <= 1:
-            return {n: self.open(n).query(query, limit=MULTI_QUERY_LIMIT)
-                    for n in names}
-        with ThreadPoolExecutor(max_workers=min(8, len(names))) as pool:
-            futs = {n: pool.submit(
-                self.open(n).query, query, MULTI_QUERY_LIMIT) for n in names}
-            with surface_all(list(futs.values())):
-                return {n: f.result() for n, f in futs.items()}
+        idxs = {n: self.open(n) for n in names}
+        return dict(zip(idxs, run_all(
+            [partial(i.query, query, limit=MULTI_QUERY_LIMIT)
+             for i in idxs.values()], 8)))
 
     def list_indexes(self) -> list[str]:
         """All committed index names under the base path (ES _cat/indices

@@ -25,6 +25,7 @@ and shrinks the candidate fraction at the same recall.
 from __future__ import annotations
 
 import math
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -32,7 +33,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sonar_tantivy_spark.pool import surface_all
+from sonar_tantivy_spark.pool import run_all
 
 N_TABLES = 8
 N_PLANES = 7  # per table; plane vectors = corpus vec_ids 1..56
@@ -418,13 +419,8 @@ def _pooled_sums(one, n_queries: int) -> tuple[int, int]:
     """Run ``one(qid)`` for every query id from a small thread pool (the
     tiny per-query jobs overlap) and sum its (hits, candidates) pairs.
     Every query is waited on: a failure raises with the other failures
-    attached as notes (pool.surface_all)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    futs: list = []
-    with ThreadPoolExecutor(max_workers=8) as pool, surface_all(futs):
-        futs.extend(pool.submit(one, qid) for qid in range(n_queries))
-    pairs = [f.result() for f in futs]
+    attached as notes (pool.run_all)."""
+    pairs = run_all([partial(one, qid) for qid in range(n_queries)], 8)
     return sum(h for h, _ in pairs), sum(c for _, c in pairs)
 
 

@@ -47,8 +47,9 @@ from pyspark.storagelevel import StorageLevel
 
 from sonar_tantivy_spark.analyzer import tokenize as _tokenize_py
 from sonar_tantivy_spark.functions.bm25 import fieldnorm_id_col
+from sonar_tantivy_spark.plans.ast import QueryError
 from sonar_tantivy_spark.plans.schema import IndexSchema
-from sonar_tantivy_spark.pool import surface_all
+from sonar_tantivy_spark.pool import jobs
 
 _TOKENS_TYPE = T.StructType(
     [
@@ -262,6 +263,17 @@ def build_segments(
     (input pruned by docid range) — duplicate registration is impossible
     by construction, mirroring index.rs:314-316.
     """
+    # the zone maps read a date field as epoch seconds, which a
+    # zone-less TIMESTAMP_NTZ has none of; fail before any table is
+    # written rather than at the zone-map cast after all four are
+    for f in schema.fields:
+        if f.type == "date" and f.name in docs_df.columns and \
+                isinstance(docs_df.schema[f.name].dataType,
+                           T.TimestampNTZType):
+            raise QueryError(
+                f"date field {f.name!r} is TIMESTAMP_NTZ; cast it to "
+                f"TIMESTAMP (which zone an NTZ value means is the "
+                f"caller's choice)")
     t0 = time.time()
     phase_walls: dict[str, float] = {}
     _tp = [t0]
@@ -441,16 +453,12 @@ def build_segments(
     # docs write overlaps the postings job, and doclens/termdict overlap
     # each other — their small shuffles would otherwise serialize 3 job
     # barriers while most executor cores idle.
-    from concurrent.futures import ThreadPoolExecutor
-
-    side: list = []
-    with ThreadPoolExecutor(max_workers=2) as pool, surface_all(side):
-        fut_docs = pool.submit(
+    with jobs(2) as submit:
+        fut_docs = submit(
             storage.write_table,
             docs_tbl.sortWithinPartitions("segment_id", "docid"), epoch, "docs",
             tuple(docs_part_cols),
         )
-        side.append(fut_docs)
         storage.write_table(
             postings.sortWithinPartitions("segment_id", "field", "term", "docid"),
             epoch, "postings",
@@ -464,12 +472,11 @@ def build_segments(
             F.min("dl").cast("long").alias("len"),
             F.min("norm_id").alias("norm_id"),
         )
-        fut_doclens = pool.submit(
+        fut_doclens = submit(
             storage.write_table,
             doclens.sortWithinPartitions("segment_id", "field", "docid"),
             epoch, "doclens",
         )
-        side.append(fut_doclens)
         termdict = termdict_from_postings(postings_r)
         storage.write_table(
             termdict.sortWithinPartitions("segment_id", "field", "term"),

@@ -21,7 +21,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from sonar_tantivy_spark.pool import surface_all
+from sonar_tantivy_spark.pool import jobs
 
 
 def compact_to(index, target_segments: int = 1) -> list[dict]:
@@ -96,18 +96,13 @@ def compact_to(index, target_segments: int = 1) -> list[dict]:
     # the cores the big postings shuffle leaves idle instead of adding
     # two serial job barriers.  Only the termdict rebuild (which reads
     # the WRITTEN postings) stays ordered after the postings write.
-    from concurrent.futures import ThreadPoolExecutor
-
-    side: list = []
-    with ThreadPoolExecutor(max_workers=2) as pool, surface_all(side):
-        side.append(pool.submit(
-            storage.write_table, docs.sortWithinPartitions("docid"),
-            epoch, "docs", docs_parts))
-        side.append(pool.submit(
-            storage.write_table,
-            rebased("doclens").sortWithinPartitions(
-                "segment_id", "field", "docid"),
-            epoch, "doclens"))
+    with jobs(2) as submit:
+        submit(storage.write_table, docs.sortWithinPartitions("docid"),
+               epoch, "docs", docs_parts)
+        submit(storage.write_table,
+               rebased("doclens").sortWithinPartitions(
+                   "segment_id", "field", "docid"),
+               epoch, "doclens")
         # docid in the range key is the skew guard (see compact())
         # one range partition per core: with segment_id leading the range
         # keys, partitions are contiguous per segment, so each segment gets
@@ -411,17 +406,12 @@ def compact(index, segment_ids: list[str] | None = None) -> dict:
     # independent rewrites run as concurrent Spark jobs, exactly like
     # compact_to: docs/doclens back-fill the postings shuffle's idle
     # cores; only the termdict (reads the written postings) is ordered
-    from concurrent.futures import ThreadPoolExecutor
-
-    side: list = []
-    with ThreadPoolExecutor(max_workers=2) as pool, surface_all(side):
-        side.append(pool.submit(
-            storage.write_table, merged_docs.sortWithinPartitions("docid"),
-            epoch, "docs", docs_parts))
-        side.append(pool.submit(
-            storage.write_table,
-            rebased("doclens").sortWithinPartitions("field", "docid"),
-            epoch, "doclens"))
+    with jobs(2) as submit:
+        submit(storage.write_table, merged_docs.sortWithinPartitions("docid"),
+               epoch, "docs", docs_parts)
+        submit(storage.write_table,
+               rebased("doclens").sortWithinPartitions("field", "docid"),
+               epoch, "doclens")
         # docid in the range key is the skew guard: RangePartitioner may
         # then place boundaries INSIDE a hot term (stop words have df ~
         # num_docs), splitting its postings across tasks instead of

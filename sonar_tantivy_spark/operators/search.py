@@ -42,6 +42,7 @@ from __future__ import annotations
 import math
 import threading
 from collections import OrderedDict, defaultdict
+from functools import partial
 from typing import Any
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -51,7 +52,7 @@ from pyspark.sql import types as T
 from sonar_tantivy_spark.functions import bm25
 from sonar_tantivy_spark.plans import ast as A
 from sonar_tantivy_spark.plans.schema import IndexSchema
-from sonar_tantivy_spark.pool import surface_all
+from sonar_tantivy_spark.pool import run_all
 
 # Skew-guard broadcast budget: the rare-term (segment_id, docid) key set is
 # ~16 B/row on the wire (short segment id + long), so cap by BYTES, not rows
@@ -77,12 +78,44 @@ _SKEW_SPREAD = 8
 _SKEW_MIN_SAVED_BYTES = 6 << 20
 _PHRASE_ROW_BYTES = 64  # (segment, docid, positions[]) exchange row
 _BOOL_ROW_BYTES = 16    # (segment, docid, score) exchange row
+
 # Entries per snapshot memo (per-term dfs, per-segment max-tf maps,
 # any-field dfs, resolved ids).  A catalog keeps one Searcher per index
 # alive for as long as its snapshot is current, so the memo is an LRU
 # bounded here rather than growing with query history.
 _MEMO_CAP = 4096
 _UNSET = object()
+
+
+def _broadcastable(n_keys: int | None) -> bool:
+    """The one broadcast gate: may a (segment_id, docid) key set of
+    ``n_keys`` rows be broadcast?  ``None`` is an unbounded set."""
+    return n_keys is not None \
+        and n_keys * _BYTES_PER_KEY <= _BCAST_KEY_BYTES_CAP
+
+
+def _skew_guarded(target: DataFrame, scan: DataFrame, sums: dict, pred,
+                  row_bytes: int, rare_from=None) -> DataFrame:
+    """The rare-clause skew guard (intersect from the smallest set): the
+    rarest clause bounds the match set, so when its keys broadcast, the
+    df spread is at least _SKEW_SPREAD and the exchange bytes saved
+    clear _SKEW_MIN_SAVED_BYTES, semi-join ``target`` against that
+    clause's keys (``scan`` narrowed by ``pred(clause)``); else return
+    ``target`` as is.  ``sums`` maps each clause to its df (summed over
+    its alternatives), ``row_bytes`` is the exchange row width.  Only
+    clauses in ``rare_from`` (default: all) may be the rare one, but
+    the spread is measured over every clause."""
+    rare_from = list(sums) if rare_from is None else rare_from
+    if len(sums) < 2 or not rare_from:
+        return target
+    rare = min(rare_from, key=sums.__getitem__)
+    hot = max(sums.values())
+    if not (_broadcastable(sums[rare]) and sums[rare] * _SKEW_SPREAD <= hot
+            and hot * row_bytes >= _SKEW_MIN_SAVED_BYTES):
+        return target
+    rare_keys = scan.filter(pred(rare)).select("segment_id", "docid")
+    return target.join(F.broadcast(rare_keys), on=["segment_id", "docid"],
+                       how="left_semi")
 
 
 class _Memo:
@@ -381,7 +414,7 @@ class Searcher:
         if t is None:
             return cand
         n = sum(e.get("n", 0) for e in self.tombstone_meta)
-        if n * _BYTES_PER_KEY <= _BCAST_KEY_BYTES_CAP:
+        if _broadcastable(n):
             t = F.broadcast(t)
         return cand.join(t, on=["segment_id", "docid"], how="left_anti")
 
@@ -605,19 +638,11 @@ class Searcher:
             return None
         scan = p.filter(
             (F.col("field") == node.field) & F.col("term").isin(uterms))
-        if len(uterms) > 1:
-            tdfs = {t: dfs[(node.field, t)] for t in uterms}
-            rare = min(uterms, key=lambda t: tdfs[t])
-            if tdfs[rare] * _BYTES_PER_KEY <= _BCAST_KEY_BYTES_CAP \
-                    and tdfs[rare] * _SKEW_SPREAD <= max(tdfs.values()) \
-                    and max(tdfs.values()) * _PHRASE_ROW_BYTES \
-                    >= _SKEW_MIN_SAVED_BYTES:
-                # reuse the term-set-filtered scan: the broadcast build
-                # reads the same relation narrowed to the rare term
-                rare_keys = scan.filter(
-                    F.col("term") == rare).select("segment_id", "docid")
-                scan = scan.join(F.broadcast(rare_keys),
-                                 on=["segment_id", "docid"], how="left_semi")
+        # the broadcast build reads the same term-set-filtered scan
+        # narrowed to the rare term
+        scan = _skew_guarded(
+            scan, scan, {t: dfs[(node.field, t)] for t in uterms},
+            lambda t: F.col("term") == t, _PHRASE_ROW_BYTES)
         agg = (
             scan.groupBy("segment_id", "docid")
             .agg(
@@ -716,18 +741,10 @@ class Searcher:
             return None
         scan = p.filter(
             (F.col("field") == node.field) & F.col("term").isin(uterms))
-        if len(live) > 1:
-            cdfs = [sum(dfs[(node.field, t)] for t in c) for c in live]
-            rare_i = min(range(len(live)), key=lambda i: cdfs[i])
-            if cdfs[rare_i] * _BYTES_PER_KEY <= _BCAST_KEY_BYTES_CAP \
-                    and cdfs[rare_i] * _SKEW_SPREAD <= max(cdfs) \
-                    and max(cdfs) * _PHRASE_ROW_BYTES \
-                    >= _SKEW_MIN_SAVED_BYTES:
-                rare_keys = scan.filter(
-                    F.col("term").isin(list(live[rare_i]))
-                ).select("segment_id", "docid")
-                scan = scan.join(F.broadcast(rare_keys),
-                                 on=["segment_id", "docid"], how="left_semi")
+        scan = _skew_guarded(
+            scan, scan, {i: sum(dfs[(node.field, t)] for t in c)
+                         for i, c in enumerate(live)},
+            lambda i: F.col("term").isin(list(live[i])), _PHRASE_ROW_BYTES)
         agg = scan.groupBy("segment_id", "docid").agg(
             F.map_from_entries(
                 F.collect_list(F.struct("term", "positions"))).alias("__pos"),
@@ -861,18 +878,11 @@ class Searcher:
         scan = p.filter(
             (F.col("field") == node.field) & F.col("term").isin(uterms))
         all_clauses = blive + [little]
-        cdfs = [sum(dfs[(node.field, t)] for t in c)
-                for c in all_clauses]
-        rare_i = min(range(len(all_clauses)), key=lambda i: cdfs[i])
-        if cdfs[rare_i] * _BYTES_PER_KEY <= _BCAST_KEY_BYTES_CAP \
-                and cdfs[rare_i] * _SKEW_SPREAD <= max(cdfs) \
-                and max(cdfs) * _PHRASE_ROW_BYTES \
-                >= _SKEW_MIN_SAVED_BYTES:
-            rare_keys = scan.filter(
-                F.col("term").isin(list(all_clauses[rare_i]))
-            ).select("segment_id", "docid")
-            scan = scan.join(F.broadcast(rare_keys),
-                             on=["segment_id", "docid"], how="left_semi")
+        scan = _skew_guarded(
+            scan, scan, {i: sum(dfs[(node.field, t)] for t in c)
+                         for i, c in enumerate(all_clauses)},
+            lambda i: F.col("term").isin(list(all_clauses[i])),
+            _PHRASE_ROW_BYTES)
         agg = scan.groupBy("segment_id", "docid").agg(
             F.map_from_entries(
                 F.collect_list(F.struct("term", "positions"))).alias("__pos"),
@@ -1344,7 +1354,7 @@ class Searcher:
         # keep the full agg (a 100-TB corpus-wide hash agg is still one
         # map-side-combinable exchange — safe, just not minimal).
         cand_rows = sum(df_any[t] for t in live) * len(fnames)
-        if cand_rows * _BYTES_PER_KEY <= _BCAST_KEY_BYTES_CAP:
+        if _broadcastable(cand_rows):
             bdl_src = bdl_src.join(
                 F.broadcast(scan.select("segment_id", "docid")),
                 on=["segment_id", "docid"], how="left_semi")
@@ -1582,22 +1592,13 @@ class Searcher:
         # df spread is large (e.g. needle AND the/role:tool), semi-join
         # the scan against the rare term's docids BEFORE the aggregation
         # shuffle — a broadcast hash filter that keeps the hot term's
-        # billions of non-matching postings out of the exchange entirely
-        if must_pairs and len(pairs) > 1:
-            dfs_all = [dfs[q] for q in pairs]
-            rare = min(must_pairs, key=lambda q: dfs[q])
-            if dfs[rare] * _BYTES_PER_KEY <= _BCAST_KEY_BYTES_CAP \
-                    and dfs[rare] * _SKEW_SPREAD <= max(dfs_all) \
-                    and max(dfs_all) * _BOOL_ROW_BYTES \
-                    >= _SKEW_MIN_SAVED_BYTES:
-                rf, rt = rare
-                # reuse the cond-filtered scan narrowed to the rare pair
-                rare_keys = p.filter(cond).filter(
-                    (F.col("field") == rf) & (F.col("term") == rt)
-                ).select("segment_id", "docid")
-                scored = scored.join(F.broadcast(rare_keys),
-                                     on=["segment_id", "docid"],
-                                     how="left_semi")
+        # billions of non-matching postings out of the exchange entirely.
+        # Only a must pair can be the rare one, but the spread counts
+        # every pair; the broadcast build reuses the cond-filtered scan
+        scored = _skew_guarded(
+            scored, p.filter(cond), {q: dfs[q] for q in pairs},
+            lambda q: (F.col("field") == q[0]) & (F.col("term") == q[1]),
+            _BOOL_ROW_BYTES, rare_from=must_pairs)
         out = _clause_sum(scored, F.sum("__m").alias("__nm"),
                           F.count("*").alias("__nt"))
         if must_pairs:
@@ -1776,9 +1777,7 @@ class Searcher:
             # shared broadcast byte cap — VERDICT r5: the old flat 2M-row
             # bound allowed ~32 MB+ broadcasts), broadcast it so the
             # docs side never shuffles
-            bound = self._cand_size_bound(node)
-            if bound is not None \
-                    and bound * _BYTES_PER_KEY <= _BCAST_KEY_BYTES_CAP:
+            if _broadcastable(self._cand_size_bound(node)):
                 cands = F.broadcast(cands)
             cands = cands.join(docs, on=["segment_id", "docid"])
             if after is not None:
@@ -2796,9 +2795,7 @@ class Searcher:
             # broadcast byte cap), broadcast the key side so the (big)
             # doc store is probed in place instead of shuffled — the
             # same gate as every other key-set join in this module
-            bound = self._cand_size_bound(node)
-            if bound is not None \
-                    and bound * _BYTES_PER_KEY <= _BCAST_KEY_BYTES_CAP:
+            if _broadcastable(self._cand_size_bound(node)):
                 keys = F.broadcast(keys)
             matched = keys.join(docs, on=["segment_id", "docid"]).persist()
         else:  # no agg reads a stored field: no doc-store join at all
@@ -2808,18 +2805,8 @@ class Searcher:
             # each is its own small Spark job over the shared persisted
             # ``matched`` frame, so overlapping them fills the cluster
             # instead of serializing one job barrier per agg
-            if len(runnable) > 1:
-                from concurrent.futures import ThreadPoolExecutor
-
-                futs: list = []
-                with ThreadPoolExecutor(
-                        max_workers=min(4, len(runnable))) as pool, \
-                        surface_all(futs):
-                    futs.extend(pool.submit(run, matched, cands)
-                                for _, run in runnable)
-                results = [fut.result() for fut in futs]
-            else:
-                results = [run(matched, cands) for _, run in runnable]
+            results = run_all(
+                [partial(run, matched, cands) for _, run in runnable], 4)
             out = {name: r for (name, _), r in zip(runnable, results)}
             for name, reduce in siblings:
                 out[name] = reduce(out)

@@ -115,10 +115,6 @@ class IndexSchema:
         return None
 
     @property
-    def indexed_text_fields(self) -> list[FieldDef]:
-        return [f for f in self.fields if f.indexed and f.type in TEXT_TYPES]
-
-    @property
     def indexed_fields(self) -> list[FieldDef]:
         return [f for f in self.fields if f.indexed]
 
@@ -148,17 +144,6 @@ class IndexSchema:
         if f.type == "facet":
             return "raw"  # a facet path is always one exact term
         return f.tokenizer or "default"
-
-    def docs_spark_schema(self) -> T.StructType:
-        """Schema of the per-index docs (row-store) table."""
-        cols = [
-            T.StructField("seg", T.IntegerType(), False),
-            T.StructField("docid", T.LongType(), False),
-        ]
-        for f in self.fields:
-            if f.stored or f.fast or f.indexed:
-                cols.append(T.StructField(f.name, f.spark_type, True))
-        return T.StructType(cols)
 
     def warn_unknown(self, doc_fields: list[str]) -> None:
         known = {f.name for f in self.fields}

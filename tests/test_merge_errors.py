@@ -1,7 +1,9 @@
 """A merge or a segment build runs its docs / doclens writes beside the
-postings and termdict writes, and ``query_json`` runs its hit, facet and
-agg collectors side by side; a failure in any of them must surface, also
-when another one fails too (one raise must not drop a sibling's)."""
+postings and termdict writes, ``query_json`` runs its hit, facet and
+agg collectors side by side, and ``msearch``, ``multi_query`` and the
+runnable aggs fan out one job per search, index or agg; a failure in
+any of them must surface, also when another one fails too (one raise
+must not drop a sibling's)."""
 
 import pytest
 
@@ -85,3 +87,49 @@ def test_query_json_surfaces_hits_and_aggs_errors(idx, monkeypatch):
     report = _report(ei.value)
     assert "hits collector failed" in report
     assert "aggs collector failed" in report
+
+
+def test_msearch_surfaces_every_search_error(idx, monkeypatch):
+    def query_json(self, search):
+        raise RuntimeError(f"search {search['tag']} failed")
+
+    monkeypatch.setattr(type(idx), "query_json", query_json)
+    with pytest.raises(RuntimeError) as ei:
+        idx.msearch([{"tag": "one"}, {"tag": "two"}, {"tag": "three"}])
+    report = _report(ei.value)
+    for tag in ("one", "two", "three"):
+        assert f"search {tag} failed" in report
+
+
+def test_multi_query_surfaces_every_index_error(spark, tmp_path, idx,
+                                                monkeypatch):
+    cat = IndexCatalog(spark, str(tmp_path))
+    cat.create_index("n", SCHEMA).add([{"body": "alpha"}])
+
+    def query(self, q, limit=10, **kw):
+        raise RuntimeError(f"index {self.name} failed")
+
+    monkeypatch.setattr(type(idx), "query", query)
+    with pytest.raises(RuntimeError) as ei:
+        cat.multi_query("alpha", ["m", "n"])
+    report = _report(ei.value)
+    assert "index m failed" in report
+    assert "index n failed" in report
+
+
+def test_aggregations_surface_every_agg_error(idx, monkeypatch):
+    def failing_family(self, name, kind, body, aggs):
+        def run(matched, cands):
+            raise RuntimeError(f"agg {name} failed")
+        return set(), run
+
+    monkeypatch.setitem(Searcher._AGG_FAMILIES, "value_count",
+                        failing_family)
+    search = {"query": {"term": {"body": "alpha"}}, "limit": 5,
+              "aggs": {"a": {"value_count": {"field": "body"}},
+                       "b": {"value_count": {"field": "body"}}}}
+    with pytest.raises(RuntimeError) as ei:
+        idx.query_json(search)
+    report = _report(ei.value)
+    assert "agg a failed" in report
+    assert "agg b failed" in report

@@ -90,16 +90,14 @@ def main() -> None:
     # the "before" run reproduces the round-5 join verbatim (plain
     # keys.join(docs)), the "after" run the gated broadcast, each
     # copied from the aggregations() code of the respective tree
-    gate_broadcast = suffix != "before"
     node = A.parse_json({"term": {"text": "the"}}, idx.schema)
     cand = s.candidates(node)
     keys = cand.select("segment_id", "docid")
     docs = s._table("docs").select("segment_id", "docid", "role", "turn_idx")
-    bound = s._cand_size_bound(node)
-    from sonar_tantivy_spark.operators.search import (
-        _BCAST_KEY_BYTES_CAP, _BYTES_PER_KEY)
-    if gate_broadcast and bound is not None \
-            and bound * _BYTES_PER_KEY <= _BCAST_KEY_BYTES_CAP:
+    from sonar_tantivy_spark.operators.search import _broadcastable
+    gate_broadcast = suffix != "before" \
+        and _broadcastable(s._cand_size_bound(node))
+    if gate_broadcast:
         keys = F.broadcast(keys)
     matched = keys.join(docs, on=["segment_id", "docid"])
     terms_agg = (matched.filter(F.col("role").isNotNull())
@@ -112,8 +110,7 @@ def main() -> None:
     # ---- composite agg (q31 shape)
     comp_docs = s._table("docs").select("segment_id", "docid", "role", "tool")
     ckeys = cand.select("segment_id", "docid")
-    if gate_broadcast and bound is not None \
-            and bound * _BYTES_PER_KEY <= _BCAST_KEY_BYTES_CAP:
+    if gate_broadcast:
         ckeys = F.broadcast(ckeys)
     cm = (ckeys.join(comp_docs, on=["segment_id", "docid"])
           .filter(F.col("role").isNotNull() & F.col("tool").isNotNull())
