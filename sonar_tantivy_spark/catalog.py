@@ -843,10 +843,7 @@ class Index:
         m = self.storage.manifest()
         m.setdefault("tombstones", []).append({"epoch": epoch, "n": int(n)})
         m["del_opstamp"] = int(m.get("del_opstamp", 0)) + 1
-        if hasattr(self.storage, "_write_json"):
-            self.storage._write_json("manifest.json", m)
-        else:
-            self.storage._manifest = m
+        self.storage.write_manifest(m)
         return int(n)
 
     def delete_docs(self, docids: list[int]) -> int:

@@ -92,7 +92,7 @@ def block_docs() -> int:
 def termdict_from_postings(postings_df: DataFrame) -> DataFrame:
     """Aggregate the termdict — df / max_tf / total_tf plus the
     per-block max-tf map (blk = docid // block_docs()) — from a postings
-    DataFrame.  Shared by the build pipeline and both merge paths so
+    DataFrame.  Shared by the build pipeline and the merge rewrite so
     compacted segments carry the same block-max metadata as fresh ones.
     Two-level aggregation: the per-block partial combines map-side, the
     second level folds blocks into one map row per (segment, field,
@@ -284,7 +284,7 @@ def build_segments(
         _tp[0] = now
 
     if epoch is None:
-        epoch = storage.new_epoch() if hasattr(storage, "new_epoch") else "e0"
+        epoch = storage.new_epoch()
     parallelism = spark.sparkContext.defaultParallelism
 
     schema_cols = [f.name for f in schema.fields]
@@ -553,12 +553,9 @@ def build_segments(
             st["min"], st["max"] = bounds[0], bounds[1]
             if len(bounds) == 4:  # date fields: tz-independent epochs
                 st["min_epoch"], st["max_epoch"] = bounds[2], bounds[3]
-        tables = {}
-        if hasattr(storage, "segment_dir"):
-            tables = {t: storage.segment_dir(epoch, t, sid)
-                      for t in ("docs", "postings", "doclens", "termdict")}
         meta = {"segment_id": sid, "max_doc": max_doc,
-                "field_stats": field_stats, "tables": tables, "epoch": epoch,
+                "field_stats": field_stats,
+                "tables": storage.segment_tables(epoch, sid), "epoch": epoch,
                 "block_docs": block_docs()}
         if tsbucket_fmt is not None:
             meta["tsbucket_fmt"] = tsbucket_fmt

@@ -3,10 +3,15 @@
 tantivy merges segments in the background (LogMergePolicy, implied by the
 commit path /root/reference/src-rust/index.rs:186-191); at 10^12-turn
 scale explicit compaction is required (SURVEY.md §2.8.3).  Here a merge
-is an explicit Spark job: read the postings/docs/doclens/termdict
-partitions of a contiguous run of manifest segments, re-base the local
-docids into one merged docid space, sort-merge on (field, term, docid),
-write one new segment, and swap the manifest atomically.
+is an explicit Spark job, and there is ONE rewrite routine (_rewrite):
+it reads the postings/docs/doclens/termdict partitions of a contiguous
+run of manifest segments split into chunks, re-bases each old segment's
+local docids into its chunk's docid space, purges tombstoned rows,
+sort-merges on (segment_id, field, term, docid), writes each chunk as
+one new segment of one new epoch, and swaps the manifest atomically.
+The entry points only choose the chunks — the merge policy: compact()
+is one chunk, compact_to(n) is n balanced chunks of the whole manifest,
+tiered_compact() picks the cheapest window or the most-deleted segment.
 
 Because the run is contiguous in manifest order, every document keeps its
 GLOBAL docid (base + local is unchanged), so query results — including
@@ -17,10 +22,11 @@ test suite asserts this.
 from __future__ import annotations
 
 import math
-import os
 
 from pyspark.sql import functions as F
 
+from sonar_tantivy_spark.operators.build import (
+    block_docs, termdict_from_postings)
 from sonar_tantivy_spark.pool import jobs
 
 
@@ -41,138 +47,42 @@ def compact_to(index, target_segments: int = 1) -> list[dict]:
     both the faster merge (one pass over the data, not one per chunk)
     and the faster query plan (one scan node).
     """
-    storage = index.storage
-    manifest = storage.manifest()
+    manifest = index.storage.manifest()
     segs = manifest["segments"]
     if len(segs) <= target_segments:
         return []
-    total = sum(s["max_doc"] for s in segs)
-    per = math.ceil(total / max(1, target_segments))
-
-    # chunk the contiguous manifest run; remember each old segment's
-    # (new segment ordinal, docid offset inside it)
-    assign: dict[str, tuple[int, int]] = {}
+    per = math.ceil(sum(s["max_doc"] for s in segs) / max(1, target_segments))
     chunks: list[list[dict]] = [[]]
     acc = 0
     for s in segs:
         if acc >= per and chunks[-1]:
             chunks.append([])
             acc = 0
-        assign[s["segment_id"]] = (len(chunks) - 1, acc)
         chunks[-1].append(s)
         acc += s["max_doc"]
+    return _rewrite(index, manifest, 0, chunks, clear_ledger=True)
 
-    epoch = storage.new_epoch()
-    new_sids = {i: f"{epoch}-m{i:05d}" for i in range(len(chunks))}
-    spark = index.spark
 
-    sid_pairs: list = []
-    off_pairs: list = []
-    for old_sid, (ci, off) in assign.items():
-        sid_pairs.extend([F.lit(old_sid), F.lit(new_sids[ci])])
-        off_pairs.extend([F.lit(old_sid), F.lit(off)])
-    new_sid_col = F.element_at(F.create_map(*sid_pairs), F.col("segment_id"))
-    off_col = F.element_at(F.create_map(*off_pairs), F.col("segment_id"))
+def compact(index, segment_ids: list[str] | None = None) -> dict:
+    """Merge a contiguous run of segments (default: all) into one.
 
-    tomb = _tombstones_for(index, {s["segment_id"] for s in segs})
-
-    def rebased(table: str):
-        df = storage.load_table(spark, table, segs)
-        if tomb is not None:
-            # purge deleted rows (tantivy reclaims at merge); docids are
-            # NOT re-densified, so surviving global ids stay stable
-            df = df.join(tomb, on=["segment_id", "docid"], how="left_anti")
-        return (
-            df.withColumn("docid", (off_col + F.col("docid")).cast("long"))
-            .withColumn("segment_id", new_sid_col)
-        )
-
-    docs = rebased("docs")
-    docs_parts = ("segment_id", "__tsbucket") \
-        if "__tsbucket" in docs.columns else ("segment_id",)
-    # the docs / postings / doclens rewrites are INDEPENDENT (each reads
-    # its own source table), so they run as concurrent Spark jobs from a
-    # thread pool (guide §2.6) — the small docs/doclens jobs back-fill
-    # the cores the big postings shuffle leaves idle instead of adding
-    # two serial job barriers.  Only the termdict rebuild (which reads
-    # the WRITTEN postings) stays ordered after the postings write.
-    with jobs(2) as submit:
-        submit(storage.write_table, docs.sortWithinPartitions("docid"),
-               epoch, "docs", docs_parts)
-        submit(storage.write_table,
-               rebased("doclens").sortWithinPartitions(
-                   "segment_id", "field", "docid"),
-               epoch, "doclens")
-        # docid in the range key is the skew guard (see compact())
-        # one range partition per core: with segment_id leading the range
-        # keys, partitions are contiguous per segment, so each segment gets
-        # ~(cores / n_segments) large sorted files — fewer file opens per
-        # query scan than the build's task-parallel layout
-        storage.write_table(
-            rebased("postings").repartitionByRange(
-                max(1, spark.sparkContext.defaultParallelism),
-                "segment_id", "field", "term", "docid",
-            ).sortWithinPartitions("segment_id", "field", "term", "docid"),
-            epoch, "postings",
-        )
-        # termdict re-aggregates from the WRITTEN merged postings (not the
-        # old termdicts): docids were rebased, so the per-block max-tf maps
-        # must be rebuilt on the new docid space — one columnar aggregate
-        # over (segment_id, field, term, docid, tf), the same cost class as
-        # the build's own termdict job.
-        from sonar_tantivy_spark.operators.build import (
-            block_docs, termdict_from_postings)
-
-        any_postings = any(
-            _segment_has_data(storage, epoch, "postings", new_sids[ci])
-            for ci in range(len(chunks)))
-        if any_postings:
-            # persist the aggregated termdict: repartitionByRange's
-            # sampling pass would otherwise run the whole two-level
-            # aggregation a second time just to pick range boundaries
-            merged_td = termdict_from_postings(
-                storage.read_epoch_table(spark, epoch, "postings")).persist()
-            try:
-                storage.write_table(
-                    merged_td.repartitionByRange(
-                        max(1, spark.sparkContext.defaultParallelism),
-                        "segment_id", "field", "term"
-                    ).sortWithinPartitions("field", "term"),
-                    epoch, "termdict",
-                )
-            finally:
-                merged_td.unpersist()
-
-    metas = []
-    for ci, chunk in enumerate(chunks):
-        meta = {
-            "segment_id": new_sids[ci],
-            "max_doc": sum(s["max_doc"] for s in chunk),
-            "field_stats": _merge_field_stats(chunk),
-            "tables": {t: storage.segment_dir(epoch, t, new_sids[ci])
-                       for t in ("docs", "postings", "doclens", "termdict")
-                       if _segment_has_data(storage, epoch, t, new_sids[ci])}
-            if hasattr(storage, "segment_dir") else {},
-            "epoch": epoch,
-            "block_docs": block_docs(),
-        }
-        fmts = {s.get("tsbucket_fmt") for s in chunk}
-        if len(fmts) == 1 and None not in fmts:
-            meta["tsbucket_fmt"] = next(iter(fmts))
-        metas.append(meta)
-    manifest["segments"] = metas
-    _retire_epochs(manifest, segs)
-    # every old segment was replaced and its deleted rows purged: the
-    # whole tombstone ledger is now inert — drop it so vacuum can
-    # reclaim the tombstone epochs and queries skip the anti-join
-    if manifest.get("tombstones"):
-        manifest["tombstones"] = []
-        manifest["del_opstamp"] = int(manifest.get("del_opstamp", 0)) + 1
-    if hasattr(storage, "_write_json"):
-        storage._write_json("manifest.json", manifest)
-    else:
-        storage._manifest = manifest
-    return metas
+    Returns the new segment meta.  Raises ``ValueError`` when there is
+    nothing to merge or ``segment_ids`` is not a contiguous run in
+    manifest order.
+    """
+    manifest = index.storage.manifest()
+    segs = manifest["segments"]
+    order = [s["segment_id"] for s in segs]
+    if segment_ids is None:
+        segment_ids = order if len(segs) > 1 else []
+    if not segment_ids:
+        raise ValueError("nothing to compact")
+    idxs = sorted(order.index(sid) for sid in segment_ids)
+    if idxs != list(range(idxs[0], idxs[-1] + 1)):
+        raise ValueError("can only compact a contiguous manifest run")
+    run = segs[idxs[0]: idxs[-1] + 1]
+    return _rewrite(index, manifest, idxs[0], [run],
+                    clear_ledger=len(run) == len(segs))[0]
 
 
 def tiered_compact(index, max_segments: int, *,
@@ -201,8 +111,7 @@ def tiered_compact(index, max_segments: int, *,
 
     Returns the new segment meta, or None when neither trigger fires."""
     max_segments = max(1, max_segments)  # cap of 0 means "one segment"
-    storage = index.storage
-    manifest = storage.manifest()
+    manifest = index.storage.manifest()
     segs = manifest["segments"]
     n = len(segs)
     if n > max_segments:
@@ -227,33 +136,133 @@ def tiered_compact(index, max_segments: int, *,
         for i, s in enumerate(segs))
     if frac < max_deleted_frac:
         return None
-    meta = compact(index, [segs[i]["segment_id"]])
-    if set(per) <= {segs[i]["segment_id"]}:
-        # the rewritten segment held every live tombstone: the ledger is
-        # now inert — clear it so queries skip the anti-join and vacuum
-        # can reclaim the tombstone epochs (same bookkeeping as the
-        # full-index branch in compact())
-        manifest = storage.manifest()
-        if manifest.get("tombstones"):
-            manifest["tombstones"] = []
-            manifest["del_opstamp"] = int(manifest.get("del_opstamp", 0)) + 1
-            if hasattr(storage, "_write_json"):
-                storage._write_json("manifest.json", manifest)
-            else:
-                storage._manifest = manifest
-    return meta
+    # when the rewritten segment held every live tombstone, the same
+    # commit clears the now-inert ledger
+    return _rewrite(index, manifest, i, [[segs[i]]],
+                    clear_ledger=set(per) <= {segs[i]["segment_id"]})[0]
 
 
-def _segment_has_data(storage, epoch: str, table: str, sid: str) -> bool:
-    """Did the merge write any rows for this (segment, table)?  False
-    for a fully-tombstoned chunk — its meta becomes a GHOST (max_doc
-    kept so later segments' docid bases don't shift; no table paths, so
-    readers skip it and schema inference never sees an empty dir)."""
-    if hasattr(storage, "segment_dir"):
-        return os.path.isdir(storage.segment_dir(epoch, table, sid))
-    df = storage._tables.get((epoch, table))
-    return df is not None and bool(
-        df.filter(F.col("segment_id") == sid).take(1))
+def _rewrite(index, manifest: dict, start: int, chunks: list[list[dict]],
+             clear_ledger: bool) -> list[dict]:
+    """Rewrite the contiguous manifest run that starts at ``start`` and
+    is split into ``chunks`` as one new segment per chunk, all in ONE
+    new epoch hive-partitioned by the new segment_id, then commit the
+    swap in one manifest write.  ``clear_ledger``: every live tombstone
+    lies in the run, so the purge leaves the delete ledger inert and the
+    commit drops it.  Returns the new segment metas, in order."""
+    storage, spark = index.storage, index.spark
+    run = [s for chunk in chunks for s in chunk]
+    epoch = storage.new_epoch()
+    new_sids = [f"{epoch}-m{i:05d}" for i in range(len(chunks))]
+
+    # each old segment's docid offset inside its chunk, and its chunk
+    sid_pairs: list = []
+    off_pairs: list = []
+    for new_sid, chunk in zip(new_sids, chunks):
+        off = 0
+        for s in chunk:
+            sid_pairs.extend([F.lit(s["segment_id"]), F.lit(new_sid)])
+            off_pairs.extend([F.lit(s["segment_id"]), F.lit(off)])
+            off += s["max_doc"]
+    off_col = F.element_at(F.create_map(*off_pairs), F.col("segment_id"))
+    # one chunk: a literal, so Spark folds it out of the sort keys
+    new_sid_col = F.lit(new_sids[0]) if len(chunks) == 1 else \
+        F.element_at(F.create_map(*sid_pairs), F.col("segment_id"))
+
+    tomb = _tombstones_for(index, {s["segment_id"] for s in run})
+
+    def rebased(table: str):
+        df = storage.load_table(spark, table, run)
+        if tomb is not None:
+            # purge deleted rows (tantivy reclaims at merge); docids are
+            # NOT re-densified, so surviving global ids stay stable
+            df = df.join(tomb, on=["segment_id", "docid"], how="left_anti")
+        return (
+            df.withColumn("docid", (off_col + F.col("docid")).cast("long"))
+            .withColumn("segment_id", new_sid_col)
+        )
+
+    docs = rebased("docs")
+    docs_parts = ("segment_id", "__tsbucket") \
+        if "__tsbucket" in docs.columns else ("segment_id",)
+    parallelism = max(1, spark.sparkContext.defaultParallelism)
+    # the docs / postings / doclens rewrites are INDEPENDENT (each reads
+    # its own source table), so they run as concurrent Spark jobs from a
+    # thread pool (guide §2.6) — the small docs/doclens jobs back-fill
+    # the cores the big postings shuffle leaves idle instead of adding
+    # two serial job barriers.  Only the termdict rebuild (which reads
+    # the WRITTEN postings) stays ordered after the postings write.
+    with jobs(2) as submit:
+        submit(storage.write_table, docs.sortWithinPartitions("docid"),
+               epoch, "docs", docs_parts)
+        submit(storage.write_table,
+               rebased("doclens").sortWithinPartitions(
+                   "segment_id", "field", "docid"),
+               epoch, "doclens")
+        # one range partition per core: with segment_id leading the range
+        # keys, partitions are contiguous per segment, so each segment gets
+        # ~(cores / n_segments) large sorted files — fewer file opens per
+        # query scan than the build's task-parallel layout.  docid in the
+        # range key is the skew guard: RangePartitioner may then place
+        # boundaries INSIDE a hot term (stop words have df ~ num_docs),
+        # splitting its postings across tasks instead of melting one
+        # executor — the salted-repartition analog, without a synthetic
+        # salt column.  Term-level file pruning survives: adjacent files
+        # just share one boundary term in their min/max.
+        storage.write_table(
+            rebased("postings").repartitionByRange(
+                parallelism, "segment_id", "field", "term", "docid",
+            ).sortWithinPartitions("segment_id", "field", "term", "docid"),
+            epoch, "postings",
+        )
+        # termdict re-aggregates from the WRITTEN merged postings (not the
+        # old termdicts): docids were rebased, so the per-block max-tf maps
+        # must be rebuilt on the new docid space — one columnar aggregate
+        # over (segment_id, field, term, docid, tf), the same cost class as
+        # the build's own termdict job.
+        if storage.has_epoch_table(epoch, "postings"):
+            # persist the aggregated termdict: repartitionByRange's
+            # sampling pass would otherwise run the whole two-level
+            # aggregation a second time just to pick range boundaries
+            merged_td = termdict_from_postings(
+                storage.read_epoch_table(spark, epoch, "postings")).persist()
+            try:
+                storage.write_table(
+                    merged_td.repartitionByRange(
+                        parallelism, "segment_id", "field", "term"
+                    ).sortWithinPartitions("field", "term"),
+                    epoch, "termdict",
+                )
+            finally:
+                merged_td.unpersist()
+
+    metas = []
+    for new_sid, chunk in zip(new_sids, chunks):
+        # a fully-tombstoned chunk wrote no rows: its meta is a GHOST
+        # (max_doc kept so later segments' docid bases don't shift; no
+        # table paths, so readers skip it)
+        meta = {
+            "segment_id": new_sid,
+            "max_doc": sum(s["max_doc"] for s in chunk),
+            "field_stats": _merge_field_stats(chunk),
+            "tables": storage.segment_tables(epoch, new_sid),
+            "epoch": epoch,
+            "block_docs": block_docs(),
+        }
+        fmts = {s.get("tsbucket_fmt") for s in chunk}
+        if len(fmts) == 1 and None not in fmts:
+            meta["tsbucket_fmt"] = next(iter(fmts))
+        metas.append(meta)
+    # atomic manifest swap: replace the run with the merged segments
+    manifest["segments"][start:start + len(run)] = metas
+    _retire_epochs(manifest, run)
+    if clear_ledger and manifest.get("tombstones"):
+        # drop the inert ledger so vacuum can reclaim the tombstone
+        # epochs and queries skip the anti-join
+        manifest["tombstones"] = []
+        manifest["del_opstamp"] = int(manifest.get("del_opstamp", 0)) + 1
+    storage.write_manifest(manifest)
+    return metas
 
 
 def _tombstones_for(index, run_sids: set[str]):
@@ -324,152 +333,5 @@ def vacuum(index) -> list[str]:
     segments were never cross-registered, or GC at the catalog level.
     Returns the removed epoch directory names.
     """
-    import shutil
-
     storage = index.storage
-    if not hasattr(storage, "root"):
-        return []  # RAM index: nothing on disk
-    data_dir = os.path.join(storage.root, "data")
-    if not os.path.isdir(data_dir):
-        return []
-    live: set[str] = set()
-    manifest = storage.manifest()
-    for s in manifest["segments"]:
-        for path in s.get("tables", {}).values():
-            # <root>/data/<epoch>/<table>/segment_id=<sid>
-            rel = os.path.relpath(path, data_dir)
-            live.add(rel.split(os.sep)[0])
-    # tombstone epochs stay live while the delete ledger references
-    # them (a full compaction clears the ledger, then vacuum reclaims)
-    for t in manifest.get("tombstones", []):
-        live.add(t["epoch"])
-    removed = []
-    for epoch_dir in sorted(os.listdir(data_dir)):
-        if epoch_dir not in live:
-            shutil.rmtree(os.path.join(data_dir, epoch_dir), ignore_errors=True)
-            removed.append(epoch_dir)
-    return removed
-
-
-def compact(index, segment_ids: list[str] | None = None) -> dict:
-    """Merge a contiguous run of segments (default: all) into one.
-
-    Returns the new segment meta.  Raises if ``segment_ids`` is not a
-    contiguous prefix-run in manifest order.
-    """
-    storage = index.storage
-    manifest = storage.manifest()
-    segs = manifest["segments"]
-    if len(segs) < 2 and segment_ids is None:
-        raise ValueError("nothing to compact")
-    if segment_ids is None:
-        run = segs
-        start = 0
-    else:
-        order = [s["segment_id"] for s in segs]
-        idxs = sorted(order.index(sid) for sid in segment_ids)
-        if idxs != list(range(idxs[0], idxs[-1] + 1)):
-            raise ValueError("can only compact a contiguous manifest run")
-        start = idxs[0]
-        run = segs[idxs[0]: idxs[-1] + 1]
-
-    # docid re-base: offset of each old segment inside the merged segment
-    offsets: dict[str, int] = {}
-    acc = 0
-    for s in run:
-        offsets[s["segment_id"]] = acc
-        acc += s["max_doc"]
-    max_doc = acc
-    epoch = storage.new_epoch()
-    new_sid = f"{epoch}-merged"
-
-    spark = index.spark
-    pairs = []
-    for sid, off in offsets.items():
-        pairs.extend([F.lit(sid), F.lit(off)])
-    off_col = F.element_at(F.create_map(*pairs), F.col("segment_id"))
-
-    tomb = _tombstones_for(index, {s["segment_id"] for s in run})
-
-    def rebased(table: str):
-        df = storage.load_table(spark, table, run)
-        if tomb is not None:
-            df = df.join(tomb, on=["segment_id", "docid"], how="left_anti")
-        return (
-            df.withColumn("docid", (off_col + F.col("docid")).cast("long"))
-            .withColumn("segment_id", F.lit(new_sid))
-        )
-
-    merged_docs = rebased("docs")
-    docs_parts = ("segment_id", "__tsbucket") \
-        if "__tsbucket" in merged_docs.columns else ("segment_id",)
-    # independent rewrites run as concurrent Spark jobs, exactly like
-    # compact_to: docs/doclens back-fill the postings shuffle's idle
-    # cores; only the termdict (reads the written postings) is ordered
-    with jobs(2) as submit:
-        submit(storage.write_table, merged_docs.sortWithinPartitions("docid"),
-               epoch, "docs", docs_parts)
-        submit(storage.write_table,
-               rebased("doclens").sortWithinPartitions("field", "docid"),
-               epoch, "doclens")
-        # docid in the range key is the skew guard: RangePartitioner may
-        # then place boundaries INSIDE a hot term (stop words have df ~
-        # num_docs), splitting its postings across tasks instead of
-        # melting one executor — the salted-repartition analog, without a
-        # synthetic salt column.  Term-level file pruning survives:
-        # adjacent files just share one boundary term in their min/max.
-        storage.write_table(
-            rebased("postings").repartitionByRange(
-                max(1, 2 * spark.sparkContext.defaultParallelism),
-                "field", "term", "docid",
-            ).sortWithinPartitions("field", "term", "docid"),
-            epoch, "postings",
-        )
-        # termdict re-aggregates from the WRITTEN merged postings so the
-        # per-block max-tf maps are rebuilt on the rebased docid space
-        from sonar_tantivy_spark.operators.build import (
-            block_docs, termdict_from_postings)
-
-        if _segment_has_data(storage, epoch, "postings", new_sid):
-            # persist: repartitionByRange's sampling pass must not run
-            # the two-level aggregation twice
-            merged_td = termdict_from_postings(
-                storage.read_epoch_table(spark, epoch, "postings")).persist()
-            try:
-                storage.write_table(
-                    merged_td.repartitionByRange(
-                        max(1, spark.sparkContext.defaultParallelism),
-                        "field", "term"
-                    ).sortWithinPartitions("field", "term"),
-                    epoch, "termdict",
-                )
-            finally:
-                merged_td.unpersist()
-
-    field_stats = _merge_field_stats(run)
-
-    tables = {}
-    if hasattr(storage, "segment_dir"):
-        tables = {t: storage.segment_dir(epoch, t, new_sid)
-                  for t in ("docs", "postings", "doclens", "termdict")
-                  if _segment_has_data(storage, epoch, t, new_sid)}
-    meta = {"segment_id": new_sid, "max_doc": max_doc,
-            "field_stats": field_stats, "tables": tables, "epoch": epoch,
-            "block_docs": block_docs()}
-    fmts = {s.get("tsbucket_fmt") for s in run}
-    if len(fmts) == 1 and None not in fmts:
-        meta["tsbucket_fmt"] = next(iter(fmts))
-
-    # atomic manifest swap: replace the run with the merged segment in place
-    new_segs = segs[:start] + [meta] + segs[start + len(run):]
-    manifest["segments"] = new_segs
-    _retire_epochs(manifest, run)
-    if manifest.get("tombstones") and len(run) == len(segs):
-        # full-index merge: every tombstoned row was purged above
-        manifest["tombstones"] = []
-        manifest["del_opstamp"] = int(manifest.get("del_opstamp", 0)) + 1
-    if hasattr(storage, "_write_json"):
-        storage._write_json("manifest.json", manifest)
-    else:
-        storage._manifest = manifest
-    return meta
+    return storage.drop_unreferenced_epochs(storage.manifest())

@@ -177,7 +177,28 @@ def _py_values(col: pa.ChunkedArray, binary_as_bytes: bool) -> list:
     return vals
 
 
-class FsStorage:
+class _Storage:
+    """The manifest commits both backings share: each reads with
+    ``manifest()`` and commits with ``write_manifest(m)``."""
+
+    def committed_segment_ids(self) -> set[str]:
+        return {s["segment_id"] for s in self.manifest()["segments"]}
+
+    def append_segments(self, metas: list[dict]) -> None:
+        """Atomic manifest commit; rejects duplicate segment ids with the
+        reference's error message (index.rs:314-316)."""
+        m = self.manifest()
+        existing = {s["segment_id"] for s in m["segments"]}
+        for meta in metas:
+            if meta["segment_id"] in existing:
+                raise SegmentExistsError("Segment exists.")
+            existing.add(meta["segment_id"])
+            m["segments"].append(meta)
+            m["opstamp"] += meta["max_doc"]  # reference bumps opstamp by max_doc
+        self.write_manifest(m)
+
+
+class FsStorage(_Storage):
     def __init__(self, base_path: str, name: str):
         self.base_path = base_path
         self.name = name
@@ -191,7 +212,7 @@ class FsStorage:
         os.makedirs(self.root, exist_ok=True)
         with open(os.path.join(self.root, "schema.json"), "w") as fh:
             fh.write(schema_json)
-        self._write_json("manifest.json", {"opstamp": 0, "segments": []})
+        self.write_manifest({"opstamp": 0, "segments": []})
 
     def delete(self) -> None:
         shutil.rmtree(self.root, ignore_errors=True)
@@ -212,20 +233,7 @@ class FsStorage:
             json.dump(obj, fh, indent=1)
         os.replace(tmp, path)  # atomic on POSIX
 
-    def committed_segment_ids(self) -> set[str]:
-        return {s["segment_id"] for s in self.manifest()["segments"]}
-
-    def append_segments(self, metas: list[dict]) -> None:
-        """Atomic manifest commit; rejects duplicate segment ids with the
-        reference's error message (index.rs:314-316)."""
-        m = self.manifest()
-        existing = {s["segment_id"] for s in m["segments"]}
-        for meta in metas:
-            if meta["segment_id"] in existing:
-                raise SegmentExistsError("Segment exists.")
-            existing.add(meta["segment_id"])
-            m["segments"].append(meta)
-            m["opstamp"] += meta["max_doc"]  # reference bumps opstamp by max_doc
+    def write_manifest(self, m: dict) -> None:
         self._write_json("manifest.json", m)
 
     def log_metrics(self, rows: list[dict]) -> None:
@@ -250,6 +258,46 @@ class FsStorage:
 
     def segment_dir(self, epoch: str, table: str, segment_id: str) -> str:
         return os.path.join(self.epoch_dir(epoch, table), f"segment_id={segment_id}")
+
+    def segment_tables(self, epoch: str, segment_id: str) -> dict[str, str]:
+        """A segment meta's ``tables``: {table: partition dir} for each
+        table this epoch wrote rows of ``segment_id`` into.  A table
+        with no rows has no dir, so a fully-deleted merge chunk gets
+        {} — a GHOST that readers skip."""
+        dirs = {t: self.segment_dir(epoch, t, segment_id) for t in TABLES}
+        return {t: d for t, d in dirs.items() if os.path.isdir(d)}
+
+    def has_epoch_table(self, epoch: str, table: str) -> bool:
+        """Can ``read_epoch_table`` read this epoch's ``table``, i.e.
+        did its write leave at least one segment partition?"""
+        d = self.epoch_dir(epoch, table)
+        return os.path.isdir(d) and any(
+            n.startswith("segment_id=") for n in os.listdir(d))
+
+    def drop_unreferenced_epochs(self, manifest: dict) -> list[str]:
+        """Remove every ``data/<epoch>`` dir that neither a segment
+        of ``manifest`` nor its tombstone ledger references; returns the
+        removed epoch names (merge.vacuum)."""
+        data_dir = os.path.join(self.root, "data")
+        if not os.path.isdir(data_dir):
+            return []
+        live: set[str] = set()
+        for s in manifest["segments"]:
+            for path in s.get("tables", {}).values():
+                # <root>/data/<epoch>/<table>/segment_id=<sid>
+                rel = os.path.relpath(path, data_dir)
+                live.add(rel.split(os.sep)[0])
+        # tombstone epochs stay live while the delete ledger references
+        # them (a full compaction clears the ledger, then vacuum reclaims)
+        for t in manifest.get("tombstones", []):
+            live.add(t["epoch"])
+        removed = []
+        for epoch_dir in sorted(os.listdir(data_dir)):
+            if epoch_dir not in live:
+                shutil.rmtree(os.path.join(data_dir, epoch_dir),
+                              ignore_errors=True)
+                removed.append(epoch_dir)
+        return removed
 
     def new_epoch(self) -> str:
         return f"e{int(time.time() * 1000):x}-{os.getpid():x}"
@@ -399,7 +447,7 @@ class FsStorage:
         return sorted(found)[:cap]
 
 
-class MemStorage:
+class MemStorage(_Storage):
     """In-memory index backing for create_ram_index
     (/root/reference/src-rust/index.rs:112-117): segment tables are cached
     DataFrames, the manifest is a plain dict — no filesystem commit."""
@@ -433,17 +481,8 @@ class MemStorage:
     def manifest(self) -> dict:
         return json.loads(json.dumps(self._manifest))
 
-    def committed_segment_ids(self) -> set[str]:
-        return {s["segment_id"] for s in self._manifest["segments"]}
-
-    def append_segments(self, metas: list[dict]) -> None:
-        existing = self.committed_segment_ids()
-        for meta in metas:
-            if meta["segment_id"] in existing:
-                raise SegmentExistsError("Segment exists.")
-            existing.add(meta["segment_id"])
-            self._manifest["segments"].append(meta)
-            self._manifest["opstamp"] += meta["max_doc"]
+    def write_manifest(self, m: dict) -> None:
+        self._manifest = json.loads(json.dumps(m))
 
     def log_metrics(self, rows: list[dict]) -> None:
         self.metrics.extend(rows)
@@ -462,6 +501,18 @@ class MemStorage:
 
     def new_epoch(self) -> str:
         return f"m{len(self._tables)}-{time.monotonic_ns():x}"
+
+    def segment_tables(self, epoch: str, segment_id: str) -> dict[str, str]:
+        return {}  # RAM tables are addressed by (epoch, table), not paths
+
+    def has_epoch_table(self, epoch: str, table: str) -> bool:
+        df = self._tables.get((epoch, table))
+        return df is not None and bool(df.take(1))
+
+    def drop_unreferenced_epochs(self, manifest: dict) -> list[str]:
+        # nothing on disk; cached tables stay, since add_segments shares
+        # them between RAM indexes
+        return []
 
     def read_epoch_table(self, spark: SparkSession, epoch: str, table: str) -> DataFrame:
         return self._tables[(epoch, table)]

@@ -5,11 +5,18 @@
   through ``pool.jobs`` / ``pool.run_all``.
 * The broadcast gate: ``_BCAST_KEY_BYTES_CAP`` is compared in exactly
   one function, ``search._broadcastable``.
+* Manifest commits: only ``sources/tableio.py`` names ``_write_json``
+  or ``_manifest``; everything else commits through the storage's
+  ``write_manifest``.
+* Merges: ``merge.py`` has one ``jobs`` block and one
+  ``termdict_from_postings`` call — one rewrite routine behind
+  compact, compact_to and tiered_compact.
 """
 
 from __future__ import annotations
 
 import ast
+from collections import Counter
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -55,3 +62,20 @@ def test_broadcast_cap_is_compared_in_one_function():
                         and "_BCAST_KEY_BYTES_CAP" in _names(node):
                     where.add(f"{path.stem}.{fn.name}")
     assert where == {"search._broadcastable"}
+
+
+def test_only_the_storage_commits_a_manifest():
+    offenders = [
+        str(path.relative_to(ROOT)) for path, tree in _modules()
+        if path.relative_to(PKG).as_posix() != "sources/tableio.py"
+        and _names(tree) & {"_write_json", "_manifest"}]
+    assert offenders == []
+
+
+def test_merge_has_one_rewrite():
+    tree = ast.parse((PKG / "operators" / "merge.py").read_text())
+    calls = Counter(
+        node.func.id for node in ast.walk(tree)
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Name))
+    assert calls["jobs"] == 1
+    assert calls["termdict_from_postings"] == 1

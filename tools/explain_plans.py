@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import os
 import re
+import shutil
 import sys
 import tempfile
 
@@ -23,7 +24,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def main() -> None:
+def main(base: str) -> None:
+    """Build the index under ``base``, write PLANS.md, exit 1 if any
+    plan check fails."""
     turns = int(sys.argv[1]) if len(sys.argv) > 1 else 30000
     from pyspark.sql import SparkSession
 
@@ -44,7 +47,6 @@ def main() -> None:
         generate_transcripts,
     )
 
-    base = tempfile.mkdtemp(prefix="stspark-plans-")
     cat = IndexCatalog(spark, base)
     idx = cat.create_index("plans", TRANSCRIPT_SCHEMA)
     idx.add_df(spark.createDataFrame(generate_transcripts(turns)),
@@ -273,4 +275,8 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    base = tempfile.mkdtemp(prefix="stspark-plans-")
+    try:
+        main(base)
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
